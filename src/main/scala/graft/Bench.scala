@@ -61,21 +61,41 @@ object Bench {
     dt
   }
 
+  /** Seconds `action` took, or None when it threw: a failed query must
+    * not read as a fast one (a dead session fails every query in
+    * milliseconds). Fatal errors propagate. */
+  private[graft] def timeQuery(action: => Any): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { action; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** Per-query minimum over `passes` (the first pass fixes the order),
+    * and the queries that failed in any pass — those are left out of
+    * the minimum, so they count in no total. */
+  private[graft] def minOverPasses(passes: Seq[Seq[(String, Option[Double])]])
+      : (Seq[(String, Double)], Seq[String]) = {
+    val failed = passes.flatten.collect { case (n, None) => n }.distinct
+    val times = passes.flatten.collect { case (n, Some(t)) => n -> t }
+      .groupMap(_._1)(_._2)
+    (passes.headOption.getOrElse(Nil).map(_._1).filterNot(failed.contains)
+      .map(n => n -> times(n).min), failed)
+  }
+
   /** Time every selected query on one session, in sorted-name order
     * (deterministic ordering makes round-over-round diffs meaningful),
     * releasing the previous query's pinned storage between queries.
-    * With `probed` set (the MAIN suite sweep only), interleaves a
-    * calibration probe every [[probeEvery]] queries. */
+    * A query that throws gets no time. With `probed` set (the MAIN
+    * suite sweep only), interleaves a calibration probe every
+    * [[probeEvery]] queries. */
   private def sweep(spark: SparkSession, sfDir: String,
       names: Seq[String], probed: Boolean = false,
-      probeTag: String = "sweep"): Seq[(String, Double)] =
+      probeTag: String = "sweep"): Seq[(String, Option[Double])] =
     names.zipWithIndex.map { case (name, i) =>
       if (probed && i % probeEvery == 0) probe(spark, s"$probeTag:$i")
       val fn = SparkEntry.queries(name)
       val memoCursor = Memo.cursor()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val dt = timeQuery(fn(spark, sfDir).count())
       val built = Memo.since(memoCursor)
       if (built.nonEmpty && !memoByQuery.contains(name))
         memoByQuery.update(name, built)
@@ -94,6 +114,13 @@ object Bench {
       System.gc()
       name -> dt
     }
+
+  /** The timed entries of a sweep, failures dropped. */
+  private def ok(xs: Seq[(String, Option[Double])]): Seq[(String, Double)] =
+    xs.collect { case (n, Some(t)) => n -> t }
+
+  private def jstrs(xs: Seq[String]): String =
+    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
 
   private def jmap(xs: Seq[(String, Double)], digits: Int = 9): String =
     xs.map { case (k, v) =>
@@ -229,31 +256,28 @@ object Bench {
     // pass 2 pays everything pass 1 paid, memo builds included); the
     // per-query and headline figures are the MIN over passes, and both
     // pass totals + per-pass drift ship in the artifact.
-    val sweep2: Seq[(String, Double)] =
+    val sweep2: Seq[(String, Option[Double])] =
       if (drift1 <= sweepDriftRerun || names.size < 2 ||
           sys.env.contains("SPARK_GRAFT_NO_ISOLATED") ||
           sys.env.contains("SPARK_GRAFT_NO_SWEEP_RERUN")) Seq.empty
       else {
-        graft.ops.Graph.clearCaches(spark); Memo.clearAll(spark)
+        Memo.clearAll(spark)
         System.gc()
         sweep(spark, sfDir, names, probed = true, probeTag = "sweep2")
       }
     val drift2 = if (sweep2.isEmpty) 1.0 else driftOf(Seq("sweep2:"))
     // third attempt at a quiet band, only when BOTH passes were loaded
-    val sweep3: Seq[(String, Double)] =
+    val sweep3: Seq[(String, Option[Double])] =
       if (sweep2.isEmpty || drift1 <= sweepTripleDrift ||
           drift2 <= sweepTripleDrift) Seq.empty
       else {
-        graft.ops.Graph.clearCaches(spark); Memo.clearAll(spark)
+        Memo.clearAll(spark)
         System.gc()
         sweep(spark, sfDir, names, probed = true, probeTag = "sweep3")
       }
-    val laterPasses = Seq(sweep2, sweep3).filter(_.nonEmpty).map(_.toMap)
-    val results = sweep1.map { case (n, t) =>
-      n -> (t +: laterPasses.flatMap(_.get(n))).min
-    }
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val top = results.sortBy(-_._2).take(10).map(_._1)
+    val (swept, sweepFailed) =
+      minOverPasses(Seq(sweep1, sweep2, sweep3).filter(_.nonEmpty))
+    val top = swept.sortBy(-_._2).take(10).map(_._1)
     // R08 REFERENCE BAND (VERDICT r12 #3): any slow-15 member whose
     // in-suite figure exceeds 2x its BENCH_FULL_r08 figure joins the
     // isolation pass even outside the top-10, so the graded artifact
@@ -263,7 +287,7 @@ object Bench {
     // full artifact; absent or unparsable, the band is simply empty.
     val refBand = loadRefBand("BENCH_FULL_r08.json")
     val isoNames = top ++ overBandMembers(
-      results.sortBy(-_._2).take(15), top, refBand)
+      swept.sortBy(-_._2).take(15), top, refBand)
     // SUITE-WARM RERUN of the top-10 on the SAME session, shared caches
     // still hot: a second in-suite sample per heavy query, so a one-off
     // host-noise spike in the sweep (the r7 q_sssp 15.9-vs-10.5 case)
@@ -271,8 +295,8 @@ object Bench {
     // the honest in-suite figure; both samples ship.
     val suiteRerun =
       if (sys.env.contains("SPARK_GRAFT_NO_ISOLATED")) Seq.empty
-      else top.map(n => n -> sweep(spark, sfDir, Seq(n)).head._2)
-    graft.ops.Graph.clearCaches(spark); Memo.clearAll(spark)
+      else top.flatMap(n => sweep(spark, sfDir, Seq(n)))
+    Memo.clearAll(spark)
     spark.stop()
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -284,7 +308,7 @@ object Bench {
     // isolated samples on a noisy host were 1.8-2× the quiet-host
     // truth and could not be adjudicated from the artifact).
     val reps = sys.env.get("SPARK_GRAFT_ISO_REPS").map(_.toInt).getOrElse(3)
-    val isoRuns: Seq[(String, Seq[Double])] =
+    val isoRuns: Seq[(String, Seq[Option[Double]])] =
       if (sys.env.contains("SPARK_GRAFT_NO_ISOLATED")) Seq.empty
       else {
         val spark2 = GraftSession.local(cpus)
@@ -299,10 +323,10 @@ object Bench {
           .selectExpr("sum((id * 2654435761) % 1000003)").collect())
         val r = isoNames.map { name =>
           name -> (1 to reps).flatMap { i =>
-            def oneRep(tag: String): (Double, Double) = {
+            def oneRep(tag: String): (Double, Option[Double]) = {
               val p = probe(spark2, s"iso:$name:$tag")
               val t = sweep(spark2, sfDir, Seq(name)).head._2
-              graft.ops.Graph.clearCaches(spark2); Memo.clearAll(spark2)
+              Memo.clearAll(spark2)
               System.gc()
               (p, t)
             }
@@ -316,7 +340,13 @@ object Bench {
         spark2.stop()
         r
       }
-    val isoMin = isoRuns.map { case (k, vs) => k -> vs.min }
+    val failed = (sweepFailed ++ suiteRerun.collect { case (n, None) => n } ++
+      isoRuns.collect { case (n, vs) if vs.contains(None) => n }).distinct
+    val isoOk = isoRuns.filterNot(r => failed.contains(r._1))
+      .map { case (k, vs) => k -> vs.flatten }
+    val isoMin = isoOk.map { case (k, vs) => k -> vs.min }
+    val results = swept.filterNot(r => failed.contains(r._1))
+    val total = results.map(_._2).sum
     // shared-memo builds, attributed to the MAIN-sweep query whose
     // timing absorbed them: {"q_bfs":{"graph.seedDistances":3.2},...}
     def memoJson(digits: Int): String =
@@ -338,24 +368,25 @@ object Bench {
         probeSeq.count(_._1.endsWith("-r"))}}"""
     // per-sweep summary: pass totals and pass drifts, so a rerun-on-
     // drift capture adjudicates WHICH pass produced the headline
-    val allPasses: Seq[(Seq[(String, Double)], Double)] =
+    val allPasses: Seq[(Seq[(String, Option[Double])], Double)] =
       Seq(sweep1 -> drift1) ++
         (if (sweep2.nonEmpty) Seq(sweep2 -> drift2) else Nil) ++
         (if (sweep3.nonEmpty) Seq(sweep3 -> driftOf(Seq("sweep3:"))) else Nil)
     val sweepsJson = allPasses.map { case (s, dr) =>
-      s"""{"total":${r3(s.map(_._2).sum)},"drift":${r3(dr)}}"""
+      s"""{"total":${r3(ok(s).map(_._2).sum)},"drift":${r3(dr)}}"""
     }.mkString("[", ",", "]")
     // artifact 1: the complete object, to a file
     val full =
       s"""{"metric":"bench_full","total":$total,"n":${results.size},
          |"unit":"sec","sf":"$sfDir","cpus":"$cpus","iso_reps":$reps,
          |"queries":${jmap(results)},
+         |"failed":${jstrs(failed)},
          |"sweeps":$sweepsJson,
-         |"sweep1":${jmap(sweep1)},
-         |"sweep2":${jmap(sweep2)},
-         |"sweep3":${jmap(sweep3)},
-         |"suite_rerun":${jmap(suiteRerun)},
-         |"isolated_runs":${jmapArr(isoRuns, 9)},
+         |"sweep1":${jmap(ok(sweep1))},
+         |"sweep2":${jmap(ok(sweep2))},
+         |"sweep3":${jmap(ok(sweep3))},
+         |"suite_rerun":${jmap(ok(suiteRerun))},
+         |"isolated_runs":${jmapArr(isoOk, 9)},
          |"isolated_min":${jmap(isoMin)},
          |"load":$loadSummary,
          |"load_probes":${jmap(probeSeq)},
@@ -373,12 +404,14 @@ object Bench {
     val totalR = BigDecimal(total)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
     val slow = results.sortBy(-_._2).take(15)
+    // at most ten failed names, so a dead session cannot blow the
+    // budget; the file lists them all and the tiny line counts them
     val head = s"""{"metric":"total_compact","total":$totalR,"n":${
-      results.size},"unit":"sec","sf":"$sfDir","iso_reps":$reps,"sweeps":$sweepsJson,"load":$loadSummary,"slow":${
-      jmap(slow, 3)},"suite_rerun":${jmap(suiteRerun, 3)},"iso_min":${jmap(isoMin, 3)}"""
+      results.size},"failed":${jstrs(failed.take(10))},"unit":"sec","sf":"$sfDir","iso_reps":$reps,"sweeps":$sweepsJson,"load":$loadSummary,"slow":${
+      jmap(slow, 3)},"suite_rerun":${jmap(ok(suiteRerun), 3)},"iso_min":${jmap(isoMin, 3)}"""
     val compact = pickUnderBudget(Seq(
-      s"""$head,"iso_runs":${jmapArr(isoRuns, 3)},"memo":${memoJson(2)}}""",
-      s"""$head,"iso_runs":${jmapArr(isoRuns.map { case (k, v) =>
+      s"""$head,"iso_runs":${jmapArr(isoOk, 3)},"memo":${memoJson(2)}}""",
+      s"""$head,"iso_runs":${jmapArr(isoOk.map { case (k, v) =>
         k -> v.take(3) }, 3)},"memo":${memoJson(2)}}""",
       s"""$head,"memo":${memoJson(2)}}""",
       head + "}"))
@@ -388,7 +421,13 @@ object Bench {
     // (BENCH_r11: parsed null, total recoverable only from the in-repo
     // file). A tail always keeps the final line whole.
     println(s"""{"metric":"total_tiny","total":$totalR,"n":${
-      results.size},"load_drift":${r3(pTimes.lastOption.map(_ /
+      results.size},"failed":${failed.size},"load_drift":${r3(pTimes.lastOption.map(_ /
         pTimes.head).getOrElse(1.0))},"sweeps":${allPasses.size}}""")
+    // failed queries are out of every figure above; the exit status
+    // keeps them from passing as a clean run
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

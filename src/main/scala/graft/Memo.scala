@@ -2,17 +2,19 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared per-(session, dataset) memo machinery + a build-time log.
+/** The engine's one memo store for suite-shared pinned frames, plus a
+  * build-time log.
   *
   * Two jobs in one place:
   *
-  *  1. THE CACHE PATTERN (generalizing `Analytics`' round-9 PairsMemo):
-  *     the cache slot is RESERVED under a per-module lock, but the
-  *     pinned build — a full Spark job — runs OUTSIDE it, synchronized
-  *     only on its own slot's `lazy val` monitor. Same-key callers
-  *     still build once; other sessions/datasets never serialize
-  *     behind a slow build, and a build that throws leaves the slot
-  *     uninitialized so the next caller retries (ADVICE r8).
+  *  1. THE STORE: one slot map keyed by (session, module, dataset,
+  *     name) under one lock. A slot is RESERVED under that lock, but
+  *     the pinned build — a full Spark job — runs OUTSIDE it,
+  *     synchronized only on its own slot. Same-key callers still build
+  *     once; other keys never serialize behind a slow build, and a
+  *     build that throws stores nothing, so the next caller builds
+  *     again (ADVICE r8). Builds may read other memos (the graph chain
+  *     does) as long as the dependencies have no cycle.
   *
   *  2. THE BUILD LOG: every memo build records (name, seconds), so
   *     Bench can attribute shared-memo construction to the query whose
@@ -20,9 +22,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     for the graph family otherwise measure memo-build ORDER, not
   *     query cost (VERDICT r8 "what's wrong" #3).
   *
-  * Caches register themselves on construction; [[clearAll]] drops every
-  * registered cache's entries for a session, so Bench's isolation pass
-  * can't silently miss a newly-memoized module (the r8 trap list).
+  * Every memo in the engine lives here, so [[clearAll]] is the single
+  * reset: a harness that clears it cannot keep a stale module memo.
+  * Each session gets one evict-on-application-end listener, installed
+  * on its first memo, so a stopped session can't leak its entries for
+  * the process lifetime (ADVICE r6).
   */
 object Memo {
 
@@ -31,7 +35,7 @@ object Memo {
   private val buildLog =
     new scala.collection.mutable.ArrayBuffer[(String, Double)]
 
-  private[graft] def record(name: String, sec: Double): Unit =
+  private def record(name: String, sec: Double): Unit =
     buildLog.synchronized { buildLog += ((name, sec)) }
 
   /** Snapshot cursor: number of builds recorded so far. */
@@ -41,59 +45,56 @@ object Memo {
   def since(n: Int): Seq[(String, Double)] =
     buildLog.synchronized(buildLog.drop(n).toList)
 
-  // ------------------------------------------------------------ the cache
+  // ------------------------------------------------------------ the store
 
-  /** One memo slot; `lazy val` gives per-slot build synchronization. */
-  final class Slot private[Memo] (name: String, build: () => DataFrame) {
-    lazy val frame: DataFrame = {
-      val t0 = System.nanoTime()
-      val f = build()
-      record(name, (System.nanoTime() - t0) / 1e9)
-      f
+  /** One memo slot; its monitor serializes same-key builds. */
+  private final class Slot { var frame: DataFrame = null }
+
+  private val slots = scala.collection.mutable.HashMap
+    .empty[(SparkSession, String, String, String), Slot]
+  private val lock = new Object
+  private val hooked = scala.collection.mutable.Set.empty[SparkSession]
+
+  private def drop(s: SparkSession, module: Option[String]): Unit =
+    lock.synchronized {
+      slots.keys.filter(k => (k._1 eq s) && module.forall(_ == k._2))
+        .toList.foreach(slots.remove)
     }
-  }
 
-  private val registry =
-    new scala.collection.mutable.ArrayBuffer[Cache]
+  /** Drop every memo held for `s` (the strong references keeping pinned
+    * blocks alive; the ContextCleaner frees the blocks once a GC
+    * notices — callers that need the storage back promptly follow with
+    * `System.gc()`). Other sessions' entries stay. */
+  def clearAll(s: SparkSession): Unit = drop(s, None)
 
-  /** Drop every registered cache's entries for `s` (the strong
-    * references keeping pinned blocks alive; the ContextCleaner frees
-    * the blocks once a GC notices). */
-  def clearAll(s: SparkSession): Unit =
-    registry.synchronized(registry.toList).foreach(_.clear(s))
-
-  /** A module's memo cache. `module` prefixes build-log names. */
+  /** A module's view of the store. `module` prefixes build-log names. */
   final class Cache(module: String) {
-    registry.synchronized { registry += this }
-
-    private val slots = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, String), Slot]
-    private val lock = new Object
-    private val hooked = scala.collection.mutable.Set.empty[SparkSession]
 
     /** Memoized pinned frame for (`s`, `d`, `name`). The build should
       * end in `.pin()` so every consumer reads materialized blocks. */
     def apply(s: SparkSession, d: String, name: String)
         (build: => DataFrame): DataFrame = {
       val slot = lock.synchronized {
-        if (!hooked.contains(s)) {
-          hooked += s
+        if (hooked.add(s))
           s.sparkContext.addSparkListener(
             new org.apache.spark.scheduler.SparkListener {
               override def onApplicationEnd(
                   e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-                  : Unit = clear(s)
+                  : Unit = { clearAll(s); lock.synchronized(hooked -= s) }
             })
-        }
-        slots.getOrElseUpdate((s, d, name),
-          new Slot(s"$module.$name", () => build))
+        slots.getOrElseUpdate((s, module, d, name), new Slot)
       }
-      slot.frame
+      slot.synchronized {
+        if (slot.frame == null) {
+          val t0 = System.nanoTime()
+          slot.frame = build
+          record(s"$module.$name", (System.nanoTime() - t0) / 1e9)
+        }
+        slot.frame
+      }
     }
 
-    def clear(s: SparkSession): Unit = lock.synchronized {
-      slots.keys.filter(_._1 eq s).foreach(slots.remove)
-      hooked -= s
-    }
+    /** Drop this module's memos for `s`. */
+    def clear(s: SparkSession): Unit = drop(s, Some(module))
   }
 }

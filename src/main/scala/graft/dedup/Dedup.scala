@@ -429,9 +429,9 @@ object Dedup {
     * once so the minhash signature pipeline runs exactly once, and each
     * iteration's labels are checkpointed to keep the plan flat
     * (iterative lineage otherwise grows exponentially). */
-  /** Memo cache for suite-shared dedup frames ([[graft.Memo.Cache]]
-    * contract: slot reserved under the module lock, pinned build runs
-    * outside it, Bench attributes build time to the absorbing query). */
+  /** Memo cache for suite-shared dedup frames ([[graft.Memo]]: slot
+    * reserved under the store lock, pinned build runs outside it, Bench
+    * attributes build time to the absorbing query). */
   private val dedupMemo = new graft.Memo.Cache("dedup")
 
   def dedupClusters(s: SparkSession, d: String): DataFrame =

@@ -22,9 +22,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: `singleObject=true` reproduces the reference's
   * one-object output via `coalesce(1)` — correct compat mode, wrong at
-  * 100 TB (one task writes everything). Default is `false`: a parallel
-  * multi-part write, which is what the same export should be on a real
-  * cluster. The filter is a Catalyst predicate, so against a partitioned
+  * 100 TB (one task writes everything). [[writeCsv]] defaults to
+  * `false`, a parallel multi-part write, which is what the same export
+  * should be on a real cluster; [[exportBatch]] and
+  * `Pipeline.Config.singleObjectExport` default to `true`, the
+  * reference's one object. The filter is a Catalyst predicate, so against a partitioned
   * table it prunes to the single `load_date` partition instead of
   * scanning history.
   */

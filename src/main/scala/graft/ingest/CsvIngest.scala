@@ -20,15 +20,18 @@ import org.apache.spark.sql.types.StructType
   * Scale posture: `spark.read.csv` over a glob is an embarrassingly
   * parallel scan (one task per file split); the explicit schema avoids the
   * full extra inference pass over 100 TB, and `badRecordsMode` lets a
-  * production run switch from abort-the-batch to quarantine-and-continue
-  * without a code change (SURVEY.md §7.4).
+  * production run switch from abort-the-batch to null-and-continue
+  * without a code change (SURVEY.md §7.4). No CSV mode quarantines bad
+  * rows yet: the schema carries no `_corrupt_record` column (only
+  * [[JsonIngest]] adds one).
   */
 object CsvIngest {
 
   sealed trait BadRecordsMode { def sparkMode: String }
   /** Abort on first malformed record — the reference's COPY behavior. */
   case object FailFast extends BadRecordsMode { val sparkMode = "FAILFAST" }
-  /** Null-out malformed fields, keep `_corrupt_record` — 100 TB posture. */
+  /** Null-out malformed fields and keep the row; the bad input is not
+    * kept anywhere. */
   case object Permissive extends BadRecordsMode { val sparkMode = "PERMISSIVE" }
   /** Drop malformed rows entirely. */
   case object DropMalformed extends BadRecordsMode { val sparkMode = "DROPMALFORMED" }

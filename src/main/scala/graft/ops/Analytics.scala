@@ -1406,23 +1406,15 @@ object Analytics {
 
   /** The (flag, price, qty) → count relation the Spearman AND weighted-
     * median families derive from — one map-side-combinable aggregate
-    * over the facts, memoized per (session, dataset) with the
-    * [[Graph]] cache contract (pinned once, read by every consumer,
-    * evicted on session end / [[clearCaches]]). Four queries share it:
+    * over the facts, memoized per (session, dataset) in [[graft.Memo]]
+    * (pinned once, read by every consumer, dropped on session end or
+    * by `Memo.clearAll`). Four queries share it:
     * both Spearman renderings rank over it directly, and both
     * weighted-median renderings re-aggregate it to (flag, price) with
     * weight Σ qty·c — exactly the weight the raw scan produced, in
     * exact arithmetic, so results are unchanged while the fact scan +
     * widest groupBy runs once per suite instead of four times. */
-  /** Memo cache: slot reserved under the module lock, the pinned build
-    * runs outside it, build time flows to the [[graft.Memo]] log so
-    * Bench separates memo cost from query cost (ADVICE r8 + VERDICT r8
-    * "what's wrong" #3 — the pattern now lives in [[graft.Memo]]). */
   private val memoCache = new graft.Memo.Cache("analytics")
-
-  /** Drop this module's pinned memo for `s` (see [[Graph.clearCaches]]
-    * for the release mechanics). */
-  def clearCaches(s: SparkSession): Unit = memoCache.clear(s)
 
   private def spearmanPairs(s: SparkSession, d: String): DataFrame =
     memoCache(s, d, "spearmanPairs") {

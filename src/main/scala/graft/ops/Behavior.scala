@@ -1163,14 +1163,10 @@ object Behavior {
     * prefix sum over the value DOMAIN), so no global-order window ever
     * sees a fact row; the long arithmetic holds to ~3·10⁹ observations
     * (2n² < 2⁶³), past which the doubled sums move to decimal. */
-  /** Memo cache for the shared rank/CDF frames below (reserve-under-
-    * lock + build-outside + Bench-visible build log — [[graft.Memo]]).
-    * Registered caches are cleared by `Memo.clearAll` in Bench's
-    * isolation pass automatically. */
+  /** Memo cache for the shared rank/CDF frames below ([[graft.Memo]]:
+    * build once per (session, dataset), build time in the bench log,
+    * dropped by `Memo.clearAll`). */
   private val memoCache = new graft.Memo.Cache("behavior")
-
-  /** Drop this module's pinned memos for `s`. */
-  def clearCaches(s: SparkSession): Unit = memoCache.clear(s)
 
   /** The shared exact-integer Mann–Whitney wide frame
     * (n, n0, n1, u1_x2 = 2·U₁ with midrank ties, tie_sum) feeding both

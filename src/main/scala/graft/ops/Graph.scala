@@ -32,77 +32,30 @@ import graft.functions.GraftFunctions.{sortedIntersect, sortedIntersectCount}
   */
 object Graph {
 
-  /** Distinct canonical (u < v) co-purchase edges — built ONCE per
-    * (session, dataset) and pinned with `localCheckpoint`, then shared
-    * by every query in the graph suite. Before this cache each of the
-    * eight graph queries re-ran basket expansion + distinct from
-    * lineitem (~8 independent builds of the identical edge list, ~half
-    * the graph suite's bench cost). On a production cluster the same
-    * role is played by a bucketed edge table written once
-    * ([[graft.sources.Bucketing.writeBucketed]] keyed by `u`) so
-    * downstream joins co-locate without reshuffling; in-session the
-    * pinned blocks give the same read-many behavior. Durability
-    * contract as at every [[graft.Pin]] site: in the default
+  /** The module's five pinned memos (adjacency, edges, biEdges,
+    * edgeSupport, seedDistances), each built ONCE per (session,
+    * dataset) and shared by every query in the graph suite. Before
+    * these memos each of the eight graph queries re-ran basket
+    * expansion + distinct from lineitem (~8 independent builds of the
+    * identical edge list, ~half the graph suite's bench cost). On a
+    * production cluster the same role is played by a bucketed edge
+    * table written once ([[graft.sources.Bucketing.writeBucketed]]
+    * keyed by `u`) so downstream joins co-locate without reshuffling;
+    * in-session the pinned blocks give the same read-many behavior.
+    * Durability contract as at every [[graft.Pin]] site: in the default
     * (localCheckpoint) mode an executor loss fails loudly rather than
     * silently recomputing; setting `spark.graft.checkpoint.dir` to a
     * fault-tolerant path swaps every pin in this module (and every
     * iterative loop engine-wide) to reliable `checkpoint()`s that
     * survive executor loss — the mode a 1000-executor 100 TB run
-    * should use. */
-  private val edgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * should use. The memos read each other without cycles (edges,
+    * biEdges → adjacency; seedDistances → biEdges; edgeSupport →
+    * adjacency, edges). */
+  private val memo = new graft.Memo.Cache("graph")
 
-  /** Sessions that already carry the evict-on-end listener. */
-  private val hookedSessions =
-    scala.collection.mutable.Set.empty[SparkSession]
-
-  /** One lock for all cache builds: `TrieMap.getOrElseUpdate` alone can
-    * run the eager localCheckpoint build twice under contention (ADVICE
-    * r6), and a second build would pin a second, orphaned copy of the
-    * blocks. The harness is sequential, so a single coarse lock costs
-    * nothing; a concurrent caller of a DIFFERENT key briefly queues —
-    * acceptable for an in-session memo whose builds are seconds apart. */
-  private val cacheLock = new Object
-
-  private def memo(
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame],
-      name: String, s: SparkSession, d: String)(build: => DataFrame): DataFrame =
-    cacheLock.synchronized {
-      if (!hookedSessions.contains(s)) {
-        hookedSessions += s
-        s.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              clearCaches(s)
-          })
-      }
-      cache.getOrElseUpdate((s, d), {
-        // record build time so Bench can separate shared-memo cost from
-        // the timing of whichever query happened to build it first
-        // (VERDICT r8 "what's wrong" #3)
-        val t0 = System.nanoTime()
-        val f = build
-        graft.Memo.record(s"graph.$name", (System.nanoTime() - t0) / 1e9)
-        f
-      })
-    }
-
-  /** Drop every pinned frame this module holds for `s` (the strong
-    * references keeping the localCheckpoint blocks alive). The blocks
-    * themselves are released by the ContextCleaner once a GC notices the
-    * now-unreferenced RDDs — callers that need the storage back promptly
-    * (the bench harness between query families) follow with
-    * `System.gc()`. Wired to `onApplicationEnd` so a stopped session
-    * can't leak its entries for the process lifetime (ADVICE r6). */
-  def clearCaches(s: SparkSession): Unit = cacheLock.synchronized {
-    edgeCache.keys.filter(_._1 eq s).foreach(edgeCache.remove)
-    biCache.keys.filter(_._1 eq s).foreach(biCache.remove)
-    adjCache.keys.filter(_._1 eq s).foreach(adjCache.remove)
-    distCache.keys.filter(_._1 eq s).foreach(distCache.remove)
-    supportCache.keys.filter(_._1 eq s).foreach(supportCache.remove)
-    hookedSessions -= s
-  }
+  /** Drop this module's memos for `s`; [[graft.Memo.clearAll]] drops
+    * them along with every other module's. */
+  def clearCaches(s: SparkSession): Unit = memo.clear(s)
 
   /** Canonical (u < v) co-purchase edge list — DERIVED from the memoized
     * full adjacency by a narrow explode + filter, so it inherits the
@@ -119,7 +72,7 @@ object Graph {
     * 14.14 → 13.19 s, cold chain 31.4 → ~12 s on the same contended
     * host (PERF.md round-12 rows). */
   private def edges(s: SparkSession, d: String): DataFrame =
-    memo(edgeCache, "edges", s, d)(
+    memo(s, d, "edges")(
       adjFullCached(s, d)
         .select(col("x").as("u"), explode(col("nb")).as("v"))
         .filter(col("v") > col("u"))
@@ -131,11 +84,9 @@ object Graph {
     * serves the whole suite (round-7 bench: the bi construction was
     * ~1–2 s per consumer). Like [[edges]] it is a narrow explode of
     * the full adjacency (round 12), hash-partitioned on `u` for free.
-    * Same eviction/locking contract as [[edgeCache]]. */
-  private val biCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * Memoized in [[memo]] like every graph build. */
   private def biEdges(s: SparkSession, d: String): DataFrame =
-    memo(biCache, "biEdges", s, d)(
+    memo(s, d, "biEdges")(
       adjFullCached(s, d)
         .select(col("x").as("u"), explode(col("nb")).as("v"))
         .pin())
@@ -360,10 +311,8 @@ object Graph {
     * because [[bfsHops]] and [[neighborhoodFunction]] consume the
     * IDENTICAL BFS and each round's localCheckpoint already pins its
     * blocks; sharing saves the whole second traversal. */
-  private val distCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def seedDistances(s: SparkSession, d: String): DataFrame =
-    memo(distCache, "seedDistances", s, d) {
+    memo(s, d, "seedDistances") {
       val bi = biEdges(s, d)
       var dist = seeds(bi)
         .select(col("x"), lit(0).as("hop"))
@@ -1563,8 +1512,8 @@ object Graph {
   }
 
   /** Full-neighborhood adjacency arrays of the co-purchase graph,
-    * memoized with the [[edgeCache]] contract (one groupBy+collect per
-    * session instead of one per consumer). Round 12: this is now the
+    * memoized in [[memo]] (one groupBy+collect per session instead of
+    * one per consumer). Round 12: this is now the
     * ROOT of the whole graph memo chain — built straight from the
     * per-order part sets with ONE groupBy over the bidirectional
     * within-order pair stream (collect_set partials dedup map-side),
@@ -1574,10 +1523,8 @@ object Graph {
     * on the vertex key. At 100 TB the aggregate state is the adjacency
     * itself (Σ deg = 2|E|), the same bound the old chain paid — no new
     * memory cliff, one less shuffle of the edge set. */
-  private val adjCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def adjFullCached(s: SparkSession, d: String): DataFrame =
-    memo(adjCache, "adjacency", s, d)(
+    memo(s, d, "adjacency")(
       Tables.lineitem(s, d)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         // no pre-distinct: collect_set dedups per order, so a distinct
@@ -1611,10 +1558,8 @@ object Graph {
     * adjacency is already pinned for the suite and the per-edge lists
     * on this degree-uniform graph are the same size either way (the
     * PERF.md r7 negative result on orienting k-truss). */
-  private val supportCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def edgeSupport(s: SparkSession, d: String): DataFrame =
-    memo(supportCache, "edgeSupport", s, d) {
+    memo(s, d, "edgeSupport") {
       val adjFull = adjFullCached(s, d)
       edges(s, d)
         .join(adjFull.select(col("x").as("u"), col("nb").as("na")),

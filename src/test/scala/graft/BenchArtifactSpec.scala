@@ -3,11 +3,11 @@ package graft
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
-/** The bench compact line's log-tail budget rule (VERDICT r11 #3: the
-  * graded artifact lost its headline when the compact line outgrew the
-  * driver's 2 kB tail window). No SparkSession needed — this pins the
-  * degradation order contract: longest candidate under budget wins, and
-  * the final fallback is unconditional.
+/** Bench's artifact rules, no SparkSession needed. The compact line's
+  * log-tail budget (VERDICT r11 #3: the artifact lost its headline when
+  * the compact line outgrew a 2 kB log-tail window): longest candidate
+  * under budget wins, and the final fallback is unconditional. Failed
+  * queries get no time and stay out of every per-query minimum.
   */
 class BenchArtifactSpec extends AnyFlatSpec with Matchers {
 
@@ -28,6 +28,35 @@ class BenchArtifactSpec extends AnyFlatSpec with Matchers {
   it should "treat the budget as inclusive" in {
     val exact = "e" * 1900
     Bench.pickUnderBudget(Seq(exact, "small")) shouldBe exact
+  }
+
+  behavior of "Bench.timeQuery"
+
+  it should "time an action that returns" in {
+    val t = Bench.timeQuery(Thread.sleep(20))
+    t shouldBe defined
+    t.get should be >= 0.02
+  }
+
+  it should "give no time to an action that throws" in {
+    // a dead session fails every query fast; that must not read as speed
+    Bench.timeQuery(throw new IllegalStateException("stopped")) shouldBe None
+  }
+
+  behavior of "Bench.minOverPasses"
+
+  it should "take the per-query minimum in first-pass order" in {
+    val p1 = Seq("q_b" -> Some(3.0), "q_a" -> Some(1.0))
+    val p2 = Seq("q_b" -> Some(2.0), "q_a" -> Some(1.5))
+    Bench.minOverPasses(Seq(p1, p2)) shouldBe
+      ((Seq("q_b" -> 2.0, "q_a" -> 1.0), Seq.empty))
+  }
+
+  it should "keep a query that failed in any pass out of the minimum" in {
+    val p1 = Seq("q_a" -> Some(1.0), "q_b" -> None, "q_c" -> Some(4.0))
+    val p2 = Seq("q_a" -> None, "q_b" -> Some(0.5), "q_c" -> Some(5.0))
+    Bench.minOverPasses(Seq(p1, p2)) shouldBe
+      ((Seq("q_c" -> 4.0), Seq("q_b", "q_a")))
   }
 
   behavior of "Bench.overBandMembers"

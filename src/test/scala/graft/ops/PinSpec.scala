@@ -41,10 +41,15 @@ class PinSpec extends GraftTestBase {
   }
 
   it should "produce identical dedup clusters in both modes" in {
+    // the clusters are memoized per (session, dataset): without the
+    // clears both reads return the same pinned frame
+    graft.Memo.clearAll(spark)
     val local = collectSorted(graft.dedup.Dedup.dedupClusters(spark, sf))
+    graft.Memo.clearAll(spark)
     val reliable = underReliable {
       collectSorted(graft.dedup.Dedup.dedupClusters(spark, sf))
     }
+    graft.Memo.clearAll(spark)
     reliable shouldBe local
   }
 
