@@ -1,69 +1,32 @@
 package graft
 
-/** Dev tool: time + explain + lint individual SparkEntry queries.
+/** Dev tool: time + explain individual SparkEntry queries.
   *
-  *   sbt "runMain graft.Explain q_dedup_jaccard [sfDir] [--plan] [--lint]"
-  *   sbt "runMain graft.Explain all --lint"     # whole-catalog plan audit
+  *   sbt "runMain graft.Explain q_dedup_jaccard [sfDir] [--plan] [--fresh]"
   *
-  * `--lint` runs [[graft.plans.PlanLint]] on each query and prints its
-  * findings — the scale-antipattern audit over the full inventory.
-  * Known-accepted findings, 19 queries as of round 5 (each
-  * documented at its definition): q_deciles (the single-reducer
-  * reference form next to q_deciles_dist), q_share_of_total / q_rfm /
-  * q_lorenz / q15_top_supplier / q_benford / q_psi_drift / q_anomaly /
-  * q_mom_growth (global windows over already-aggregated tiny frames:
-  * 25 / 100 / customers / suppliers / 9 / ~12 / ~366 / ~80 rows —
-  * q_lorenz's NTILE runs over the per-customer aggregate like q_rfm,
-  * with the withRunningTotal exact-rank rendering named at its
-  * definition for extreme cardinality), q_pack_shards (bounded-input global prefix
-  * sum; distributed rendering named at its definition),
-  * q_dedup_embed / q_fuzzy_names (intentional bounded all-pairs
-  * verifiers) and q_dedup_embed_blocked (embeds that verifier to grade
-  * its own recall — the blocked candidate path itself is hash-join
-  * only, asserted in DedupSpec), q_knn_brute / q_knn_ivf / q_knn_lsh
-  * (broadcast of the
-  * small-by-construction query set — small by data contract, which
-  * shape analysis cannot see; the lsh/ivf recall checks embed the
-  * brute-force verifier), and low-cardinality-window on
-  * q_topk_per_group / q_window_rank / q_window_frames /
-  * q_window_distinct (window-function batteries over the
-  * `o_orderkey <= 2000` bounded slice — the rule can't see the filter's
-  * bound, and the batteries exist to exercise frame semantics; the
-  * scale-correct pattern for real workloads is the
-  * weightedMedianPrice / spearmanPriceQty pre-aggregation rendering).
-  * Anything OUTSIDE that list is a regression. */
+  * The first argument is a comma-separated list of query names, or `all`.
+  * The whole-catalog plan audit is [[LintSweep]]. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, s"usage: Explain <query|all> [sfDir] [--plan] [--lint]; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-    val name = args(0)
+    require(args.nonEmpty, "usage: Explain <query,...|all> [sfDir] [--plan] [--fresh]; known: " +
+      SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
+    val selected = SparkEntry.select(if (args(0) == "all") Nil else Seq(args(0)))
     val sfDir = args.drop(1).filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.1")
     val showPlan = args.contains("--plan")
-    val lint = args.contains("--lint")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val names = if (name == "all") SparkEntry.queries.keys.toSeq.sorted
-      else name.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
     val fresh = args.contains("--fresh")
-    names.foreach(n => require(SparkEntry.queries.contains(n),
-      s"unknown query '$n'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
-    names.foreach { n =>
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    selected.foreach { case SparkEntry.Query(n, fn, _) =>
       // --fresh: drop every memoized pinned frame first so each query's
       // captured plan is the COLD-plan shape (what Bench times), not a
       // memo-scan left behind by the previous query in this session
       if (fresh) Memo.clearAll(spark)
-      val fn = SparkEntry.queries(n)
-      if (lint) {
-        val findings = graft.plans.PlanLint.lint(fn(spark, sfDir))
-        val verdict = if (findings.isEmpty) "clean" else findings.mkString("; ")
-        println(f"[lint] $n%-18s $verdict")
-      } else {
-        // warm (plan compile etc.) then measure
-        val t0 = System.nanoTime(); val c = fn(spark, sfDir).count()
-        val t1 = System.nanoTime(); fn(spark, sfDir).count()
-        val t2 = System.nanoTime()
-        println(f"[explain] $n%-18s rows=$c%-9d cold=${(t1 - t0) / 1e9}%6.2fs warm=${(t2 - t1) / 1e9}%6.2fs")
-        if (showPlan) fn(spark, sfDir).explain("formatted")
-      }
+      // warm (plan compile etc.) then measure
+      val t0 = System.nanoTime(); val c = fn(spark, sfDir).count()
+      val t1 = System.nanoTime(); fn(spark, sfDir).count()
+      val t2 = System.nanoTime()
+      println(f"[explain] $n%-18s rows=$c%-9d cold=${(t1 - t0) / 1e9}%6.2fs warm=${(t2 - t1) / 1e9}%6.2fs")
+      if (showPlan) fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

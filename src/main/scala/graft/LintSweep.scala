@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Catalog-wide PlanLint sweep: lints EVERY registered query's physical
   * plan at sf0.001 and prints one line per query — the mechanized form
   * of the "read every .explain()" review, runnable before promoting a
@@ -10,24 +12,23 @@ package graft
   * baseline. */
 object LintSweep {
   def main(args: Array[String]): Unit = {
+    val selected = SparkEntry.select(args.toSeq)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val names =
-      if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     var flagged = 0
     var errored = 0
-    names.foreach { n =>
+    selected.foreach { q =>
       val line =
         try {
-          val fs = graft.plans.PlanLint.lint(SparkEntry.queries(n)(spark, sf))
+          val fs = graft.plans.PlanLint.lint(q.run(spark, sf))
           if (fs.isEmpty) "clean" else { flagged += 1; fs.mkString("; ") }
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           // an unlintable query is NOT clean — count it (ADVICE r7)
           errored += 1; s"lint error: ${e.getMessage}"
         }
-      if (line != "clean") println(s"LINT $n: $line")
+      if (line != "clean") println(s"LINT ${q.name}: $line")
     }
-    println(s"LINT-SUMMARY: ${names.size} queries, $flagged flagged" +
+    println(s"LINT-SUMMARY: ${selected.size} queries, $flagged flagged" +
       (if (errored > 0) s", $errored errored" else ""))
     spark.stop()
   }
