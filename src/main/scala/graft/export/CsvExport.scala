@@ -24,11 +24,11 @@ import org.apache.spark.sql.functions._
   * one-object output via `coalesce(1)` — correct compat mode, wrong at
   * 100 TB (one task writes everything). [[writeCsv]] defaults to
   * `false`, a parallel multi-part write, which is what the same export
-  * should be on a real cluster; [[exportBatch]] and
-  * `Pipeline.Config.singleObjectExport` default to `true`, the
-  * reference's one object. The filter is a Catalyst predicate, so against a partitioned
-  * table it prunes to the single `load_date` partition instead of
-  * scanning history.
+  * should be on a real cluster; [[exportBatch]] defaults to `true`, the
+  * reference's one object, and `Pipeline.run` always writes one object.
+  * The filter is a Catalyst predicate, so against a partitioned table it
+  * prunes to the single `load_date` partition instead of scanning
+  * history.
   */
 object CsvExport {
 
@@ -65,8 +65,9 @@ object CsvExport {
 
   /** The reference's export operator: filter table to the run date's
     * batch, write one headered CSV under `outPath`. The `s3_key` templating
-    * (F-5) is the caller interpolating `runDate` into `outPath`. */
-  /** `columns` pins header order — a partitioned parquet read surfaces the
+    * (F-5) is the caller interpolating `runDate` into `outPath`.
+    *
+    * `columns` pins header order — a partitioned parquet read surfaces the
     * partition column last, while the reference's `SELECT *` emits table
     * declaration order (`cursor.description`, op:44); pass
     * `Listings.tableColumnNames` to reproduce it. */

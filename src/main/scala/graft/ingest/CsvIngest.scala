@@ -16,14 +16,17 @@ import org.apache.spark.sql.types.StructType
   *    regression). Spark's default PERMISSIVE nulling would silently
   *    corrupt, so the strict path uses FAILFAST.
   *  - Header row carries column names (dag:119).
+  *  - A quoted field may hold a line break (RFC 4180; pandas and COPY
+  *    both write one for a multi-line `name`), so the reader runs in
+  *    `multiLine` mode.
   *
   * Scale posture: `spark.read.csv` over a glob is an embarrassingly
-  * parallel scan (one task per file split); the explicit schema avoids the
-  * full extra inference pass over 100 TB, and `badRecordsMode` lets a
-  * production run switch from abort-the-batch to null-and-continue
-  * without a code change (SURVEY.md §7.4). No CSV mode quarantines bad
-  * rows yet: the schema carries no `_corrupt_record` column (only
-  * [[JsonIngest]] adds one).
+  * parallel scan (one task per file — a multi-line file is not split);
+  * the explicit schema avoids the full extra inference pass over 100 TB,
+  * and `mode` lets a production run switch from abort-the-batch to
+  * null-and-continue without a code change (SURVEY.md §7.4). No CSV mode
+  * quarantines bad rows yet: the schema carries no `_corrupt_record`
+  * column (only [[JsonIngest]] adds one).
   */
 object CsvIngest {
 
@@ -70,6 +73,9 @@ object CsvIngest {
       // convention pandas/Postgres COPY emit — Spark's default escape is
       // backslash, which would read embedded quotes literally
       .option("escape", "\"")
+      // a quoted line break stays inside its field instead of ending the
+      // record
+      .option("multiLine", "true")
       .option("dateFormat", "yyyy-MM-dd")
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
 

@@ -35,9 +35,7 @@ object Pipeline {
       landingDir: String,
       snapshotDates: Seq[String],
       tablePath: String,
-      exportDir: String,
-      failFast: Boolean = true,
-      singleObjectExport: Boolean = true)
+      exportDir: String)
 
   final case class RunResult(loadedRows: Long, exportedRows: Long, exportPath: String)
 
@@ -47,12 +45,11 @@ object Pipeline {
   /** One batch run for `runDate` — the generalized `{{ ds }}`. Re-running
     * the same `runDate` replaces that batch exactly (README:205-228). */
   def run(spark: SparkSession, conf: Config, runDate: LocalDate): RunResult = {
-    val mode = if (conf.failFast) CsvIngest.FailFast else CsvIngest.Permissive
     val raw = CsvIngest.readSnapshots(
       spark,
       conf.snapshotDates.map(snapshotPath(conf.landingDir, _)),
       Listings.ingestSchema,
-      mode)
+      CsvIngest.FailFast)
 
     BatchLoad.ingest(spark, raw, Listings.dataColumnNames, runDate, conf.tablePath)
     val loaded = spark.read.parquet(conf.tablePath)
@@ -62,7 +59,7 @@ object Pipeline {
 
     val exportPath = s"${conf.exportDir}/postgres_data_$runDate.csv"
     val exported = CsvExport.exportBatch(
-      spark, conf.tablePath, runDate, exportPath, conf.singleObjectExport,
+      spark, conf.tablePath, runDate, exportPath, singleObject = true,
       columns = Listings.tableColumnNames)
     RunResult(loaded, exported, exportPath)
   }

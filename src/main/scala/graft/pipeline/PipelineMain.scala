@@ -16,13 +16,26 @@ import org.apache.spark.sql.SparkSession
   * generalized `{{ ds }}`.
   */
 object PipelineMain {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 4,
-      "usage: PipelineMain <landingDir> <dates,comma,separated> <tablePath> <exportDir> [runDate]")
+  private val usage =
+    "usage: PipelineMain <landingDir> <dates,comma,separated> <tablePath> <exportDir> [runDate]"
+
+  /** The run's config and date from `args`. Each snapshot date is
+    * trimmed and blank entries are dropped, so `2025-01-05, 2025-02-05`
+    * names two snapshots (an untrimmed ` 2025-02-05` would name a file
+    * that never exists and be skipped as absent); an empty date list or
+    * a wrong argument count is rejected. */
+  private[pipeline] def parseArgs(args: Array[String]): (Pipeline.Config, LocalDate) = {
+    require(args.length == 4 || args.length == 5, usage)
     val Array(landingDir, dates, tablePath, exportDir) = args.take(4)
+    val snapshotDates = dates.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    require(snapshotDates.nonEmpty, s"no snapshot dates in '$dates'; $usage")
     val runDate =
       if (args.length > 4) LocalDate.parse(args(4)) else LocalDate.now()
+    (Pipeline.Config(landingDir, snapshotDates, tablePath, exportDir), runDate)
+  }
 
+  def main(args: Array[String]): Unit = {
+    val (conf, runDate) = parseArgs(args)
     val spark = graft.GraftSession.builder(
         sys.env.getOrElse("SPARK_MASTER", "local[*]"),
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
@@ -30,7 +43,6 @@ object PipelineMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val conf = Pipeline.Config(landingDir, dates.split(",").toSeq, tablePath, exportDir)
     val result = Pipeline.run(spark, conf, runDate)
     // the reference's reconciliation signal: loaded and exported counts
     // must agree (postgres_to_s3_operator.py:46,65-70)

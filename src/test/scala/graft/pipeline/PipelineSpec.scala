@@ -93,6 +93,29 @@ class PipelineSpec extends GraftTestBase {
       runOnce(landing, table, export, Seq("2025-01-05"), "2025-03-01")
   }
 
+  it should "keep a quoted line break inside its field (RFC 4180)" in {
+    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    // every field already in the export's rendering, so the exported
+    // record must equal the input record byte for byte
+    val multi = "1,\"two\nlines\",10,Ann,Queens,Center,42.6000000,-73.7000000," +
+      "Entire,120.50,2,14,2024-11-02,1.25,3,200,5,LIC1"
+    val plain = "2,Plain,11,Bob,Queens,North,42.7000000,-73.8000000," +
+      "Private,80.00,1,0,2024-10-01,0.50,1,365,0,ABC"
+    writeSnapshot(landing, "2025-01-05", Seq(multi, plain))
+    val res = runOnce(landing, table, export, Seq("2025-01-05"), "2025-03-01")
+    res.loadedRows shouldBe 2
+    res.exportedRows shouldBe 2
+    spark.read.parquet(table).where(col("id") === 1).head()
+      .getAs[String]("name") shouldBe "two\nlines"
+
+    val parts = Files.list(Paths.get(res.exportPath)).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+    parts should have size 1
+    val text = new String(Files.readAllBytes(parts.head), "UTF-8")
+    text should include("\n" + multi + ",2025-03-01,")
+    text should include("\n" + plain + ",2025-03-01,")
+  }
+
   it should "stamp load_date and processed_at (the fired defaults)" in {
     val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
     writeSnapshot(landing, "2025-01-05", Seq(

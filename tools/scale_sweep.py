@@ -205,9 +205,7 @@ def bench_once(sfdir, queries, tag):
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR=sfdir,
                SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "32"),
-               SPARK_GRAFT_ONLY=",".join(queries),
-               SPARK_GRAFT_NO_ISOLATED="1",
-               SPARK_GRAFT_NO_SWEEP_RERUN="1")
+               SPARK_GRAFT_ONLY=",".join(queries))
     p = subprocess.run(
         ["sbt", "-batch", "runMain graft.Bench"],
         cwd=REPO, env=env, capture_output=True, text=True, timeout=14400)
