@@ -11,34 +11,15 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on (runtime re-planning: skew joins, partition coalescing — the
   *    100 TB posture even though local runs are small),
   *  - shuffle partitions sized to the actual core count, not the 200
-  *    default that would fragment local runs. The round-14 "AQE initial
-  *    partitions = 8× cores" default is REVERTED (r15, VERDICT r14 #1):
-  *    the full-suite A/B it was shipped without (it had only been
-  *    measured on the one scale-sweep wall query, where it was neutral)
-  *    was run this round — 3 sweeps at 256 vs 2 at 32 on one host,
-  *    OPTIMIZATION_r15.md §1 — and the 256-wide start reproducibly
-  *    DOUBLES the distributed-order-statistics class (the
-  *    [[graft.ops.Distributed]] range-partition machinery: its staging
-  *    persist + range-boundary sample + checkpoint each pay per-
-  *    partition overheads 8× over on frames whose census inputs are
-  *    metadata-sized), ~36-50 s across the 414-query suite, with no
-  *    reproducible win anywhere (the graph family A/Bs contradict each
-  *    other across pairs — load, not knob). On a real cluster, where
-  *    wide-start shuffles ARE the right opening when per-executor
-  *    memory binds, set SPARK_GRAFT_INITIAL_PARTITIONS (or
-  *    spark.sql.adaptive.coalescePartitions.initialPartitionNum
-  *    directly) to the executor-memory-fitted width; the env override
-  *    below threads it through unchanged.
+  *    default that would fragment local runs. The AQE initial width is
+  *    left at its default (it follows spark.sql.shuffle.partitions): a
+  *    full-suite A/B of an 8× wider start doubled the distributed
+  *    order-statistics class and won nowhere (OPTIMIZATION_r15.md §1).
+  *    A cluster deploy sets the widths and broadcast budgets with
+  *    `--conf`.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder = {
-    // Cluster-posture override only (r15 default revert — see class doc):
-    // non-numeric strings are ignored rather than crashing the builder
-    // (ADVICE r14); with no override the conf is omitted and the AQE
-    // initial width follows spark.sql.shuffle.partitions.
-    val initialParts: Option[String] =
-      sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-        .filter(v => scala.util.Try(v.toInt).isSuccess)
     val b = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
       .master(master)
@@ -56,19 +37,7 @@ object GraftSession {
       // guessed: q_dedup_jaccard 19s -> see BENCH notes.
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    val bInit = initialParts.foldLeft(b)((bb, v) =>
-      bb.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", v))
-    // Broadcast-budget knobs for small-heap / large-graph captures
-    // (PERF.md round-12 gate): SPARK_GRAFT_AUTOBROADCAST sets the
-    // stats-chosen auto-broadcast threshold (bytes, -1 disables;
-    // AQE's adaptive threshold falls back to the same key), and
-    // SPARK_GRAFT_BROADCAST_ROWCAP sets the graph family's explicit
-    // gated-hint cap (rows, 0 disables the hints).
-    val b2 = sys.env.get("SPARK_GRAFT_AUTOBROADCAST")
-      .foldLeft(bInit)((bb, v) => bb.config("spark.sql.autoBroadcastJoinThreshold", v))
-    val b3 = sys.env.get("SPARK_GRAFT_BROADCAST_ROWCAP")
-      .foldLeft(b2)((bb, v) => bb.config("spark.graft.graph.broadcastRowCap", v))
-    Tables.requiredConf.foldLeft(b3) { case (bb, (k, v)) => bb.config(k, v) }
+    Tables.requiredConf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
   }
 
   /** local[cpus] session for harness entrypoints. Also registers graft's

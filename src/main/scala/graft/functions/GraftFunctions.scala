@@ -19,14 +19,7 @@ import org.apache.spark.sql.graft.shims
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.cosineSimDescriptor)
-    ext.injectFunction(GraftFunctions.wordNgramsDescriptor)
-    ext.injectFunction(GraftFunctions.nfcNormalizeDescriptor)
-    ext.injectFunction(GraftFunctions.bitmapPositionsDescriptor)
-    ext.injectFunction(GraftFunctions.bitmapAndNotDescriptor)
-    ext.injectFunction(GraftFunctions.jaroWinklerDescriptor)
-    ext.injectFunction(GraftFunctions.sortedIntersectCountDescriptor)
-    ext.injectFunction(GraftFunctions.sortedIntersectDescriptor)
+    GraftFunctions.descriptors.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => SelfCosineRule)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
   }
@@ -34,104 +27,82 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftFunctions {
 
-  private[functions] val cosineSimDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("cosine_sim"),
-    new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "cosine_sim expects exactly 2 arguments")
-      CosineSimilarity(children.head, children(1))
-    })
+  /** The native SQL functions, one (name, info, builder) each:
+    * [[GraftExtensions]] injects them and [[register]] registers them. */
+  private[functions] val descriptors
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    (FunctionIdentifier("cosine_sim"),
+      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2, "cosine_sim expects exactly 2 arguments")
+        CosineSimilarity(children.head, children(1))
+      }),
+    (FunctionIdentifier("word_ngrams"),
+      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2, "word_ngrams expects exactly 2 arguments")
+        WordNgrams(children.head, children(1))
+      }),
+    (FunctionIdentifier("nfc_normalize"),
+      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
+      (children: Seq[Expression]) => {
+        require(children.length == 1, "nfc_normalize expects exactly 1 argument")
+        NfcNormalize(children.head)
+      }),
+    (FunctionIdentifier("bitmap_positions"),
+      new ExpressionInfo(classOf[BitmapPositions].getName, "bitmap_positions"),
+      (children: Seq[Expression]) => {
+        require(children.length == 1, "bitmap_positions expects exactly 1 argument")
+        BitmapPositions(children.head)
+      }),
+    (FunctionIdentifier("bitmap_and_not"),
+      new ExpressionInfo(classOf[BitmapAndNot].getName, "bitmap_and_not"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2, "bitmap_and_not expects exactly 2 arguments")
+        BitmapAndNot(children.head, children(1))
+      }),
+    (FunctionIdentifier("jaro_winkler"),
+      new ExpressionInfo(classOf[JaroWinklerSim].getName, "jaro_winkler"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2, "jaro_winkler expects exactly 2 arguments")
+        JaroWinklerSim(children.head, children(1))
+      }),
+    (FunctionIdentifier("sorted_intersect_count"),
+      new ExpressionInfo(classOf[SortedIntersectCount].getName, null,
+        "sorted_intersect_count",
+        "_FUNC_(a, b) - Count of the distinct common elements of two " +
+          "SORTED ARRAY<BIGINT> columns via a two-pointer merge scan. " +
+          s"Contract: ${SortedIntersect.contract}.",
+        "", // arguments
+        "\n    Examples:\n      > SELECT _FUNC_(sort_array(a), sort_array(b)) FROM t;\n       1\n  ",
+        "", "array_funcs", "", "", "built-in"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2,
+          "sorted_intersect_count expects exactly 2 arguments")
+        SortedIntersectCount(children.head, children(1))
+      }),
+    (FunctionIdentifier("sorted_intersect"),
+      new ExpressionInfo(classOf[SortedIntersect].getName, null,
+        "sorted_intersect",
+        "_FUNC_(a, b) - Ascending distinct intersection of two SORTED " +
+          "ARRAY<BIGINT> columns via a two-pointer merge scan. " +
+          s"Contract: ${SortedIntersect.contract}.",
+        "", // arguments
+        "\n    Examples:\n      > SELECT _FUNC_(sort_array(a), sort_array(b)) FROM t;\n       [2]\n  ",
+        "", "array_funcs", "", "", "built-in"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2,
+          "sorted_intersect expects exactly 2 arguments")
+        SortedIntersect(children.head, children(1))
+      }))
 
-  private[functions] val nfcNormalizeDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("nfc_normalize"),
-    new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "nfc_normalize expects exactly 1 argument")
-      NfcNormalize(children.head)
-    })
-
-  private[functions] val bitmapPositionsDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bitmap_positions"),
-    new ExpressionInfo(classOf[BitmapPositions].getName, "bitmap_positions"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "bitmap_positions expects exactly 1 argument")
-      BitmapPositions(children.head)
-    })
-
-  private[functions] val bitmapAndNotDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bitmap_and_not"),
-    new ExpressionInfo(classOf[BitmapAndNot].getName, "bitmap_and_not"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "bitmap_and_not expects exactly 2 arguments")
-      BitmapAndNot(children.head, children(1))
-    })
-
-  private[functions] val wordNgramsDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("word_ngrams"),
-    new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "word_ngrams expects exactly 2 arguments")
-      WordNgrams(children.head, children(1))
-    })
-
-  private[functions] val jaroWinklerDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("jaro_winkler"),
-    new ExpressionInfo(classOf[JaroWinklerSim].getName, "jaro_winkler"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "jaro_winkler expects exactly 2 arguments")
-      JaroWinklerSim(children.head, children(1))
-    })
-
-  private[functions] val sortedIntersectCountDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("sorted_intersect_count"),
-    new ExpressionInfo(classOf[SortedIntersectCount].getName, null,
-      "sorted_intersect_count",
-      "_FUNC_(a, b) - Count of the distinct common elements of two " +
-        "SORTED ARRAY<BIGINT> columns via a two-pointer merge scan. " +
-        s"Contract: ${SortedIntersect.contract}.",
-      "", // arguments
-      "\n    Examples:\n      > SELECT _FUNC_(sort_array(a), sort_array(b)) FROM t;\n       1\n  ",
-      "", "array_funcs", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        "sorted_intersect_count expects exactly 2 arguments")
-      SortedIntersectCount(children.head, children(1))
-    })
-
-  private[functions] val sortedIntersectDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("sorted_intersect"),
-    new ExpressionInfo(classOf[SortedIntersect].getName, null,
-      "sorted_intersect",
-      "_FUNC_(a, b) - Ascending distinct intersection of two SORTED " +
-        "ARRAY<BIGINT> columns via a two-pointer merge scan. " +
-        s"Contract: ${SortedIntersect.contract}.",
-      "", // arguments
-      "\n    Examples:\n      > SELECT _FUNC_(sort_array(a), sort_array(b)) FROM t;\n       [2]\n  ",
-      "", "array_funcs", "", "", "built-in"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        "sorted_intersect expects exactly 2 arguments")
-      SortedIntersect(children.head, children(1))
-    })
-
-  /** Imperatively register the native functions and the `xor_checksum`
-    * UDAF in an existing session (idempotent). UDAFs have no
-    * SparkSessionExtensions injection point, so xor_checksum is
-    * registered here (and by GraftSession) rather than in
+  /** Imperatively register the native functions and the UDAFs
+    * (`xor_checksum`, `space_saving`, `quantile_sketch`) in an existing
+    * session (idempotent). UDAFs have no SparkSessionExtensions
+    * injection point, so they are registered only here, not by
     * GraftExtensions. */
   def register(spark: SparkSession): Unit = {
-    Seq(cosineSimDescriptor, wordNgramsDescriptor, nfcNormalizeDescriptor,
-        bitmapPositionsDescriptor, bitmapAndNotDescriptor,
-        jaroWinklerDescriptor, sortedIntersectCountDescriptor,
-        sortedIntersectDescriptor).foreach {
+    descriptors.foreach {
       case (ident, info, builder) =>
         spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
     }

@@ -39,15 +39,6 @@ object Multimodal {
     StructField("width", IntegerType, nullable = true),
     StructField("height", IntegerType, nullable = true)))
 
-  /** Documents lifted to a media table: text bytes standing in for an
-    * opaque payload (provenance plumbing; see [[imageTable]] for the
-    * codec-backed variant). */
-  def mediaTable(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(
-      col("doc_id").as("media_id"),
-      encode(col("text"), "UTF-8").as("payload"),
-      col("source").as("origin"))
-
   /** Image dimensions derive from the document's UTF-8 byte length
     * (prime moduli so widths/heights vary) and the pixel-pattern seed
     * from the id — the ONLY contract the oracle needs to mirror. */

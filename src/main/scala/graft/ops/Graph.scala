@@ -1448,8 +1448,7 @@ object Graph {
     *    budget.
     *  - cap ≤ 0 disables the hint entirely (the small-heap gate
     *    configuration; pair with spark.sql.autoBroadcastJoinThreshold
-    *    for the stats-chosen auto-broadcasts, threaded from the
-    *    SPARK_GRAFT_AUTOBROADCAST env by [[graft.GraftSession]]).
+    *    for the stats-chosen auto-broadcasts).
     *
     * The UN-hinted O(V) frames in this family (degree censuses, label
     * frames, adjacency reads) are already size-gated by Spark itself:

@@ -1145,34 +1145,6 @@ object Similarity {
         coalesce(col("n_border"), lit(0L)).as("n_border"))
   }
 
-  val dbscanEmbeddingsSql: String =
-    s"""WITH RECURSIVE p AS (
-       |  SELECT a.vec_id AS ua, b.vec_id AS ub
-       |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-       |  WHERE round(CAST(list_cosine_similarity(a.embedding, b.embedding)
-       |    AS DOUBLE), 4) >= $dbscanEps),
-       |core AS (
-       |  SELECT ua AS x FROM p GROUP BY ua
-       |  HAVING count(*) >= ${dbscanMinPts - 1}),
-       |ce AS (
-       |  SELECT ua, ub FROM p
-       |  WHERE ua IN (SELECT x FROM core) AND ub IN (SELECT x FROM core)),
-       |reach(x, lbl) AS (
-       |  SELECT x, x FROM core
-       |  UNION
-       |  SELECT ce.ub, r.lbl FROM reach r JOIN ce ON ce.ua = r.x),
-       |lab AS (SELECT x, min(lbl) AS cluster_id FROM reach GROUP BY x),
-       |bord AS (
-       |  SELECT p.ua AS x, min(l.cluster_id) AS cluster_id
-       |  FROM p JOIN lab l ON l.x = p.ub
-       |  WHERE p.ua NOT IN (SELECT x FROM core)
-       |  GROUP BY p.ua),
-       |cc AS (SELECT cluster_id, count(*) AS n_core FROM lab GROUP BY 1),
-       |bc AS (SELECT cluster_id, count(*) AS n_border FROM bord GROUP BY 1)
-       |SELECT cc.cluster_id, CAST(cc.n_core AS BIGINT) AS n_core,
-       |  CAST(coalesce(bc.n_border, 0) AS BIGINT) AS n_border
-       |FROM cc LEFT JOIN bc ON bc.cluster_id = cc.cluster_id""".stripMargin
-
   /** Deterministic sample anchor for the blocked-path contracts: rows
     * with `vec_id < blockedSampleCap`. CONSTANT-sized at any corpus
     * scale (the strided scale-sweep replication keeps replica 0's id
@@ -1663,104 +1635,6 @@ object Similarity {
        |    AND ${2.0 * bitextK} * f.c3 / (f.denom_f + r.denom_r) > 1.06)
        |    AS accepted
        |FROM fagg f JOIN ragg r ON r.r_query = f.cand_id""".stripMargin
-
-  /** Johnson–Lindenstrauss target dimension for [[randomProjection]]. */
-  val rpK = 16
-  /** Distortion band asserted per pair: |d²_proj/(k·d²_orig) − 1| ≤
-    * 0.75 ≈ 3/√k — measured max deviation on this corpus is 0.62. */
-  val rpBound = 0.75
-
-  /** RANDOM-PROJECTION (JL) DISTANCE-PRESERVATION AUDIT — the sanity
-    * gate a pipeline runs before trusting a cheap projected index:
-    * project the 64-d embeddings to [[rpK]] = 16 dims with a
-    * DETERMINISTIC ±1 matrix (sign = parity of md5("e_i") — both
-    * engines derive the identical matrix, no RNG) and measure, for
-    * the 250 consecutive-id pairs, how far each projected squared
-    * distance d²_proj strays from its expectation k·d²_orig.
-    *
-    * Exactness: coordinates quantize to exact milli-integers (the
-    * corpus-proven round(x·1000) idiom); projected coordinates are
-    * ±1-weighted integer sums; both squared distances are exact
-    * longs; distortion is ONE division. Scale: the projection is a
-    * posexplode + broadcast-grid join + (vec,e)-keyed aggregate —
-    * O(rows·dim) map work, no all-pairs anything; the pair audit
-    * joins on the pair key. At 100 TB the same plan projects any
-    * corpus in one pass (the grid is dim×k, always broadcast-size). */
-  def randomProjection(s: SparkSession, d: String): DataFrame = {
-    val coords = Tables.embeddings(s, d)
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"), col("pos").as("i"),
-        round(col("col").cast("double") * 1000, 0).cast("long").as("q"))
-    val grid = s.range(rpK).select(col("id").as("e"))
-      .crossJoin(s.range(64).select(col("id").as("i")))
-      .select(col("e"), col("i"),
-        ((conv(substring(md5(concat(col("e").cast("string"), lit("_"),
-          col("i").cast("string"))), 1, 8), 16, 10).cast("long") % 2L)
-          * 2L - 1L).as("sign"))
-    val proj = coords.join(broadcast(grid), Seq("i"))
-      .groupBy("vec_id", "e")
-      .agg(sum(col("sign") * col("q")).as("p"))
-    def pairKey(c: Column) = (c - (c % 2L)).as("pair")
-    val d2o = coords.select(pairKey(col("vec_id")), col("vec_id"),
-      col("i"), col("q"))
-      .groupBy("pair", "i")
-      .agg((max(when(col("vec_id") % 2L === 0L, col("q"))) -
-        max(when(col("vec_id") % 2L === 1L, col("q")))).as("dq"))
-      .groupBy("pair")
-      .agg(sum(col("dq") * col("dq")).cast("long").as("d2_orig"))
-    val d2p = proj.select(pairKey(col("vec_id")), col("vec_id"),
-      col("e"), col("p"))
-      .groupBy("pair", "e")
-      .agg((max(when(col("vec_id") % 2L === 0L, col("p"))) -
-        max(when(col("vec_id") % 2L === 1L, col("p")))).as("dp"))
-      .groupBy("pair")
-      .agg(sum(col("dp") * col("dp")).cast("long").as("d2_proj"))
-    val dist = col("d2_proj").cast("double") /
-      (col("d2_orig") * rpK.toLong).cast("double")
-    d2o.join(d2p, Seq("pair"))
-      .filter(col("d2_orig") > 0L)
-      .select(col("pair").as("vec_a"), (col("pair") + 1L).as("vec_b"),
-        col("d2_orig"), col("d2_proj"),
-        round(dist, 6).as("distortion"),
-        (abs(dist - 1.0) <= rpBound).as("within_jl_band"))
-  }
-
-  val randomProjectionSql: String =
-    s"""WITH coords AS (
-       |  SELECT vec_id,
-       |    unnest(range(0, len(embedding))) AS i,
-       |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000, 0)
-       |      AS BIGINT) AS q
-       |  FROM embeddings),
-       |grid AS (
-       |  SELECT e.range AS e, i.range AS i,
-       |    (CAST(('0x' || substr(md5(CAST(e.range AS VARCHAR) || '_'
-       |      || CAST(i.range AS VARCHAR)), 1, 8)) AS BIGINT) % 2)
-       |      * 2 - 1 AS sign
-       |  FROM range(0, $rpK) e CROSS JOIN range(0, 64) i),
-       |proj AS (
-       |  SELECT vec_id, e, CAST(sum(sign * q) AS BIGINT) AS p
-       |  FROM coords JOIN grid USING (i) GROUP BY 1, 2),
-       |d2o AS (
-       |  SELECT pair, CAST(sum(dq * dq) AS BIGINT) AS d2_orig FROM (
-       |    SELECT vec_id - (vec_id % 2) AS pair, i,
-       |      max(CASE WHEN vec_id % 2 = 0 THEN q END)
-       |        - max(CASE WHEN vec_id % 2 = 1 THEN q END) AS dq
-       |    FROM coords GROUP BY 1, 2) GROUP BY 1),
-       |d2p AS (
-       |  SELECT pair, CAST(sum(dp * dp) AS BIGINT) AS d2_proj FROM (
-       |    SELECT vec_id - (vec_id % 2) AS pair, e,
-       |      max(CASE WHEN vec_id % 2 = 0 THEN p END)
-       |        - max(CASE WHEN vec_id % 2 = 1 THEN p END) AS dp
-       |    FROM proj GROUP BY 1, 2) GROUP BY 1)
-       |SELECT pair AS vec_a, pair + 1 AS vec_b, d2_orig, d2_proj,
-       |  round(CAST(d2_proj AS DOUBLE)
-       |    / CAST(d2_orig * $rpK AS DOUBLE), 6) AS distortion,
-       |  (abs(CAST(d2_proj AS DOUBLE)
-       |    / CAST(d2_orig * $rpK AS DOUBLE) - 1.0) <= $rpBound)
-       |    AS within_jl_band
-       |FROM d2o JOIN d2p USING (pair)
-       |WHERE d2_orig > 0""".stripMargin
 
   /** ECOD OUTLIER DETECTION (Li et al., TKDE 2022) over the embedding
     * table — the DENSITY outlier detector next to [[lofOutliers]]'

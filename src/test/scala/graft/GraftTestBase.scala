@@ -8,10 +8,12 @@ import org.scalatest.matchers.should.Matchers
   * ~10s; per-suite sessions would dominate test wall-clock). */
 object GraftTestSession {
   lazy val spark: SparkSession = GraftSession.local("4")
+  /** Small scale factor for fast specs; the same generated tables as the
+    * larger scales. */
+  val sf: String = "/root/testdata/sf0.001"
 }
 
 abstract class GraftTestBase extends AnyFlatSpec with Matchers {
   lazy val spark: SparkSession = GraftTestSession.spark
-  /** Small scale factor for fast specs; still the driver-generated data. */
-  val sf: String = "/root/testdata/sf0.001"
+  val sf: String = GraftTestSession.sf
 }

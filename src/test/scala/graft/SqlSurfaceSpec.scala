@@ -7,10 +7,7 @@ class SqlSurfaceSpec extends GraftTestBase {
   behavior of "GraftSession.builder"
 
   it should "tolerate a non-numeric shuffle-partitions string (ADVICE r14)" in {
-    // Must not throw NumberFormatException at builder time; the
-    // initialPartitionNum derivation is simply omitted when the base
-    // value doesn't parse (Spark accepts the raw string for
-    // spark.sql.shuffle.partitions itself in some configs).
+    // Must not throw NumberFormatException at builder time.
     noException should be thrownBy GraftSession.builder("local[1]", "auto")
     noException should be thrownBy GraftSession.builder("local[1]", "32")
   }

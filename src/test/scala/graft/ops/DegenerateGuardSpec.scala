@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftTestBase
+import graft.Scratch.variantOf
 
 /** DEGENERATE-PATH guard tests: the NULL/absent/zero guards inside the
   * statistics (McNemar with no discordant pairs, Durbin–Watson under
@@ -282,12 +283,6 @@ class DegenerateGuardSpec extends GraftTestBase {
     ok.getAs[Boolean]("srm_detected") shouldBe false
   }
 
-  /** md5-parity variant assignment, matching the engine's hash. */
-  private def variantOf(u: Long): Int = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(u.toString.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-    (java.lang.Long.parseLong(hex.take(15), 16) % 2).toInt
-  }
   private def uidsOfVariant(v: Int, n: Int): Vector[Long] =
     Iterator.from(1).map(_.toLong).filter(variantOf(_) == v).take(n).toVector
 

@@ -1,14 +1,9 @@
 package graft.ops
 
-import java.security.MessageDigest
-
 import graft.GraftTestBase
+import graft.Scratch.md5hex
 
 class ResampleSpec extends GraftTestBase {
-
-  private def md5hex(s: String): String =
-    MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
 
   /** The deterministic Poisson(1) weight the engine must assign. */
   private def weight(orderKey: Long, r: Int): Int = {

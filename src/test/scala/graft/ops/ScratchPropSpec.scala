@@ -8,6 +8,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.GraftTestBase
+import graft.Scratch.{pcont, pdisc, r4, r6, variantOf}
 
 /** Property tests pinning the third-implementation battery's SCRATCH
   * forms against the engine expressions on GENERATED inputs — the
@@ -73,20 +74,6 @@ class ScratchPropSpec extends GraftTestBase {
     }
     prev(b.length)
   }
-
-  private def pcont(sorted: IndexedSeq[Double], p: Double): Double = {
-    val pos = p * (sorted.length - 1)
-    val lo = math.floor(pos).toInt
-    val frac = pos - lo
-    if (frac == 0.0) sorted(lo)
-    else sorted(lo) + frac * (sorted(lo + 1) - sorted(lo))
-  }
-
-  private def pdisc(sorted: IndexedSeq[Double], p: Double): Double =
-    sorted(math.ceil(p * sorted.length).toInt - 1)
-
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   // ---- generators ----
 
@@ -247,17 +234,9 @@ class ScratchPropSpec extends GraftTestBase {
   // mass, empty folds, single-user arms, and the series-length floors.
   // ================================================================
 
-  private def variantOf(u: Long): Int = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(u.toString.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-    (java.lang.Long.parseLong(hex.take(15), 16) % 2).toInt
-  }
   private def uidsOf(v: Int, n: Int, from: Int = 1): Vector[Long] =
     Iterator.from(from).map(_.toLong).filter(variantOf(_) == v)
       .take(n).toVector
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Generated degenerate EVENT corpora: every scenario is a class one
     * of the round-12 sweeps fixed a defect in. Rows follow the events

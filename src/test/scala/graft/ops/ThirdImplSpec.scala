@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.GraftTestBase
+import graft.Scratch.{cents, eventRows, utcDate, variantOf}
 
 import java.time.{DayOfWeek, ZoneOffset}
 import java.time.temporal.TemporalAdjusters
@@ -25,26 +26,6 @@ import java.time.temporal.TemporalAdjusters
   * spec-scale (≤ 6k rows).
   */
 class ThirdImplSpec extends GraftTestBase {
-
-  // ---- shared raw-row helpers (independent of graft.ops code) ----
-
-  /** The engine's variant hash: first 15 hex chars of md5(user_id as
-    * decimal string), parsed base-16, mod 2. */
-  private def variantOf(uid: Long): Int = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(uid.toString.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-    (java.lang.Long.parseLong(hex.take(15), 16) % 2).toInt
-  }
-
-  /** double → DECIMAL(18,2) → ×100 cents, Spark cast semantics
-    * (shortest-decimal read of the double, HALF_UP at scale 2). */
-  private def cents(x: Double): Long =
-    (BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100)
-      .toLongExact
-
-  private def utcDate(t: java.sql.Timestamp) =
-    t.toInstant.atZone(ZoneOffset.UTC).toLocalDate
 
   private def epochSec(t: java.sql.Timestamp): Long =
     Math.floorDiv(t.getTime, 1000L)
@@ -177,14 +158,6 @@ class ThirdImplSpec extends GraftTestBase {
     jbr.getAs[Double]("jb_stat") shouldBe (jb +- 1e-3)
     jbr.getAs[Boolean]("nonnormal_95") shouldBe (jb > 5.991464547107979)
   }
-
-  // ---- events-table cohorts ----
-
-  private lazy val eventRows: Array[(java.sql.Timestamp, Long, String, Double)] =
-    graft.Tables.events(spark, sf)
-      .select("ts", "user_id", "event_type", "value").collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getString(2),
-        if (r.isNullAt(3)) Double.NaN else r.getDouble(3)))
 
   behavior of "mantelHaenszel (q_mantel_haenszel) vs scratch strata"
 

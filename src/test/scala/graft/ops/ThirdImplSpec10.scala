@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.text.TextAnalysis
+import graft.Scratch.{docs, md5hex, r4, toks}
 
 /** THIRD-IMPLEMENTATION battery, batch 10: the text-analysis family.
   *
@@ -14,22 +15,6 @@ import graft.text.TextAnalysis
   * the hashes, double formulas in the engines' association order).
   */
 class ThirdImplSpec10 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r4(x: Double): Double = rd(x, 4)
-
-  private lazy val docs: Vector[(Long, String, String, String)] =
-    graft.Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getString(3))).toVector.sortBy(_._1)
-
-  private def toks(text: String): Array[String] = text.split(" ", -1)
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
 
   behavior of "textStats (q_text_stats) vs scratch token censuses"
 

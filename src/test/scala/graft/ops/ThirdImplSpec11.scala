@@ -3,6 +3,7 @@ package graft.ops
 import graft.GraftTestBase
 import graft.dedup.Dedup
 import graft.text.{Curation, Decontam}
+import graft.Scratch.{docs, kgrams, md5hex, r6, toks}
 
 /** THIRD-IMPLEMENTATION battery, batch 11: the decontamination and
   * mixture-planning family.
@@ -17,29 +18,6 @@ import graft.text.{Curation, Decontam}
   * census per train doc, and both mixture recipes' weight arithmetic.
   */
 class ThirdImplSpec11 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r6(x: Double): Double = rd(x, 6)
-
-  private lazy val docs: Vector[(Long, String, String, String)] =
-    graft.Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getString(3))).toVector.sortBy(_._1)
-
-  private def toks(text: String): Array[String] = text.split(" ", -1)
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-
-  /** Distinct k-grams of a token array; empty below the gram length
-    * (the engines' explicit short-doc guard). */
-  private def kgrams(ws: Array[String], k: Int): Vector[String] =
-    if (ws.length < k) Vector.empty
-    else (0 to ws.length - k).map(i => ws.slice(i, i + k).mkString(" "))
-      .distinct.toVector
 
   behavior of "Decontam.ngramOverlap (q_decontam) vs a scratch gram census"
 

@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.dedup.Dedup
+import graft.Scratch.{bandKeys, docTexts, fingerprints, kgrams, md5hex, rd,
+  signature, toks}
 
 /** THIRD-IMPLEMENTATION battery, batch 12: the document-dedup family.
   *
@@ -16,46 +18,6 @@ import graft.dedup.Dedup
   */
 class ThirdImplSpec12 extends GraftTestBase {
 
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private lazy val docs: Vector[(Long, String)] =
-    graft.Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toVector.sortBy(_._1)
-
-  private def toks(text: String): Array[String] = text.split(" ", -1)
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-
-  /** Distinct in-order k-grams; empty below the gram length. */
-  private def kgrams(ws: Array[String], k: Int): Vector[String] =
-    if (ws.length < k) Vector.empty
-    else (0 to ws.length - k).map(i => ws.slice(i, i + k).mkString(" "))
-      .distinct.toVector
-
-  private def fingerprints(text: String): Vector[Long] =
-    kgrams(toks(text), 3)
-      .map(g => java.lang.Long.parseLong(md5hex(g).take(15), 16) %
-        Dedup.minhashP)
-
-  /** 16-slot min-hash signature (None per slot when no shingles). */
-  private def signature(fps: Vector[Long]): Vector[Option[Long]] =
-    (0 until Dedup.numHashes).toVector.map { j =>
-      if (fps.isEmpty) None
-      else Some(fps.map(x =>
-        (Dedup.minhashA(j) * x + Dedup.minhashB(j)) % Dedup.minhashP).min)
-    }
-
-  /** The 8 two-slot band keys ("|"-joined; concat_ws drops null slots). */
-  private def bandKeys(sig: Vector[Option[Long]]): Vector[String] =
-    (0 until Dedup.numBands).toVector.map { b =>
-      (0 until Dedup.bandWidth)
-        .flatMap(k => sig(b * Dedup.bandWidth + k)).mkString("|")
-    }
-
   private def orderedPairs[A](xs: Vector[A]): Iterator[(A, A)] =
     xs.iterator.zipWithIndex.flatMap { case (a, i) =>
       xs.drop(i + 1).iterator.map(b => (a, b))
@@ -64,7 +26,7 @@ class ThirdImplSpec12 extends GraftTestBase {
   behavior of "Dedup.ngramJaccard (q_dedup_jaccard) vs brute-force set Jaccard"
 
   it should "match every reported pair and its exact Jaccard" in {
-    val sets = docs.map { case (id, t) => (id, kgrams(toks(t), 3).toSet) }
+    val sets = docTexts.map { case (id, t) => (id, kgrams(toks(t), 3).toSet) }
     val expected = orderedPairs(sets).flatMap { case ((a, sa), (b, sb)) =>
       val ni = (sa & sb).size.toLong
       val j = ni.toDouble / (sa.size + sb.size - ni)
@@ -79,7 +41,7 @@ class ThirdImplSpec12 extends GraftTestBase {
   behavior of "Dedup.minhashLsh (q_dedup_minhash) vs scratch band collisions"
 
   it should "match every candidate pair's shared-band count" in {
-    val keys = docs.map { case (id, t) =>
+    val keys = docTexts.map { case (id, t) =>
       (id, bandKeys(signature(fingerprints(t))))
     }
     val expected = orderedPairs(keys).flatMap { case ((a, ka), (b, kb)) =>
@@ -95,7 +57,7 @@ class ThirdImplSpec12 extends GraftTestBase {
   behavior of "Dedup.minhashCalibration (q_minhash_calib) vs scratch estimator rows"
 
   it should "match pair counts and exact-Jaccard aggregates per agreement level" in {
-    val base = docs.map { case (id, t) =>
+    val base = docTexts.map { case (id, t) =>
       val fp = fingerprints(t).distinct
       (id, fp.toSet, signature(fp))
     }
@@ -133,7 +95,7 @@ class ThirdImplSpec12 extends GraftTestBase {
         val bitSum = ws.map(w => if (md5hex(w).charAt(i) >= '8') 1 else -1).sum
         if (bitSum > 0) 1L << i else 0L
       }.sum
-    val hashes = docs.map { case (id, t) => (id, sh16(toks(t))) }
+    val hashes = docTexts.map { case (id, t) => (id, sh16(toks(t))) }
     val partners: Map[Long, Long] = orderedPairs(hashes)
       .collect { case ((a, ha), (b, hb))
         if java.lang.Long.bitCount(ha ^ hb) <= 1 => Seq(a, b) }
@@ -151,7 +113,7 @@ class ThirdImplSpec12 extends GraftTestBase {
   behavior of "Dedup.spanDedup (q_span_dedup) vs a scratch sliding-span census"
 
   it should "match span counts, shared fractions, and flags for every doc" in {
-    val spanSets = docs.flatMap { case (id, t) =>
+    val spanSets = docTexts.flatMap { case (id, t) =>
       val ws = toks(t)
       if (ws.length < Dedup.spanLen) None
       else Some((id, kgrams(ws, Dedup.spanLen).map(md5hex).toSet))

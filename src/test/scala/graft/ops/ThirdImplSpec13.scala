@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.text.Curation
+import graft.Scratch.{docs, md5hex, rd, toks}
 
 /** THIRD-IMPLEMENTATION battery, batch 13: the masking / packing /
   * importance-resampling curation family.
@@ -14,21 +15,6 @@ import graft.text.Curation
   * its own md5 arithmetic, its own running totals.
   */
 class ThirdImplSpec13 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private lazy val docs: Vector[(Long, String, String, String)] =
-    graft.Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getString(3))).toVector.sortBy(_._1)
-
-  private def toks(text: String): Array[String] = text.split(" ", -1)
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
 
   /** First-k-hex-chars md5 hash as a long — the engines' conv() idiom. */
   private def mdMod(s: String, hexLen: Int): Long =

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.text.TextAnalysis
+import graft.Scratch.{docs, md5hex, rd, toks}
 
 /** THIRD-IMPLEMENTATION battery, batch 14: the split / census / bigram-LM
   * family — operators that until now were graded ONLY by the driver's
@@ -12,21 +13,6 @@ import graft.text.TextAnalysis
   * Scala maps and loops — own md5 arithmetic, own count relations.
   */
 class ThirdImplSpec14 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private lazy val docs: Vector[(Long, String, String, String)] =
-    graft.Tables.documents(spark, sf)
-      .select("doc_id", "text", "lang", "source").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getString(3))).toVector.sortBy(_._1)
-
-  private def toks(text: String): Array[String] = text.split(" ", -1)
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
 
   private def bigrams(ws: Array[String]): Vector[(String, String)] =
     (1 until ws.length).map(i => (ws(i - 1), ws(i))).toVector

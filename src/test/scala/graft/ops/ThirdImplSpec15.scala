@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.similarity.Similarity
+import graft.Scratch.rd
 
 /** THIRD-IMPLEMENTATION battery, batch 15: the embedding-space audits
   * and ANN index paths not yet covered by a from-scratch replica —
@@ -15,9 +16,6 @@ import graft.similarity.Similarity
   * hyperplanes, its own in-order cosine folds, its own BigInt moments.
   */
 class ThirdImplSpec15 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   private lazy val embs: Vector[(Long, Array[Float], Int)] =
     graft.Tables.embeddings(spark, sf)

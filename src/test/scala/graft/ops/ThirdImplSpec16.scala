@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.multimodal.Multimodal
+import graft.Scratch.{metas, rd}
 
 /** THIRD-IMPLEMENTATION battery, batch 16: the multimodal image family.
   *
@@ -15,19 +16,6 @@ import graft.multimodal.Multimodal
   * using the closed forms.
   */
 class ThirdImplSpec16 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** (media_id, w, h, seed) from the documented generation contract. */
-  private lazy val metas: Vector[(Long, Int, Int, Int)] =
-    graft.Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map { r =>
-        val len = r.getString(1).getBytes("UTF-8").length
-        (r.getLong(0), len % 61 + 16, len % 37 + 12,
-          ((r.getLong(0) * 31) % 256).toInt)
-      }.toVector.sortBy(_._1)
 
   private def pixel(seed: Int, i: Int): Int = (seed + i) % 256
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.multimodal.Multimodal
+import graft.Scratch.metas
 
 /** THIRD-IMPLEMENTATION battery, batch 17: the video-frame faces.
   * Like batch 16, recomputed from the generation contract alone —
@@ -11,15 +12,6 @@ import graft.multimodal.Multimodal
   * forms.
   */
 class ThirdImplSpec17 extends GraftTestBase {
-
-  private lazy val metas: Vector[(Long, Int, Int, Int)] =
-    graft.Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map { r =>
-        val len = r.getString(1).getBytes("UTF-8").length
-        (r.getLong(0), len % 61 + 16, len % 37 + 12,
-          ((r.getLong(0) * 31) % 256).toInt)
-      }.toVector.sortBy(_._1)
 
   private val sampled =
     (0 until Multimodal.videoFrames by Multimodal.frameStride).toVector

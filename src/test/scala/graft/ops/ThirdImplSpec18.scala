@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{md5hex, rd}
 
 /** THIRD-IMPLEMENTATION battery, batch 18: the sketch family.
   *
@@ -27,14 +28,6 @@ import graft.Tables
   * exercised by a third source.
   */
 class ThirdImplSpec18 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** Own md5-hex — the spec's independent hash path. */
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   private val sfs = Seq(sf, "/root/testdata/sf0.01")
 

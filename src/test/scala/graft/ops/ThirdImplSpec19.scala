@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.rd
 
 /** THIRD-IMPLEMENTATION battery, batch 19: the audio face and the
   * iterative fitters.
@@ -23,9 +24,6 @@ import graft.Tables
   *   row off the raw orders/customer parquet.
   */
 class ThirdImplSpec19 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   // ------------------------------------------------------ audio census
 

@@ -1,8 +1,7 @@
 package graft.ops
 
 import graft.GraftTestBase
-
-import java.time.ZoneOffset
+import graft.Scratch.{cents, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 4 — econometrics and rank
   * statistics (see [[ThirdImplSpec]] for the rationale: the DuckDB
@@ -21,13 +20,6 @@ import java.time.ZoneOffset
   * elimination instead of the engines' cell-census adjugate.
   */
 class ThirdImplSpec2 extends GraftTestBase {
-
-  private def cents(x: Double): Long =
-    (BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100)
-      .toLongExact
-
-  private def utcDate(t: java.sql.Timestamp) =
-    t.toInstant.atZone(ZoneOffset.UTC).toLocalDate
 
   /** Daily order revenue in cents, day-sorted (values only — ADF and
     * friends lag over ORDER position, not calendar gaps). */

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{cents, md5hex, rd, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 20: survival curves, the Markov
   * chain, meta-analysis, capture–recapture and the Gumbel fit.
@@ -18,23 +19,9 @@ import graft.Tables
   */
 class ThirdImplSpec20 extends GraftTestBase {
 
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def utcDate(ts: java.sql.Timestamp): java.time.LocalDate =
-    ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
-
   private def weekStart(ts: java.sql.Timestamp): java.time.LocalDate =
     utcDate(ts).`with`(java.time.temporal.TemporalAdjusters
       .previousOrSame(java.time.DayOfWeek.MONDAY))
-
-  private def cents(price: Double): Long =
-    (BigDecimal.valueOf(price)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLong
 
   /** (dur_h, d, c) rows of the conversion survival experiment, sorted —
     * shared by the KM and Nelson–Aalen tests. */

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{cents, rd}
 
 /** THIRD-IMPLEMENTATION battery, batch 21: multiple testing, conformal
   * prediction, the cluster jackknife, Mahalanobis distance and ECOD.
@@ -15,13 +16,6 @@ import graft.Tables
   * hand rather than via the engines' shared cofactor rendering.
   */
 class ThirdImplSpec21 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def cents(price: Double): Long =
-    (BigDecimal.valueOf(price)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLong
 
   // -------------------------------------------------------- BH screen
 

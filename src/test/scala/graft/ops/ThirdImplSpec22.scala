@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{cents, md5hex, rd}
 
 /** THIRD-IMPLEMENTATION battery, batch 22: distribution distances and
   * contingency statistics.
@@ -18,17 +19,6 @@ import graft.Tables
   * promise it.
   */
 class ThirdImplSpec22 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def cents(v: Double): Long =
-    (BigDecimal.valueOf(v)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLong
 
   /** Sorted (value-cents, countA, countB) census of the purchase A/B
     * experiment — shared by the Wasserstein and Cramér tests. */

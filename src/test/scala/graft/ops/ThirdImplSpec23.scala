@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{cents, rd, toks}
 
 /** THIRD-IMPLEMENTATION battery, batch 23: vocabulary-richness
   * estimators, concentration indices and burstiness.
@@ -17,16 +18,6 @@ import graft.Tables
   * different route to the same integer.
   */
 class ThirdImplSpec23 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def cents(v: Double): Long =
-    (BigDecimal.valueOf(v)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLong
-
-  /** Spark split(col, " ") keeps every empty string (limit −1). */
-  private def toks(text: String): Array[String] = text.split(" ", -1)
 
   // ------------------------------------------------- vocab richness
 

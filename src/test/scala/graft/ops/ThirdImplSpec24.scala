@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{rd, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 24: time-series indicators.
   *
@@ -15,12 +16,6 @@ import graft.Tables
   * shared window algebra cannot hide.
   */
 class ThirdImplSpec24 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def utcDate(ts: java.sql.Timestamp): java.time.LocalDate =
-    ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
 
   /** (event_type, day, revenue-decimal) daily census off raw events. */
   private lazy val dailyRev: Seq[(String, java.time.LocalDate, BigDecimal)] =

@@ -3,6 +3,7 @@ package graft.ops
 import graft.GraftTestBase
 import graft.Tables
 import graft.text.TextAnalysis
+import graft.Scratch.rd
 
 /** THIRD-IMPLEMENTATION battery, batch 25: evaluation metrics.
   *
@@ -20,9 +21,6 @@ import graft.text.TextAnalysis
   * metric under test, so each formula is isolated.
   */
 class ThirdImplSpec25 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** (doc, 4dp-ce-domain value, keep) — inputs pinned by batch 10. */
   private lazy val scoredDocs: Seq[(Long, Long, Boolean)] = {

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{cents, rd, variantOf}
 
 /** THIRD-IMPLEMENTATION battery, batch 26: the experimentation family.
   *
@@ -15,20 +16,6 @@ import graft.Tables
   * lookup, the variance machinery from BigInt power sums.
   */
 class ThirdImplSpec26 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def variantOf(uid: Long): Int =
-    (java.lang.Long.parseLong(md5hex(uid.toString).take(15), 16) % 2).toInt
-
-  private def cents(v: Double): Long =
-    (BigDecimal.valueOf(v)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLong
 
   private lazy val rawEvents: Array[(Long, String, java.sql.Timestamp, Long)] =
     Tables.events(spark, sf)

@@ -3,6 +3,7 @@ package graft.ops
 import graft.GraftTestBase
 import graft.Tables
 import graft.text.TextAnalysis
+import graft.Scratch.{rd, toks}
 
 /** THIRD-IMPLEMENTATION battery, batch 27: corpus-comparison text
   * statistics.
@@ -19,11 +20,6 @@ import graft.text.TextAnalysis
   * contract rather than bit-exact.
   */
 class ThirdImplSpec27 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def toks(text: String): Array[String] = text.split(" ", -1)
 
   private lazy val docs: Seq[(Long, String, String, String, Long)] =
     Tables.documents(spark, sf)

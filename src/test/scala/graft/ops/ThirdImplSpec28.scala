@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{cents, events, md5hex, rd}
 
 /** THIRD-IMPLEMENTATION battery, batch 28: A/B machinery and the
   * doubly-robust fit.
@@ -17,27 +18,8 @@ import graft.Tables
   */
 class ThirdImplSpec28 extends GraftTestBase {
 
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   private def h15(s: String): Long =
     java.lang.Long.parseLong(md5hex(s).take(15), 16)
-
-  private def cents(v: Double): Long =
-    (BigDecimal.valueOf(v)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLong
-
-  /** Per-user purchase revenue as exact 2-dp decimals (q_ab_test) and
-    * cents (q_perm_test / q_aa_calib), over ALL users for the former
-    * and purchase-only users for the latter two. */
-  private lazy val events: Array[(Long, String, Double)] =
-    Tables.events(spark, sf)
-      .select("user_id", "event_type", "value").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
 
   // ------------------------------------------------------------ ab test
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{cents, md5hex, rd, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 29: forecasting recursions and
   * drift audits.
@@ -17,20 +18,6 @@ import graft.Tables
   * order both engines pin (day-ascending).
   */
 class ThirdImplSpec29 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def utcDate(ts: java.sql.Timestamp): java.time.LocalDate =
-    ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
-
-  private def cents(v: Double): Long =
-    (BigDecimal.valueOf(v)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLong
 
   /** Daily purchase revenue cents, day-ascending (q_holt / q_periodogram
     * base). */

@@ -2,8 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.text.TextAnalysis
-
-import java.time.ZoneOffset
+import graft.Scratch.{cents, dailyByType, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 5 — the rater-agreement family
   * and the seasonality/complexity readouts (rationale in
@@ -19,13 +18,6 @@ import java.time.ZoneOffset
   * effect; permutation entropy; and STL seasonal/trend strength.
   */
 class ThirdImplSpec3 extends GraftTestBase {
-
-  private def cents(x: Double): Long =
-    (BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100)
-      .toLongExact
-
-  private def utcDate(t: java.sql.Timestamp) =
-    t.toInstant.atZone(ZoneOffset.UTC).toLocalDate
 
   // ---- the three binary quality screens, as (doc_id -> 0/1) maps ----
 
@@ -94,21 +86,6 @@ class ThirdImplSpec3 extends GraftTestBase {
       (alpha(Vector(i2, i3)) +- 1e-5)
     r.getAs[Double]("alpha_drop_lm") shouldBe (alpha(Vector(i1, i3)) +- 1e-5)
     r.getAs[Double]("alpha_drop_len") shouldBe (alpha(Vector(i1, i2)) +- 1e-5)
-  }
-
-  // ---- raw daily (event_type, day) -> cents census ----
-
-  private lazy val dailyByType: Map[String, Vector[(java.time.LocalDate, Long)]] = {
-    val rows = graft.Tables.events(spark, sf)
-      .select("ts", "event_type", "value").collect()
-      .map { r =>
-        require(!r.isNullAt(2), "batch-5 scratch assumes non-null values")
-        (utcDate(r.getTimestamp(0)), r.getString(1), cents(r.getDouble(2)))
-      }
-    rows.groupBy(_._2).map { case (et, es) =>
-      et -> es.groupBy(_._1).toVector.sortBy(_._1.toEpochDay)
-        .map { case (d, g) => (d, g.map(_._3).sum) }
-    }
   }
 
   behavior of "kendallW (q_kendall_w) vs textbook midranks"

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{cents, md5hex, rd, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 30: attribution games, trend
   * tests, index numbers, and the deterministic-noise/sampling family.
@@ -15,20 +16,6 @@ import graft.Tables
   * raw parquet rows with scratch hashing and explicit loops.
   */
 class ThirdImplSpec30 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def utcDate(ts: java.sql.Timestamp): java.time.LocalDate =
-    ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
-
-  private def cents(v: Double): Long =
-    (BigDecimal.valueOf(v)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLong
 
   // ------------------------------------------------------------ shapley
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{cents, rd, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 31: market-basket rules, Zipf,
   * robust statistics and greedy set cover.
@@ -14,16 +15,6 @@ import graft.Tables
   * coverage maximization replayed as literal set algebra.
   */
 class ThirdImplSpec31 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def utcDate(ts: java.sql.Timestamp): java.time.LocalDate =
-    ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
-
-  private def cents(v: Double): Long =
-    (BigDecimal.valueOf(v)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLong
 
   // -------------------------------------------------------- assoc rules
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{ev, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 32: event-sequence analytics.
   *
@@ -15,16 +16,6 @@ import graft.Tables
   * plain loops.
   */
 class ThirdImplSpec32 extends GraftTestBase {
-
-  private def utcDate(ts: java.sql.Timestamp): java.time.LocalDate =
-    ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
-
-  /** (user, type, ts-millis, event_id), the raw timeline. */
-  private lazy val ev: Array[(Long, String, Long, Long)] =
-    Tables.events(spark, sf)
-      .select("user_id", "event_type", "ts", "event_id").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2).getTime,
-        r.getLong(3)))
 
   // -------------------------------------------------------------- funnel
 

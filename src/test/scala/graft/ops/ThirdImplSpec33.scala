@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{cents, evValues, rd, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 33: engagement rollups.
   *
@@ -15,35 +16,18 @@ import graft.Tables
   */
 class ThirdImplSpec33 extends GraftTestBase {
 
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def utcDate(ms: Long): java.time.LocalDate =
-    java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC)
-      .toLocalDate
-
   private def weekStart(d: java.time.LocalDate): java.time.LocalDate =
     d.`with`(java.time.temporal.TemporalAdjusters
       .previousOrSame(java.time.DayOfWeek.MONDAY))
-
-  private def cents(v: Double): Long =
-    (BigDecimal.valueOf(v)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLong
-
-  private lazy val ev: Array[(Long, String, Long, Double)] =
-    Tables.events(spark, sf)
-      .select("user_id", "event_type", "ts", "value").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2).getTime,
-        r.getDouble(3)))
 
   // ------------------------------------------------------------- cohort
 
   behavior of "Behavior.cohortRetention (q_cohort) vs a scratch grid"
 
   it should "match every (cohort day, offset) cell" in {
-    val firstSeen = ev.groupBy(_._1).view
+    val firstSeen = evValues.groupBy(_._1).view
       .mapValues(rs => utcDate(rs.map(_._3).min)).toMap
-    val activity = ev.map(r => (r._1, utcDate(r._3))).distinct
+    val activity = evValues.map(r => (r._1, utcDate(r._3))).distinct
     val expected = activity.groupBy { case (uid, day) =>
       (firstSeen(uid), day.toEpochDay - firstSeen(uid).toEpochDay)
     }.map { case ((cd, off), rs) =>
@@ -59,11 +43,11 @@ class ThirdImplSpec33 extends GraftTestBase {
   behavior of "Behavior.cohortLtv (q_cohort_ltv) vs scratch curves"
 
   it should "match every cohort-week age's cumulative LTV" in {
-    val cohort = ev.groupBy(_._1).view
+    val cohort = evValues.groupBy(_._1).view
       .mapValues(rs => weekStart(utcDate(rs.map(_._3).min))).toMap
     val sizes = cohort.values.groupBy(identity).view
       .mapValues(_.size.toLong).toMap
-    val rev = ev.filter(_._2 == "purchase")
+    val rev = evValues.filter(_._2 == "purchase")
       .map { r =>
         val cw = cohort(r._1)
         val age = ((weekStart(utcDate(r._3)).toEpochDay - cw.toEpochDay)
@@ -91,7 +75,7 @@ class ThirdImplSpec33 extends GraftTestBase {
   behavior of "Behavior.growthAccounting (q_growth_acct) vs scratch weeks"
 
   it should "match the weekly new/retained/resurrected/churned split" in {
-    val um = ev.map(r => (r._1, weekStart(utcDate(r._3)))).distinct
+    val um = evValues.map(r => (r._1, weekStart(utcDate(r._3)))).distinct
     val act = um.groupBy(_._2).view.mapValues(_.length.toLong).toMap
     val firstWk = um.groupBy(_._1).view.mapValues(_.map(_._2)
       .minBy(_.toEpochDay)).toMap
@@ -144,7 +128,7 @@ class ThirdImplSpec33 extends GraftTestBase {
   behavior of "Behavior.rollingActiveUsers (q_wau) vs a scratch day grid"
 
   it should "match DAU and trailing-7 WAU on the observed-day spine" in {
-    val grid = ev.map(r => (r._1, utcDate(r._3))).distinct
+    val grid = evValues.map(r => (r._1, utcDate(r._3))).distinct
     val dau = grid.groupBy(_._2).view.mapValues(_.length.toLong).toMap
     val expected = dau.keys.toSeq.map { day =>
       val wau = grid.filter { case (_, d) =>
@@ -164,7 +148,7 @@ class ThirdImplSpec33 extends GraftTestBase {
   behavior of "TimeSeries.decayedPopularity (q_decayed) vs a scratch fold"
 
   it should "match the half-life-weighted revenue per type" in {
-    val daily = ev
+    val daily = evValues
       .map(r => ((r._2, utcDate(r._3)), BigDecimal.valueOf(r._4)
         .setScale(2, BigDecimal.RoundingMode.HALF_UP)))
       .groupBy(_._1).toSeq
@@ -189,7 +173,7 @@ class ThirdImplSpec33 extends GraftTestBase {
   behavior of "Behavior.timeToConvert (q_time_to_convert) vs scratch gaps"
 
   it should "match the converter latency percentiles" in {
-    val gaps = ev.groupBy(_._1).values.toSeq.flatMap { rs =>
+    val gaps = evValues.groupBy(_._1).values.toSeq.flatMap { rs =>
       val v = rs.filter(_._2 == "view").map(_._3).sorted.headOption
       val p = rs.filter(_._2 == "purchase").map(_._3).sorted.headOption
       for (vv <- v; pp <- p if vv < pp) yield pp / 1000 - vv / 1000
@@ -241,7 +225,7 @@ class ThirdImplSpec33 extends GraftTestBase {
   behavior of "Behavior.activityBitmap (q_bitmap_activity) vs scratch masks"
 
   it should "match every user's packed mask and popcounts" in {
-    val days = ev.map(r => (r._1, utcDate(r._3)))
+    val days = evValues.map(r => (r._1, utcDate(r._3)))
     val d0 = days.map(_._2).minBy(_.toEpochDay)
     val expected = days.groupBy(_._1).toSeq.map { case (uid, rs) =>
       var mask = 0L

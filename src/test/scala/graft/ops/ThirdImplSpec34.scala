@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{cosFull, rd, toks, vecs}
 
 /** THIRD-IMPLEMENTATION battery, batch 34: corpus contracts over text
   * and embeddings.
@@ -14,11 +15,6 @@ import graft.Tables
   * documents, re-implemented as a plain loop over the float arrays).
   */
 class ThirdImplSpec34 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def toks(text: String): Array[String] = text.split(" ", -1)
 
   // ---------------------------------------------------------- boilerplate
 
@@ -96,25 +92,6 @@ class ThirdImplSpec34 extends GraftTestBase {
     got shouldBe expected
   }
 
-  /** The embedding corpus with scratch norms. */
-  private lazy val vecs: Array[(Long, Int, Array[Float])] =
-    Tables.embeddings(spark, sf)
-      .select("vec_id", "label", "embedding").collect()
-      .map(r => (r.getLong(0), r.getAs[Number](1).intValue,
-        r.getSeq[Float](2).toArray))
-
-  /** The engines' documented ascending fold: dot/(sqrt(nx)·sqrt(ny)). */
-  private def cos(a: Array[Float], b: Array[Float]): Double = {
-    var dot = 0.0; var nx = 0.0; var ny = 0.0
-    var i = 0
-    while (i < a.length) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; nx += x * x; ny += y * y
-      i += 1
-    }
-    dot / (math.sqrt(nx) * math.sqrt(ny))
-  }
-
   // ------------------------------------------------------------ semdedup
 
   behavior of "Dedup.semDedup (q_semdedup) vs a scratch pair census"
@@ -126,7 +103,7 @@ class ThirdImplSpec34 extends GraftTestBase {
       val pairs = for {
         i <- sorted.indices; j <- i + 1 until sorted.length
         // hoisted-norm identity: dot/(na*nb) with na/nb own sqrt folds
-        c = rd(cos(sorted(i)._3, sorted(j)._3), 4)
+        c = rd(cosFull(sorted(i)._3, sorted(j)._3), 4)
         if c >= 0.3
       } yield (sorted(i)._1, sorted(j)._1)
       val nDropped = pairs.map(_._2).distinct.length.toLong
@@ -146,7 +123,7 @@ class ThirdImplSpec34 extends GraftTestBase {
   it should "replay the mutual-top1 margin pipeline exactly" in {
     import graft.similarity.Similarity.{bitextK, bitextQueryCap}
     def milli(a: Array[Float], b: Array[Float]): Long =
-      BigDecimal.valueOf(cos(a, b) * 1000)
+      BigDecimal.valueOf(cosFull(a, b) * 1000)
         .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
     val byId = vecs.map(v => v._1 -> v._3).toMap
     val qs = vecs.filter(v => v._1 % 2 == 0 && v._1 < bitextQueryCap)

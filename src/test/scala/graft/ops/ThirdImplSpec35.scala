@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.Tables
+import graft.Scratch.{d2, md5hex, rd, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 35: profiling and quality audits.
   *
@@ -14,19 +15,6 @@ import graft.Tables
   * BigDecimal power sums.
   */
 class ThirdImplSpec35 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def utcDate(ts: java.sql.Timestamp): java.time.LocalDate =
-    ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
-
-  private def d2(v: Double): BigDecimal =
-    BigDecimal.valueOf(v).setScale(2, BigDecimal.RoundingMode.HALF_UP)
 
   // -------------------------------------------------------------- zscore
 

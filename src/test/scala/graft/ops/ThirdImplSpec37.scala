@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.GraftTestBase
+import graft.Scratch.{cents, eventValues, r4, r6, variantOf}
 
 import java.time.ZoneOffset
 
@@ -19,28 +20,6 @@ import java.time.ZoneOffset
   * sharing NO code with graft.ops, then pin the engine row to it.
   */
 class ThirdImplSpec37 extends GraftTestBase {
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def cents(x: Double): Long =
-    (BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100)
-      .toLongExact
-
-  private def variantOf(uid: Long): Int = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(uid.toString.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-    (java.lang.Long.parseLong(hex.take(15), 16) % 2).toInt
-  }
-
-  private lazy val eventRows
-      : Array[(java.sql.Timestamp, Long, String, Double)] =
-    graft.Tables.events(spark, sf)
-      .select("ts", "user_id", "event_type", "value").collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getString(2),
-        r.getDouble(3)))
 
   private lazy val lineitemQty: Array[(String, Long)] =
     graft.Tables.lineitem(spark, sf)
@@ -80,7 +59,7 @@ class ThirdImplSpec37 extends GraftTestBase {
   behavior of "anovaValueByType (q_anova) vs a per-observation F"
 
   it should "match k, SSB, SSW, F and eta-squared" in {
-    val obs = eventRows.toSeq.map(e => (e._3, cents(e._4)))
+    val obs = eventValues.toSeq.map(e => (e._3, cents(e._4)))
     val (k, nT, ssb, ssw, f, eta) = anovaTerms(obs)
     val r = Analytics.anovaValueByType(spark, sf).head()
     r.getAs[Long]("k") shouldBe k
@@ -150,7 +129,7 @@ class ThirdImplSpec37 extends GraftTestBase {
   it should "match the discordant cells and both chi2 forms" in {
     val splitMs = java.time.LocalDate.of(2024, 1, 16)
       .atStartOfDay(ZoneOffset.UTC).toInstant.toEpochMilli
-    val byUser = eventRows.groupBy(_._2)
+    val byUser = eventValues.groupBy(_._2)
     var bCount = 0L; var cCount = 0L
     byUser.values.foreach { es =>
       val hv = es.filter(e => e._3 == "purchase" && cents(e._4) >= 20000L)
@@ -177,7 +156,7 @@ class ThirdImplSpec37 extends GraftTestBase {
   behavior of "oddsRatioConversion (q_odds_ratio) vs scratch cells"
 
   it should "match the Haldane-corrected OR and its Wald CI" in {
-    val byUser = eventRows.groupBy(_._2)
+    val byUser = eventValues.groupBy(_._2)
     var a = 0L; var b = 0L; var c = 0L; var d = 0L
     byUser.foreach { case (uid, es) =>
       val conv = es.exists(_._3 == "purchase")
@@ -205,7 +184,7 @@ class ThirdImplSpec37 extends GraftTestBase {
   behavior of "sampleRatioCheck (q_srm) vs a scratch parity census"
 
   it should "match the split counts, chi2 and the scaled-integer gate" in {
-    val users = eventRows.map(_._2).distinct
+    val users = eventValues.map(_._2).distinct
     val nA = users.count(variantOf(_) == 0).toLong
     val nB = users.length - nA
     val diff = nA - nB

@@ -1,8 +1,7 @@
 package graft.ops
 
 import graft.GraftTestBase
-
-import java.time.ZoneOffset
+import graft.Scratch.{cents, orderRows, r6, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 38: the daily-census
   * time-series family — moments, OLS trend, Theil–Sen, Durbin–Watson,
@@ -19,24 +18,8 @@ import java.time.ZoneOffset
   */
 class ThirdImplSpec38 extends GraftTestBase {
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   private def r8(x: Double): Double =
     BigDecimal(x).setScale(8, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def cents(x: Double): Long =
-    (BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100)
-      .toLongExact
-
-  private def utcDate(t: java.sql.Timestamp): java.time.LocalDate =
-    t.toInstant.atZone(ZoneOffset.UTC).toLocalDate
-
-  private lazy val orderRows
-      : Array[(String, java.time.LocalDate, Long)] =
-    graft.Tables.orders(spark, sf)
-      .select("o_orderpriority", "o_orderdate", "o_totalprice").collect()
-      .map(r => (r.getString(0), utcDate(r.getTimestamp(1)),
-        cents(r.getDouble(2))))
 
   private lazy val eventRows
       : Array[(java.time.LocalDate, String, Double)] =

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.text.TextAnalysis
+import graft.Scratch.{r4, r6, toks}
 
 /** THIRD-IMPLEMENTATION battery, batch 39: the text/LM corpus family
   * members still unpinned after batches 9–10 and 34 — token entropy,
@@ -16,15 +17,6 @@ import graft.text.TextAnalysis
   * the engine rows to the scratch values.
   */
 class ThirdImplSpec39 extends GraftTestBase {
-
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** Spark's split(text, " ") keeps trailing empty strings (limit -1),
-    * as does DuckDB's string_split — mirror that exactly. */
-  private def toks(text: String): Array[String] = text.split(" ", -1)
 
   private lazy val docRows: Array[(Long, String, String, String)] =
     graft.Tables.documents(spark, sf)

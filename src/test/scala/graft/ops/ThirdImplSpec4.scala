@@ -1,8 +1,7 @@
 package graft.ops
 
 import graft.GraftTestBase
-
-import java.time.ZoneOffset
+import graft.Scratch.{cents, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 6 — the autocorrelation chain
   * and the remaining forecast/complexity recursions (rationale in
@@ -18,13 +17,6 @@ import java.time.ZoneOffset
   * Croston/SBA intermittent-demand recursion.
   */
 class ThirdImplSpec4 extends GraftTestBase {
-
-  private def cents(x: Double): Long =
-    (BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100)
-      .toLongExact
-
-  private def utcDate(t: java.sql.Timestamp) =
-    t.toInstant.atZone(ZoneOffset.UTC).toLocalDate
 
   /** day -> revenue cents over all orders. */
   private lazy val dayMap: Map[java.time.LocalDate, Long] = {

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.similarity.Similarity
+import graft.Scratch.{r4, r6}
 
 /** THIRD-IMPLEMENTATION battery, batch 40: the vector/clustering/
   * sketch contract family — per-vector norms, the scale-diagnostics
@@ -18,11 +19,6 @@ import graft.similarity.Similarity
   * contract (the per-vector array folds).
   */
 class ThirdImplSpec40 extends GraftTestBase {
-
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   private lazy val vecs: Array[(Long, Int, Array[Float])] =
     graft.Tables.embeddings(spark, sf)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.GraftTestBase
+import graft.Scratch.{cents, pcont, pdisc, r4}
 
 /** THIRD-IMPLEMENTATION battery, batch 41: the order-statistic and
   * resampling family — interpolated and discrete percentiles,
@@ -11,28 +12,6 @@ import graft.GraftTestBase
   * per-row md5 walks — maximum structural diversity.
   */
 class ThirdImplSpec41 extends GraftTestBase {
-
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def cents(x: Double): Long =
-    (BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100)
-      .toLongExact
-
-  /** Spark `percentile` / DuckDB quantile_cont: linear interpolation at
-    * position p·(n−1) over the sorted values. */
-  private def pcont(sorted: IndexedSeq[Double], p: Double): Double = {
-    val pos = p * (sorted.length - 1)
-    val lo = math.floor(pos).toInt
-    val frac = pos - lo
-    if (frac == 0.0) sorted(lo)
-    else sorted(lo) + frac * (sorted(lo + 1) - sorted(lo))
-  }
-
-  /** Spark percentile_disc / DuckDB quantile_disc: smallest value whose
-    * cumulative share reaches p. */
-  private def pdisc(sorted: IndexedSeq[Double], p: Double): Double =
-    sorted(math.ceil(p * sorted.length).toInt - 1)
 
   private lazy val ordersByStatus: Map[String, Vector[Double]] =
     graft.Tables.orders(spark, sf)

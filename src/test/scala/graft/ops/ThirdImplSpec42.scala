@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.similarity.Similarity
+import graft.Scratch.{cents, docRows, md5hex, r4, toks}
 
 /** THIRD-IMPLEMENTATION battery, batch 42: curation-pipeline and
   * matching operators — coarsened exact matching, DBSCAN over the
@@ -16,19 +17,6 @@ import graft.similarity.Similarity
   * per-doc set algebra where it runs broadcast joins.
   */
 class ThirdImplSpec42 extends GraftTestBase {
-
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def cents(x: Double): Long =
-    (BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100)
-      .toLongExact
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-
-  private def toks(text: String): Array[String] = text.split(" ", -1)
 
   behavior of "cemAtt (q_cem) vs scratch strata pruning"
 
@@ -160,11 +148,6 @@ class ThirdImplSpec42 extends GraftTestBase {
       r.getAs[Boolean]("bound_ok") shouldBe (maxDist <= 0.5)
     }
   }
-
-  private lazy val docRows: Array[(Long, String)] =
-    graft.Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
 
   behavior of "sourceCap (q_source_cap) vs a scratch per-source rank"
 

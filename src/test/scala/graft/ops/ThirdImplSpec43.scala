@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.dedup.Dedup
+import graft.Scratch.{candPairs, clusterOf, docTexts, kgrams, md5hex, rd,
+  toks}
 
 /** THIRD-IMPLEMENTATION battery, batch 43: the minhash CLUSTER chain —
   * the remaining composition layers above batch 12's pair machinery.
@@ -14,73 +16,6 @@ import graft.dedup.Dedup
   * a brute-force exact-Jaccard ground truth).
   */
 class ThirdImplSpec43 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-
-  private def toks(text: String): Array[String] = text.split(" ", -1)
-
-  private lazy val docs: Vector[(Long, String)] =
-    graft.Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toVector.sortBy(_._1)
-
-  private def kgrams(ws: Array[String], k: Int): Vector[String] =
-    if (ws.length < k) Vector.empty
-    else (0 to ws.length - k).map(i => ws.slice(i, i + k).mkString(" "))
-      .distinct.toVector
-
-  private def fingerprints(text: String): Vector[Long] =
-    kgrams(toks(text), 3)
-      .map(g => java.lang.Long.parseLong(md5hex(g).take(15), 16) %
-        Dedup.minhashP)
-
-  private def signature(fps: Vector[Long]): Vector[Option[Long]] =
-    (0 until Dedup.numHashes).toVector.map { j =>
-      if (fps.isEmpty) None
-      else Some(fps.map(x =>
-        (Dedup.minhashA(j) * x + Dedup.minhashB(j)) % Dedup.minhashP).min)
-    }
-
-  private def bandKeys(sig: Vector[Option[Long]]): Vector[String] =
-    (0 until Dedup.numBands).toVector.map { b =>
-      (0 until Dedup.bandWidth)
-        .flatMap(k => sig(b * Dedup.bandWidth + k)).mkString("|")
-    }
-
-  /** Band-collision candidate pairs (doc_a < doc_b), the LSH index's
-    * output — recomputed brute-force over all C(n,2) pairs. */
-  private lazy val candPairs: Vector[(Long, Long)] = {
-    val keys = docs.map { case (id, t) =>
-      (id, bandKeys(signature(fingerprints(t))))
-    }
-    (for {
-      i <- keys.indices.iterator; j <- (i + 1 until keys.length).iterator
-      if (0 until Dedup.numBands)
-        .exists(b => keys(i)._2(b) == keys(j)._2(b))
-    } yield (keys(i)._1, keys(j)._1)).toVector
-  }
-
-  /** Union-find cluster labels (min doc_id per component) over the
-    * candidate-pair graph — the scratch rendering of the engines'
-    * min-label propagation loop. */
-  private lazy val clusterOf: Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    candPairs.foreach { case (a, b) => parent(find(a)) = find(b) }
-    val members = candPairs.flatMap(p => Seq(p._1, p._2)).distinct
-    val byRoot = members.groupBy(find)
-    byRoot.valuesIterator.flatMap { ms =>
-      val label = ms.min; ms.map(_ -> label)
-    }.toMap
-  }
 
   behavior of "dedupClusters (q_dedup_clusters) vs union-find"
 
@@ -101,10 +36,10 @@ class ThirdImplSpec43 extends GraftTestBase {
     * 0.5. */
   private lazy val lmXent: Map[Long, Double] = {
     val corpus = scala.collection.mutable.Map.empty[String, Long]
-    docs.foreach(d => toks(d._2).foreach(t =>
+    docTexts.foreach(d => toks(d._2).foreach(t =>
       corpus(t) = corpus.getOrElse(t, 0L) + 1))
     val nTotal = corpus.values.sum
-    docs.map { case (id, t) =>
+    docTexts.map { case (id, t) =>
       val tf = toks(t).groupBy(identity).map { case (w, xs) =>
         w -> xs.length.toLong }
       val n = tf.values.sum
@@ -138,7 +73,7 @@ class ThirdImplSpec43 extends GraftTestBase {
 
   it should "match per-doc block survivorship and token accounting" in {
     // every doc's 10-token blocks with md5 keys and global first-owner
-    val blocks = docs.flatMap { case (id, t) =>
+    val blocks = docTexts.flatMap { case (id, t) =>
       val w = toks(t)
       (0 to (w.length - 1) / 10).map { b =>
         val blk = w.slice(b * 10, math.min(w.length, b * 10 + 10))
@@ -169,7 +104,7 @@ class ThirdImplSpec43 extends GraftTestBase {
   behavior of "dedupEval (q_dedup_eval) vs brute-force ground truth"
 
   it should "match candidate/truth/hit counts and the PRF row" in {
-    val sets = docs.map { case (id, t) => (id, kgrams(toks(t), 3).toSet) }
+    val sets = docTexts.map { case (id, t) => (id, kgrams(toks(t), 3).toSet) }
     val truth = (for {
       i <- sets.indices.iterator; j <- (i + 1 until sets.length).iterator
       ni = (sets(i)._2 & sets(j)._2).size

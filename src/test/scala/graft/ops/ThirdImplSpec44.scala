@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.GraftTestBase
+import graft.Scratch.{md5hex, r6, toks}
 
 import java.time.ZoneOffset
 
@@ -13,15 +14,6 @@ import java.time.ZoneOffset
   * regexp_replace).
   */
 class ThirdImplSpec44 extends GraftTestBase {
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-
-  private def toks(text: String): Array[String] = text.split(" ", -1)
 
   private lazy val customers: Array[(Long, String, Int, Double, String)] =
     graft.Tables.customer(spark, sf)

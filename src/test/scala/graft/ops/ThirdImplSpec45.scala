@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.text.TextAnalysis
+import graft.Scratch.toks
 
 import java.time.ZoneOffset
 
@@ -19,8 +20,6 @@ import java.time.ZoneOffset
   * last-click state for both as-of variants.
   */
 class ThirdImplSpec45 extends GraftTestBase {
-
-  private def toks(text: String): Array[String] = text.split(" ", -1)
 
   /** Textbook two-row Levenshtein — independent of the engines'
     * builtins. */

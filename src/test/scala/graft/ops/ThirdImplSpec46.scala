@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.GraftTestBase
+import graft.Scratch.{pcont, r4}
 
 /** THIRD-IMPLEMENTATION battery, batch 46: the sketch-contract rows —
   * the exact halves of q_sketches / q_quantile_sketch /
@@ -11,18 +12,6 @@ import graft.GraftTestBase
   * sketches are audited against the right ground truth).
   */
 class ThirdImplSpec46 extends GraftTestBase {
-
-  private def r4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** Interpolated percentile at p·(n−1), the engines' shared form. */
-  private def pcont(sorted: IndexedSeq[Double], p: Double): Double = {
-    val pos = p * (sorted.length - 1)
-    val lo = math.floor(pos).toInt
-    val frac = pos - lo
-    if (frac == 0.0) sorted(lo)
-    else sorted(lo) + frac * (sorted(lo + 1) - sorted(lo))
-  }
 
   behavior of "orderSketches (q_sketches) vs scratch exact columns"
 

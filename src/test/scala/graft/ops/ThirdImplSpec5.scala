@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.GraftTestBase
+import graft.Scratch.{cents, eventCents, utcDate, variantOf}
 
 import java.time.ZoneOffset
 
@@ -21,31 +22,10 @@ import java.time.ZoneOffset
   */
 class ThirdImplSpec5 extends GraftTestBase {
 
-  private def cents(x: Double): Long =
-    (BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100)
-      .toLongExact
-
-  private def utcDate(t: java.sql.Timestamp) =
-    t.toInstant.atZone(ZoneOffset.UTC).toLocalDate
-
-  /** The engine's variant hash (md5 first 15 hex % 2). */
-  private def variantOf(uid: Long): Int = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(uid.toString.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-    (java.lang.Long.parseLong(hex.take(15), 16) % 2).toInt
-  }
-
-  private lazy val eventRows: Array[(java.sql.Timestamp, Long, String, Long)] =
-    graft.Tables.events(spark, sf)
-      .select("ts", "user_id", "event_type", "value").collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getString(2),
-        cents(r.getDouble(3))))
-
   /** Purchase cents split by hash variant: (variant-0 sorted,
     * variant-1 sorted). */
   private lazy val (arm0, arm1): (Vector[Long], Vector[Long]) = {
-    val p = eventRows.filter(_._3 == "purchase")
+    val p = eventCents.filter(_._3 == "purchase")
       .map(e => (variantOf(e._2), e._4))
     (p.filter(_._1 == 0).map(_._2).sorted.toVector,
       p.filter(_._1 == 1).map(_._2).sorted.toVector)
@@ -117,7 +97,7 @@ class ThirdImplSpec5 extends GraftTestBase {
   it should "match 2W+, the tie term and z" in {
     val split = java.time.LocalDateTime.parse("2024-01-16T00:00:00")
       .toInstant(ZoneOffset.UTC).getEpochSecond
-    val diffs = eventRows.filter(_._3 == "purchase").groupBy(_._2).values
+    val diffs = eventCents.filter(_._3 == "purchase").groupBy(_._2).values
       .flatMap { es =>
         val (h1s, h2s) = es.partition(e =>
           Math.floorDiv(e._1.getTime, 1000L) < split)
@@ -211,7 +191,7 @@ class ThirdImplSpec5 extends GraftTestBase {
   // ---- k-sample family over ALL event types ----
 
   private lazy val allByType: Map[String, Vector[Long]] =
-    eventRows.groupBy(_._3).view.mapValues(_.map(_._4).toVector).toMap
+    eventCents.groupBy(_._3).view.mapValues(_.map(_._4).toVector).toMap
 
   behavior of "kruskalWallis (q_kruskal) vs global textbook midranks"
 
@@ -351,7 +331,7 @@ class ThirdImplSpec5 extends GraftTestBase {
   behavior of "friedmanTest (q_friedman) vs per-day midranks"
 
   it should "match the chi-square" in {
-    val daily = eventRows.groupBy(e => (e._3, utcDate(e._1))).view
+    val daily = eventCents.groupBy(e => (e._3, utcDate(e._1))).view
       .mapValues(_.map(_._4).sum).toMap
     val k = daily.keySet.map(_._1).size
     val byDay = daily.groupBy(_._1._2)
@@ -403,7 +383,7 @@ class ThirdImplSpec5 extends GraftTestBase {
   behavior of "moodMedianTest (q_mood_median) vs a scratch 2xk table"
 
   it should "match the global median and chi2" in {
-    val all = eventRows.map(_._4).sorted
+    val all = eventCents.map(_._4).sorted
     val med = all((all.length + 1) / 2 - 1)
     val n = all.length.toDouble
     val groups = allByType

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.GraftTestBase
+import graft.Scratch.{adj, canonEdges, r6, seedSet, vertices}
 
 /** THIRD-IMPLEMENTATION battery, batch 6: the GRAPH census family
   * (VERDICT r11 task 6).
@@ -26,39 +27,7 @@ import graft.GraftTestBase
   */
 class ThirdImplSpec6 extends GraftTestBase {
 
-  /** Spark's `round(x, 6)` on a double: decimal HALF_UP at scale 6 —
-    * mirrored exactly so double comparisons below can be bit-exact. */
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** Canonical co-purchase edge set (u < v), from raw lineitem rows. */
-  private lazy val canonEdges: Set[(Long, Long)] = {
-    val rows = graft.Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_partkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    rows.groupBy(_._1).iterator.flatMap { case (_, basket) =>
-      val ps = basket.map(_._2).distinct.sorted
-      for (i <- ps.indices.iterator; j <- (i + 1 until ps.length).iterator)
-        yield (ps(i), ps(j))
-    }.toSet
-  }
-
-  /** Undirected adjacency sets. */
-  private lazy val adj: Map[Long, Set[Long]] = {
-    val m = scala.collection.mutable.Map.empty[Long, Set[Long]]
-      .withDefaultValue(Set.empty)
-    canonEdges.foreach { case (u, v) =>
-      m(u) = m(u) + v; m(v) = m(v) + u
-    }
-    m.toMap.withDefaultValue(Set.empty)
-  }
-
-  private lazy val vertices: Vector[Long] = adj.keys.toVector.sorted
   private def deg(x: Long): Long = adj(x).size.toLong
-
-  /** The engine's capped seed set: the 50 smallest vertices ≡ 0 mod 500. */
-  private lazy val seedSet: Vector[Long] =
-    vertices.filter(_ % 500 == 0).sorted.take(Graph.seedCap)
 
   /** Per-edge triangle support sup(u,v) = |N(u) ∩ N(v)| over an
     * arbitrary canonical edge set. */

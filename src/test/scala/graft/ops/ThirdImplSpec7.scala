@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.GraftTestBase
+import graft.Scratch.{adj, md5hex, r6, seedSet, vertices}
 
 import java.time.ZoneOffset
 
@@ -21,35 +22,7 @@ import java.time.ZoneOffset
   */
 class ThirdImplSpec7 extends GraftTestBase {
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-
-  private lazy val canonEdges: Set[(Long, Long)] = {
-    val rows = graft.Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_partkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    rows.groupBy(_._1).iterator.flatMap { case (_, basket) =>
-      val ps = basket.map(_._2).distinct.sorted
-      for (i <- ps.indices.iterator; j <- (i + 1 until ps.length).iterator)
-        yield (ps(i), ps(j))
-    }.toSet
-  }
-
-  private lazy val adj: Map[Long, Set[Long]] = {
-    val m = scala.collection.mutable.Map.empty[Long, Set[Long]]
-      .withDefaultValue(Set.empty)
-    canonEdges.foreach { case (u, v) => m(u) = m(u) + v; m(v) = m(v) + u }
-    m.toMap.withDefaultValue(Set.empty)
-  }
-
-  private lazy val vertices: Vector[Long] = adj.keys.toVector.sorted
   private def deg(x: Long): Long = adj(x).size.toLong
-  private lazy val seedSet: Vector[Long] =
-    vertices.filter(_ % 500 == 0).sorted.take(Graph.seedCap)
 
   behavior of "degreeDistribution (q_degree_dist) vs scratch histogram + Hill"
 

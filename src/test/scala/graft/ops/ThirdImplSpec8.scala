@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.similarity.Similarity
+import graft.Scratch.{r4, r6, rd}
 
 /** THIRD-IMPLEMENTATION battery, batch 8: the vector / similarity
   * family.
@@ -18,11 +19,6 @@ import graft.similarity.Similarity
   * keeps everything at spec scale (500 vectors × 64 dims).
   */
 class ThirdImplSpec8 extends GraftTestBase {
-
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r4(x: Double): Double = rd(x, 4)
-  private def r6(x: Double): Double = rd(x, 6)
 
   /** (vec_id, label, embedding) from the raw parquet, vec_id order. */
   private lazy val vecs: Vector[(Long, Int, Array[Float])] =

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.GraftTestBase
 import graft.text.{Retrieval, Winnowing}
+import graft.Scratch.{docToks, r4, r6}
 
 /** THIRD-IMPLEMENTATION battery, batch 9: the retrieval family.
   *
@@ -17,21 +18,11 @@ import graft.text.{Retrieval, Winnowing}
   */
 class ThirdImplSpec9 extends GraftTestBase {
 
-  private def rd(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-  private def r4(x: Double): Double = rd(x, 4)
-  private def r6(x: Double): Double = rd(x, 6)
-
-  private lazy val docs: Vector[(Long, Array[String])] =
-    graft.Tables.documents(spark, sf).select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1).split(" ", -1)))
-      .toVector.sortBy(_._1)
-
   private val terms = Retrieval.queryTerms
 
   /** (doc_id, dl, tf per query term, rel-label occurrences of "data"). */
   private lazy val stats: Vector[(Long, Long, Array[Long], Long)] =
-    docs.map { case (id, toks) =>
+    docToks.map { case (id, toks) =>
       (id, toks.length.toLong,
         terms.map(t => toks.count(_ == t).toLong).toArray,
         math.min(toks.count(_ == "data").toLong, Retrieval.relCap.toLong))
@@ -175,7 +166,7 @@ class ThirdImplSpec9 extends GraftTestBase {
       java.lang.Long.parseLong(hex.take(10), 16)
     }
     case class DocFp(id: Long, nGrams: Long, selected: Set[Long])
-    val perDoc = docs.flatMap { case (id, toks) =>
+    val perDoc = docToks.flatMap { case (id, toks) =>
       val grams = (0 to toks.length - Winnowing.k).map { p =>
         val h = md5h40(toks.slice(p, p + Winnowing.k).mkString(" "))
         h * posCap + (posCap - 1 - p)

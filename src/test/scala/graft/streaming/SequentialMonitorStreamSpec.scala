@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftTestBase
 import graft.streaming.EventStreams.Event
+import graft.Scratch.cents
 
 /** Streaming faces of the sequential experimentation monitors (VERDICT
   * r8 task 7): per-micro-batch-prefix equality against a Scala
@@ -13,10 +14,6 @@ import graft.streaming.EventStreams.Event
   * established StreamingSpec contract (micro-batch boundaries must not
   * change any adjudication). */
 class SequentialMonitorStreamSpec extends GraftTestBase {
-
-  private def cents(v: Double): Long =
-    BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-      .*(BigDecimal(100)).toLongExact
 
   /** Scala reference of [[graft.ops.Behavior.sprtMonitor]]'s path. */
   private def sprtRef(events: Seq[Event])
