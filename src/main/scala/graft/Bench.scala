@@ -1,11 +1,13 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Whole-catalog suite timer: one warm-up, then one sweep over the
   * selected queries in sorted-name order on one session. Emits:
   *  1. `bench_full.json` in the working dir — `total`, `n`, `sf`,
-  *     `cpus`, every per-query time, the `failed` names and the
-  *     `memo_builds` attributed to each query.
+  *     `cpus`, every per-query time, the `failed` names, the
+  *     `memo_builds` attributed to each query and each query's
+  *     `compiles`.
   *  2. One `{"metric":"total",...}` line on stdout with the total, the
   *     per-query times and the `failed` names.
   *
@@ -18,12 +20,18 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** One query's outcome: its seconds (None when it threw) and the
+  /** One query's outcome: its seconds (None when it threw), the
     * shared-memo builds its timing absorbed, from the [[Memo]] build log
     * — a graph query that "slowed down" because it paid the edgeSupport
-    * build first is adjudicable from the artifact alone. */
+    * build first is adjudicable from the artifact alone — and the
+    * generated classes the JVM compiled while it ran (the rest came from
+    * the JVM-wide class cache; a query that recompiles a plan shape an
+    * earlier query compiled shows the cache thrashing). */
   private[graft] final case class Timed(name: String, secs: Option[Double],
-      memo: Seq[(String, Double)] = Nil)
+      memo: Seq[(String, Double)] = Nil, compiles: Long = 0)
+
+  /** Generated classes compiled so far in this JVM (cache misses only). */
+  private def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Seconds `action` took, or None when it threw: a failed query must
     * not read as a fast one (a dead session fails every query in
@@ -40,8 +48,10 @@ object Bench {
     names.map { name =>
       val fn = SparkEntry.queries(name)
       val memoCursor = Memo.cursor()
+      val compiledBefore = compiled()
       val dt = timeQuery(fn(spark, sfDir).count())
       val built = Memo.since(memoCursor)
+      val compiles = compiled() - compiledBefore
       // Per-query pins (the `_dist` pre-aggregates, graph rounds, …)
       // hold BlockManager storage that the ContextCleaner only releases
       // after a GC notices the dropped RDD references — and the JVM may
@@ -53,7 +63,7 @@ object Bench {
       // survive — they're still strongly referenced. Measured cost:
       // ~10-30 ms per GC on the 8 GB bench heap, ~5 s across the suite.
       System.gc()
-      Timed(name, dt, built)
+      Timed(name, dt, built, compiles)
     }
 
   private def jstrs(xs: Seq[String]): String =
@@ -67,20 +77,21 @@ object Bench {
 
   /** The `bench_full.json` text, the stdout total line and the failed
     * names for one sweep. A failed query is in `failed` only: not in
-    * `total`, `n`, `queries` or `memo_builds`. */
+    * `total`, `n`, `queries`, `memo_builds` or `compiles`. */
   private[graft] def artifacts(swept: Seq[Timed], sfDir: String,
       cpus: String): (String, String, Seq[String]) = {
-    val failed = swept.collect { case Timed(n, None, _) => n }
-    val ok = swept.collect { case Timed(n, Some(t), m) => (n, t, m) }
-    val times = ok.map { case (n, t, _) => n -> t }
+    val failed = swept.collect { case Timed(n, None, _, _) => n }
+    val ok = swept.filter(_.secs.isDefined)
+    val times = ok.map(q => q.name -> q.secs.get)
     val total = times.map(_._2).sum
     // {"q_bfs":{"graph.seedDistances":3.2},...}
-    val memo = ok.collect { case (n, _, m) if m.nonEmpty =>
+    val memo = ok.collect { case Timed(n, _, m, _) if m.nonEmpty =>
       "\"" + n + "\":" + jmap(m) }.mkString("{", ",", "}")
+    val compiles = ok.map(q => "\"" + q.name + "\":" + q.compiles).mkString("{", ",", "}")
     val full =
       s"""{"metric":"bench_full","total":$total,"n":${times.size},""" +
         s""""unit":"sec","sf":"$sfDir","cpus":"$cpus","queries":${jmap(times)},""" +
-        s""""failed":${jstrs(failed)},"memo_builds":$memo}"""
+        s""""failed":${jstrs(failed)},"memo_builds":$memo,"compiles":$compiles}"""
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(times)},""" +
         s""""sf":"$sfDir","failed":${jstrs(failed)}}"""
@@ -103,9 +114,13 @@ object Bench {
       spark.conf.set("spark.graft.checkpoint.dir", dir))
     // Warm the session once (scheduler, codegen pipeline, parquet reader)
     // so the first measured query doesn't absorb JVM bring-up. Per-query
-    // times stay cold-PLAN: each query's own analysis+codegen is counted.
+    // times stay cold-PLAN: each query's own analysis, optimisation and
+    // code generation are counted, but a generated class is compiled once
+    // per JVM and shared across the sweep (GraftSession's class cache), so
+    // a query whose plan shapes an earlier query compiled skips the
+    // compile — its `compiles` says how many it paid.
     spark.range(0, 1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    Tables.region(spark, sfDir).count()
     val swept = sweep(spark, sfDir, names)
     spark.stop()
     val (full, line, failed) = artifacts(swept, sfDir, cpus)

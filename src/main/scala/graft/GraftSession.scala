@@ -16,9 +16,27 @@ import org.apache.spark.sql.SparkSession
   *    full-suite A/B of an 8× wider start doubled the distributed
   *    order-statistics class and won nowhere (OPTIMIZATION_r15.md §1).
   *    A cluster deploy sets the widths and broadcast budgets with
-  *    `--conf`.
+  *    `--conf`,
+  *  - a generated-class cache sized to the catalog
+  *    ([[codegenCacheEntries]]). Spark's default holds 100 classes, but a
+  *    catalog_heavy pass uses ~190 and a whole-catalog pass ~3,450, each
+  *    in the same order every pass, so the LRU evicted every class before
+  *    its next use and each pass recompiled it (~25 ms of Janino each).
+  *     - The cache is per JVM, not per session: `CodeGenerator` reads the
+  *       size once, at the JVM's first code generation, and every later
+  *       session shares that cache. A fresh session in a warm JVM does not
+  *       recompile a plan shape the JVM has compiled (PERF.md round 11's
+  *       "codegen overhead a fresh session always pays" was cache thrash).
+  *     - A JVM whose first session does not come from this builder keeps
+  *       Spark's default of 100.
+  *     - A cached class holds about 27 KB of heap: ~7 MiB for the
+  *       catalog_heavy panel, ~90 MiB for a whole-catalog sweep.
   */
 object GraftSession {
+  /** `spark.sql.codegen.cache.maxEntries`: above the ~3,450 distinct
+    * classes one pass over the whole catalog compiles. */
+  val codegenCacheEntries = 4096
+
   def builder(master: String, shufflePartitions: String): SparkSession.Builder = {
     val b = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
@@ -27,6 +45,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toLong)
       // InferFiltersFromGenerate synthesizes size(e)>0 filters under every
       // explode; PushDownPredicates then substitutes the full generator
       // expression through the staged projections to the scan — for our

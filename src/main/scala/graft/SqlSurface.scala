@@ -9,10 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `spark.sql(...)` text runs through the exact machinery (Catalyst,
   * graft extensions, native functions) the DataFrame API uses.
   *
-  * Views are lazy logical plans over the parquet scans — registration
-  * costs one schema read per table, and every SQL query still gets full
-  * pushdown/pruning/AQE. Native graft functions (`cosine_sim`,
-  * `word_ngrams`, `xor_checksum`) are SQL-callable after
+  * Views are lazy logical plans over the parquet scans, read with
+  * [[Tables.schemas]] — registration runs no job, and every SQL query
+  * still gets full pushdown/pruning/AQE. Native graft functions
+  * (`cosine_sim`, `word_ngrams`, `xor_checksum`) are SQL-callable after
   * [[graft.functions.GraftFunctions.register]], which [[GraftSession]]
   * already runs.
   */
@@ -21,12 +21,7 @@ object SqlSurface {
   /** Register every testdata table as a temp view named exactly as the
     * oracle schema names it (idempotent; re-registration swaps the dir). */
   def registerTables(s: SparkSession, sfDir: String): Unit =
-    Tables.all.foreach { t =>
-      // Tables.events applies the nanos→µs normalization; the view must
-      // carry it too or SQL and DataFrame queries would disagree on ts
-      val df = if (t == "events") Tables.events(s, sfDir) else Tables(s, sfDir, t)
-      df.createOrReplaceTempView(t)
-    }
+    Tables.all.foreach(t => Tables(s, sfDir, t).createOrReplaceTempView(t))
 
   /** Run a SQL query against the registered views. */
   def sql(s: SparkSession, query: String): DataFrame = s.sql(query)

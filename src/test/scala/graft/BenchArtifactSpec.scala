@@ -27,8 +27,8 @@ class BenchArtifactSpec extends AnyFlatSpec with Matchers {
 
   it should "keep a failed query out of every figure" in {
     val swept = Seq(
-      Bench.Timed("q_a", Some(1.0), Seq("graph.edges" -> 0.5)),
-      Bench.Timed("q_b", None, Seq("graph.adjacency" -> 0.25)),
+      Bench.Timed("q_a", Some(1.0), Seq("graph.edges" -> 0.5), compiles = 3),
+      Bench.Timed("q_b", None, Seq("graph.adjacency" -> 0.25), compiles = 2),
       Bench.Timed("q_c", Some(4.0)))
     val (full, line, failed) = Bench.artifacts(swept, "/data/sf", "4")
     failed shouldBe Seq("q_b")
@@ -40,6 +40,7 @@ class BenchArtifactSpec extends AnyFlatSpec with Matchers {
     f \ "queries" shouldBe JObject("q_a" -> JDouble(1.0), "q_c" -> JDouble(4.0))
     f \ "failed" shouldBe JArray(List(JString("q_b")))
     f \ "memo_builds" shouldBe JObject("q_a" -> JObject("graph.edges" -> JDouble(0.5)))
+    f \ "compiles" shouldBe JObject("q_a" -> JInt(3), "q_c" -> JInt(0))
     val l = parse(line)
     l \ "metric" shouldBe JString("total")
     l \ "value" shouldBe JDouble(5.0)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 class SqlSurfaceSpec extends GraftTestBase {
@@ -10,6 +11,34 @@ class SqlSurfaceSpec extends GraftTestBase {
     // Must not throw NumberFormatException at builder time.
     noException should be thrownBy GraftSession.builder("local[1]", "auto")
     noException should be thrownBy GraftSession.builder("local[1]", "32")
+  }
+
+  it should "size the generated-class cache to the catalog" in {
+    spark.conf.get("spark.sql.codegen.cache.maxEntries") shouldBe
+      GraftSession.codegenCacheEntries.toString
+  }
+
+  it should "compile nothing once the catalog_heavy panel is warm" in {
+    // the benchmark's panel: graph adjacency, dedup and TPC-H memo chains
+    val panel = java.nio.file.Files.readString(
+        java.nio.file.Paths.get("perfbench/panels/catalog_heavy.tsv"))
+      .linesIterator.filterNot(_.startsWith("#")).map(_.split("\t")(0)).toList
+    panel should have size 7
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def pass(): Long = {
+      val before = compiled
+      Memo.clearAll(spark)
+      panel.foreach(q => SparkEntry.queries(q)(spark, sf).count())
+      compiled - before
+    }
+    // With Spark's default 100-entry cache every pass recompiled the
+    // panel's ~190 classes. A query can still plan differently on a
+    // repeat (in one full test run q_pagerank compiled 6 new classes on
+    // its second pass and none later), so a repeat may compile a few
+    // variants before every class the panel uses is cached.
+    val counts = scala.collection.mutable.ArrayBuffer(pass(), pass())
+    while (counts.last > 0 && counts.size < 4) counts += pass()
+    withClue(s"compiles per pass ${counts.mkString(", ")}: ") { counts.last shouldBe 0L }
   }
 
   behavior of "SqlSurface"
