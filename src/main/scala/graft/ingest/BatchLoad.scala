@@ -5,6 +5,8 @@ import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.WriteCount
+
 /** The reference's idempotent delete-then-load batch contract, rendered as
   * Spark partition-overwrite (SURVEY.md P-4, O-3, K-2).
   *
@@ -48,12 +50,19 @@ object BatchLoad {
       .partitionBy("load_date")
       .parquet(tablePath)
 
-  /** Full ingest: project, stamp, overwrite-partition write. */
+  /** Full ingest: project, stamp, overwrite-partition write. Returns the
+    * rows loaded, which is the row count of the `runDate` partition now:
+    * the write counts them as it reads `raw`. The count sits below the
+    * stamp, where it leaves the planner free to see `load_date` as a
+    * constant and drop the write's sort by partition. */
   def ingest(
       spark: SparkSession,
       raw: DataFrame,
       columns: Seq[String],
       runDate: LocalDate,
-      tablePath: String): Unit =
-    loadBatch(spark, stampBatch(raw, columns, runDate), tablePath)
+      tablePath: String): Long = {
+    val counted = new WriteCount(raw)
+    loadBatch(spark, stampBatch(counted.frame, columns, runDate), tablePath)
+    counted.rows
+  }
 }

@@ -22,7 +22,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * file and atomically moved into place, so a connection dropped
   * mid-body can never leave a half-written snapshot the next ingest
   * would silently parse (the same no-partial-objects contract the
-  * export side pins in CsvExportSpec). */
+  * export side pins in CsvExportCommitterSpec). */
 object Fetch {
 
   /** `{date}` placeholder, exactly the reference's template token. */

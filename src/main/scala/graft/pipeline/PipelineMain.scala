@@ -45,7 +45,8 @@ object PipelineMain {
 
     val result = Pipeline.run(spark, conf, runDate)
     // the reference's reconciliation signal: loaded and exported counts
-    // must agree (postgres_to_s3_operator.py:46,65-70)
+    // must agree (postgres_to_s3_operator.py:46,65-70); each is counted by
+    // the write that produced it, with no re-read of the table or export
     println(s"[pipeline] runDate=$runDate loaded=${result.loadedRows} " +
       s"exported=${result.exportedRows} -> ${result.exportPath}")
     spark.stop()

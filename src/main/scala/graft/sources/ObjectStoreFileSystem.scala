@@ -74,8 +74,11 @@ class ObjectStoreFileSystem extends FileSystem {
       key.startsWith(pre) && key != marker(k) && !key.endsWith("/"))
   }
 
+  /** A prefix is a directory when any key lies under it, a nested
+    * directory marker included (an S3 listing shows it as a common
+    * prefix), so deleting `a/` also removes a leftover `a/b/` marker. */
   private def isDir(k: String): Boolean =
-    k.isEmpty || store.contains(marker(k)) || hasChildren(k)
+    k.isEmpty || store.keysIterator.exists(_.startsWith(marker(k)))
 
   private def qualify(k: String): Path =
     new Path(fsUri.toString + "/" + k)

@@ -2,10 +2,14 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shims
 
 import graft.GraftTestBase
 
@@ -124,5 +128,67 @@ class PipelineSpec extends GraftTestBase {
     val row = spark.read.parquet(table).head()
     row.getAs[java.sql.Date]("load_date").toString shouldBe "2025-03-01"
     row.getAs[java.sql.Timestamp]("processed_at") should not be null
+  }
+
+  /** A snapshot record with `id` and `name` (already CSV-rendered). */
+  private def record(id: Long, name: String): String =
+    s"$id,$name,1,H,\\N,N,42.0,-73.0,R,10.00,1,0,\\N,\\N,1,1,0,\\N"
+
+  /** Recounts of what a run wrote: the rows of its `load_date` partition
+    * and the records of its export object. */
+  private def recount(table: String, res: Pipeline.RunResult, runDate: String): (Long, Long) = {
+    val loaded = spark.read.parquet(table)
+      .where(col("load_date") === lit(java.sql.Date.valueOf(runDate))).count()
+    val exported = spark.read.option("header", "true").option("multiLine", "true")
+      .csv(res.exportPath).count()
+    (loaded, exported)
+  }
+
+  it should "count the loaded and exported rows in the writes themselves" in {
+    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    val dates = Seq("2025-01-05", "2025-01-06", "2025-01-07")
+    dates.zipWithIndex.foreach { case (d, k) =>
+      writeSnapshot(landing, d, (1 to 40).map(i =>
+        record(k * 100 + i, "\"Doc, " + i + "\"")))
+    }
+    // an earlier batch of the same rows stays in the table
+    runOnce(landing, table, export, dates, "2025-02-28")
+    val res = runOnce(landing, table, export, dates, "2025-03-01")
+    (res.loadedRows, res.exportedRows) shouldBe ((120L, 120L))
+    recount(table, res, "2025-03-01") shouldBe ((res.loadedRows, res.exportedRows))
+  }
+
+  it should "count the quoted-line-break batch's rows in the writes themselves" in {
+    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    writeSnapshot(landing, "2025-01-05", Seq(
+      record(1, "\"two\nlines\""),
+      record(2, "B"),
+      record(3, "\"three\nmore\nlines\"")))
+    val res = runOnce(landing, table, export, Seq("2025-01-05"), "2025-03-01")
+    (res.loadedRows, res.exportedRows) shouldBe ((3L, 3L))
+    recount(table, res, "2025-03-01") shouldBe ((res.loadedRows, res.exportedRows))
+  }
+
+  it should "run exactly two Spark actions per batch: the load write and the export write" in {
+    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    writeSnapshot(landing, "2025-01-05", (1 to 20).map(i => record(i, "A")))
+    runOnce(landing, table, export, Seq("2025-01-05"), "2025-02-28")
+    // an action is a root SQL execution
+    val actions = new AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.rootExecutionId.forall(_ == s.executionId) =>
+          actions.incrementAndGet()
+        case _ =>
+      }
+    }
+    shims.flushListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val res = runOnce(landing, table, export, Seq("2025-01-05"), "2025-03-01")
+      shims.flushListenerBus(spark)
+      res.loadedRows shouldBe 20
+      actions.get shouldBe 2
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
