@@ -2,7 +2,7 @@ package graft.ingest
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.WriteCount
@@ -43,7 +43,7 @@ object BatchLoad {
   /** Idempotent load: overwrite only the `load_date` partitions present in
     * `batch`. Requires `partitionOverwriteMode=dynamic`, set per-write so
     * the session default is untouched. */
-  def loadBatch(spark: SparkSession, batch: DataFrame, tablePath: String): Unit =
+  def loadBatch(batch: DataFrame, tablePath: String): Unit =
     batch.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
@@ -56,13 +56,12 @@ object BatchLoad {
     * stamp, where it leaves the planner free to see `load_date` as a
     * constant and drop the write's sort by partition. */
   def ingest(
-      spark: SparkSession,
       raw: DataFrame,
       columns: Seq[String],
       runDate: LocalDate,
       tablePath: String): Long = {
     val counted = new WriteCount(raw)
-    loadBatch(spark, stampBatch(counted.frame, columns, runDate), tablePath)
+    loadBatch(stampBatch(counted.frame, columns, runDate), tablePath)
     counted.rows
   }
 }

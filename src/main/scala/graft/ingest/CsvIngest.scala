@@ -23,10 +23,13 @@ import org.apache.spark.sql.types.StructType
   * Scale posture: `spark.read.csv` over a glob is an embarrassingly
   * parallel scan (one task per file — a multi-line file is not split);
   * the explicit schema avoids the full extra inference pass over 100 TB,
-  * and `mode` lets a production run switch from abort-the-batch to
-  * null-and-continue without a code change (SURVEY.md §7.4). No CSV mode
-  * quarantines bad rows yet: the schema carries no `_corrupt_record`
-  * column (only [[JsonIngest]] adds one).
+  * and `mode` selects abort-the-batch or null-and-continue per call
+  * (SURVEY.md §7.4). The batch pipeline does not expose it:
+  * `Pipeline.run` always passes `FailFast` and `Pipeline.Config` has no
+  * mode field, so switching a production run takes a code change until
+  * quarantine lands (ROADMAP item 3). No CSV mode quarantines bad rows
+  * yet: the schema carries no `_corrupt_record` column (only
+  * [[JsonIngest]] adds one).
   */
 object CsvIngest {
 

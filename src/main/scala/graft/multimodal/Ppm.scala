@@ -1,7 +1,5 @@
 package graft.multimodal
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Dependency-free binary PPM (P6) codec — a REAL image format, parsed
   * and produced byte-for-byte to spec (Netpbm: magic "P6", ASCII header
   * tokens separated by whitespace with `#`-comment support, maxval,

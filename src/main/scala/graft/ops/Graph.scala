@@ -1457,7 +1457,7 @@ object Graph {
     * to shuffle joins the moment they outgrow the broadcast budget —
     * measured, not asserted, in the PERF.md round-12 small-heap row. */
   private def gatedBroadcast(df: DataFrame,
-      knownRows: Option[Long] = None): DataFrame = {
+      knownRows: Option[Long]): DataFrame = {
     val cap = df.sparkSession.conf
       .getOption("spark.graft.graph.broadcastRowCap")
       .map(_.toLong).getOrElse(4000000L)

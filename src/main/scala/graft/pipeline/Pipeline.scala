@@ -56,7 +56,7 @@ object Pipeline {
       CsvIngest.FailFast)
 
     val loaded =
-      BatchLoad.ingest(spark, raw, Listings.dataColumnNames, runDate, conf.tablePath)
+      BatchLoad.ingest(raw, Listings.dataColumnNames, runDate, conf.tablePath)
     val exportPath = s"${conf.exportDir}/postgres_data_$runDate.csv"
     val exported = CsvExport.exportBatch(
       spark, conf.tablePath, runDate, exportPath, singleObject = true,

@@ -2,8 +2,6 @@ package graft.pipeline
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI driver for the batch pipeline — the engine's replacement for the
   * reference's Airflow DAG run (SURVEY.md O-1/O-2: scheduling is an
   * external concern; cron/any scheduler invokes this main per run date).

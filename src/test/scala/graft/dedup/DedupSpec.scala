@@ -172,8 +172,7 @@ class DedupSpec extends GraftTestBase {
       (3L, (1 to 20).map(i => s"c$i").mkString(" ")), // fully unique
       (4L, "too short for a span"))                   // < 8 tokens: no rows
       .toDF("doc_id", "text")
-    val dir = "/tmp/graft-span-dedup-spec"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = tempDir("graft-span-dedup-spec")
     planted.write.parquet(s"$dir/documents.parquet")
     val out = Dedup.spanDedup(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap

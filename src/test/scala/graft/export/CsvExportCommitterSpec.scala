@@ -32,7 +32,7 @@ class CsvExportCommitterSpec extends GraftTestBase {
   behavior of "CsvExport committer contract"
 
   it should "replace in full on rerun, even when the new layout has fewer parts" in {
-    val out = Files.createTempDirectory("exp-lww").toString + "/data.csv"
+    val out = tempDir("exp-lww") + "/data.csv"
     import spark.implicits._
     // write 1: multi-part layout (4 shuffle partitions → up to 4 parts)
     val first = (1 to 100).map(i => (i, "old")).toDF("id", "tag")
@@ -52,8 +52,7 @@ class CsvExportCommitterSpec extends GraftTestBase {
   }
 
   it should "leave no committed parts when the write fails mid-job" in {
-    val out = Files.createTempDirectory("exp-fail").toString + "/data.csv"
-    import spark.implicits._
+    val out = tempDir("exp-fail") + "/data.csv"
     // ANSI mode: the division blows up on a late row, after some tasks
     // have already written attempt files
     val poisoned = spark.range(0, 100, 1, 4)
@@ -69,8 +68,8 @@ class CsvExportCommitterSpec extends GraftTestBase {
   }
 
   it should "expose last-writer-wins through exportBatch end to end" in {
-    val table = Files.createTempDirectory("exp-tbl").toString + "/tbl"
-    val out = Files.createTempDirectory("exp-out").toString + "/batch.csv"
+    val table = tempDir("exp-tbl") + "/tbl"
+    val out = tempDir("exp-out") + "/batch.csv"
     import spark.implicits._
     val d = java.sql.Date.valueOf("2025-03-01")
     Seq((1, "v1", d)).toDF("id", "v", "load_date")

@@ -73,7 +73,7 @@ class ObjectStoreCommitterSpec extends GraftTestBase {
   it should "render bytes identical to the local-FS export and sequence PUTs correctly" in {
     import spark.implicits._
     withBucket { root =>
-      val table = java.nio.file.Files.createTempDirectory("oss-tbl").toString + "/tbl"
+      val table = tempDir("oss-tbl") + "/tbl"
       val d = java.sql.Date.valueOf("2025-03-01")
       Seq((1, "a,b", d), (2, null.asInstanceOf[String], d))
         .toDF("id", "v", "load_date")
@@ -89,8 +89,7 @@ class ObjectStoreCommitterSpec extends GraftTestBase {
         ObjectStoreFileSystem.objectBytes(bucketName, keys.head)
       // local export of the same batch — bytes must match exactly
       // (header synthesis, RFC4180 quoting, NULL → empty)
-      val localOut = java.nio.file.Files
-        .createTempDirectory("oss-local").toString + "/batch.csv"
+      val localOut = tempDir("oss-local") + "/batch.csv"
       CsvExport.exportBatch(spark, table, LocalDate.parse("2025-03-01"),
         localOut, singleObject = true, columns = Seq("id", "v")) shouldBe 2L
       val localPart = java.nio.file.Files.walk(java.nio.file.Paths.get(localOut))

@@ -20,8 +20,6 @@ import graft.sources.ObjectStoreFileSystem
   * on an object store. */
 class SingleObjectExportSpec extends GraftTestBase {
 
-  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
-
   private def files(dir: String): Seq[Path] =
     if (!Files.exists(Paths.get(dir))) Nil
     else Files.walk(Paths.get(dir)).iterator().asScala.filter(Files.isRegularFile(_)).toSeq
@@ -36,7 +34,7 @@ class SingleObjectExportSpec extends GraftTestBase {
 
   /** What a one-task headered write of `df` produces. */
   private def oneTask(df: DataFrame): Array[Byte] = {
-    val out = tmp("one-task") + "/out.csv"
+    val out = tempDir("one-task") + "/out.csv"
     df.coalesce(1).write.mode(SaveMode.Overwrite).options(CsvExport.writerOptions).csv(out)
     onlyCsv(out)
   }
@@ -47,7 +45,7 @@ class SingleObjectExportSpec extends GraftTestBase {
     * commas, quotes, NULLs and empty strings in the text columns;
     * `newline` puts a quoted line break into every 7th `name`. */
   private def listingTable(rows: Long, files: Int, newline: Boolean): String = {
-    val table = tmp("listing-tbl") + "/tbl"
+    val table = tempDir("listing-tbl") + "/tbl"
     val name =
       if (newline) expr("CASE WHEN id % 7 = 3 THEN concat('two\\nlines ', id) " +
         "ELSE concat('Cozy, \"loft\" ', id) END")
@@ -87,7 +85,7 @@ class SingleObjectExportSpec extends GraftTestBase {
   it should "equal a one-task write byte for byte on a multi-partition listing batch" in {
     val table = listingTable(4000, 6, newline = false)
     exportPlan(table, runDate).rdd.getNumPartitions should be > 1
-    val out = tmp("so-multi") + "/batch.csv"
+    val out = tempDir("so-multi") + "/batch.csv"
     CsvExport.exportBatch(spark, table, runDate, out,
       columns = Listings.tableColumnNames) shouldBe 4000L
     onlyCsv(out) shouldBe oneTask(exportPlan(table, runDate))
@@ -97,7 +95,7 @@ class SingleObjectExportSpec extends GraftTestBase {
 
   it should "equal a one-task write byte for byte when a name holds a quoted line break" in {
     val table = listingTable(300, 3, newline = true)
-    val out = tmp("so-newline") + "/batch.csv"
+    val out = tempDir("so-newline") + "/batch.csv"
     CsvExport.exportBatch(spark, table, runDate, out,
       columns = Listings.tableColumnNames) shouldBe 300L
     val bytes = onlyCsv(out)
@@ -108,7 +106,7 @@ class SingleObjectExportSpec extends GraftTestBase {
   it should "render column names that need quoting as the CSV writer does" in {
     val df = spark.range(0, 40, 1, 4)
       .select(col("id").as("a,b"), concat(lit("v"), col("id")).as("say \"hi\""))
-    val out = tmp("so-names") + "/names.csv"
+    val out = tempDir("so-names") + "/names.csv"
     CsvExport.writeCsv(df, out, singleObject = true) shouldBe 40L
     val bytes = onlyCsv(out)
     new String(bytes, "UTF-8").linesIterator.next() shouldBe "\"a,b\",\"say \"\"hi\"\"\""
@@ -118,7 +116,7 @@ class SingleObjectExportSpec extends GraftTestBase {
   it should "write the header line only for a zero-row batch, as a one-task write does" in {
     val table = listingTable(50, 2, newline = false)
     val empty = LocalDate.parse("2025-03-02")
-    val out = tmp("so-empty") + "/batch.csv"
+    val out = tempDir("so-empty") + "/batch.csv"
     CsvExport.exportBatch(spark, table, empty, out,
       columns = Listings.tableColumnNames) shouldBe 0L
     val bytes = onlyCsv(out)
@@ -132,7 +130,7 @@ class SingleObjectExportSpec extends GraftTestBase {
     spark.range(0, 100, 1, 4).select(col("id"), expr("1 div (id - 97)").as("boom"))
 
   it should "leave no object and no staging behind when the write fails mid-job" in {
-    val out = tmp("so-fail") + "/data.csv"
+    val out = tempDir("so-fail") + "/data.csv"
     an[Exception] should be thrownBy CsvExport.writeCsv(poisoned, out, singleObject = true)
     files(out).filter(p => p.getFileName.toString.endsWith(".csv")) shouldBe empty
     Files.exists(Paths.get(out, "_SUCCESS")) shouldBe false

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.scalatest.flatspec.AnyFlatSpec
-import org.scalatest.matchers.should.Matchers
-
 import graft.GraftTestBase
 
 /** Pure-JVM sketch behavior (no Spark needed for the algorithm itself),

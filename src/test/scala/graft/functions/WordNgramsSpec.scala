@@ -9,7 +9,6 @@ class WordNgramsSpec extends GraftTestBase {
   behavior of "WordNgrams (generator / UDTF)"
 
   it should "emit positional n-grams equal to the composed explode(transform) form" in {
-    import spark.implicits._
     val docs = graft.Tables.documents(spark, sf).limit(100)
     val viaUdtf = docs.select(col("doc_id"),
       GraftFunctions.wordNgrams(col("text"), 2).as(Seq("pos", "ngram")))

@@ -30,8 +30,9 @@ class FormatsSpec extends GraftTestBase {
   it should "round-trip schema and data through every supported format" in {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), schema)
+    val root = tempDir("graft-formats-spec")
     Formats.supported.foreach { fmt =>
-      val dir = s"/tmp/graft-formats-spec/$fmt"
+      val dir = s"$root/$fmt"
       Formats.write(df, dir, fmt)
       val back = Formats.read(spark, dir, fmt, Some(schema))
       withClue(s"format=$fmt: ") {
@@ -53,8 +54,7 @@ class FormatsSpec extends GraftTestBase {
   it should "present one stable schema over files written by different schema versions" in {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val dir = "/tmp/graft-formats-evolve"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = tempDir("graft-formats-evolve") + "/table"
     // v1 writer: two columns
     Seq((1L, "a"), (2L, "b")).toDF("id", "name")
       .write.parquet(dir)

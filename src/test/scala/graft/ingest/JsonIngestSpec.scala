@@ -18,9 +18,9 @@ class JsonIngestSpec extends GraftTestBase {
     StructField("score", DoubleType)))
 
   private def stage(lines: Seq[String]): String = {
-    val dir = Files.createTempDirectory("jsonl")
-    Files.write(dir.resolve("part-0.json"), lines.asJava)
-    dir.toString
+    val dir = tempDir("jsonl")
+    Files.write(Paths.get(dir, "part-0.json"), lines.asJava)
+    dir
   }
 
   behavior of "JsonIngest"
@@ -55,7 +55,7 @@ class JsonIngestSpec extends GraftTestBase {
 
   it should "round-trip a DataFrame through writeJsonLines" in {
     import spark.implicits._
-    val out = Files.createTempDirectory("jsonl-out").toString + "/data"
+    val out = tempDir("jsonl-out") + "/data"
     val df = Seq((1L, "x", 2.5), (2L, "y", -1.0)).toDF("id", "name", "score")
     JsonIngest.writeJsonLines(df, out)
     val back = JsonIngest.readJsonLines(spark, Seq(out), schema)

@@ -1,9 +1,6 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.GraftTestBase
 import graft.Scratch.variantOf
@@ -20,7 +17,7 @@ import graft.Scratch.variantOf
 class DegenerateGuardSpec extends GraftTestBase {
 
   private def stage(name: String, df: DataFrame): String = {
-    val dir = Files.createTempDirectory("graft-guard").toString
+    val dir = tempDir("graft-guard")
     df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
     dir
   }
@@ -80,7 +77,7 @@ class DegenerateGuardSpec extends GraftTestBase {
     val orders = Seq(
       (10L, 1L, "O", 1000.0, ts("1995-01-01 00:00:00"), "1-URGENT"),
       (11L, 3L, "O", 500.0, ts("1995-01-01 00:00:00"), "1-URGENT"))
-    val dir = Files.createTempDirectory("graft-guard").toString
+    val dir = tempDir("graft-guard")
     cust.toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal",
       "c_mktsegment").write.parquet(s"$dir/customer.parquet")
     orders.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",

@@ -1,9 +1,6 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -22,7 +19,7 @@ class EquivalencePropSpec extends GraftTestBase {
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(seed + i)))
 
   private def stage(name: String, df: DataFrame): String = {
-    val dir = Files.createTempDirectory("graft-prop").toString
+    val dir = tempDir("graft-prop")
     df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
     dir
   }

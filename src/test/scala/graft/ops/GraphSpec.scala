@@ -149,7 +149,6 @@ class GraphSpec extends GraftTestBase {
 
   it should "count triangles exactly on a hand-built graph" in {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // K4 on {1,2,3,4} (4 triangles) plus a pendant edge 4-5 (0 triangles)
     // encoded as orders: each "order" is a clique over its parts only if
     // the parts pairwise co-occur — so one order per edge gives exactly
@@ -159,7 +158,7 @@ class GraphSpec extends GraftTestBase {
     val li = edges.zipWithIndex.flatMap { case ((u, v), o) =>
       Seq((o.toLong, u), (o.toLong, v))
     }.toDF("l_orderkey", "l_partkey")
-    val dir = java.nio.file.Files.createTempDirectory("graphspec").toString
+    val dir = tempDir("graphspec")
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val row = Graph.coPurchaseTriangles(spark, dir).collect().head
     row.getLong(0) shouldBe 5L  // vertices

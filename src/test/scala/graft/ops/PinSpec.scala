@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 
 import graft.GraftTestBase
@@ -21,9 +19,7 @@ class PinSpec extends GraftTestBase {
     df.collect().map(_.toString).sorted.toSeq
 
   private def underReliable[A](body: => A): A = {
-    val dir = Files.createTempDirectory("graft-ckpt").toFile
-    dir.deleteOnExit()
-    spark.conf.set("spark.graft.checkpoint.dir", dir.getAbsolutePath)
+    spark.conf.set("spark.graft.checkpoint.dir", tempDir("graft-ckpt"))
     try body
     finally spark.conf.unset("spark.graft.checkpoint.dir")
   }
@@ -62,8 +58,7 @@ class PinSpec extends GraftTestBase {
   }
 
   it should "write reliable checkpoint files under the configured dir" in {
-    val dir = Files.createTempDirectory("graft-ckpt-files").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tempDir("graft-ckpt-files"))
     spark.conf.set("spark.graft.checkpoint.dir", dir.getAbsolutePath)
     try {
       Graph.clearCaches(spark)

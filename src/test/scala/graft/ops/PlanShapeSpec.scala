@@ -83,8 +83,7 @@ class PlanShapeSpec extends GraftTestBase {
   behavior of "partition pruning"
 
   it should "prune non-matching partitions of a partitioned table at plan time" in {
-    val dir = "/tmp/graft-planshape-part"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = tempDir("graft-planshape") + "/part"
     Tables.orders(spark, sf).write.partitionBy("o_orderstatus").parquet(dir)
     val q = spark.read.parquet(dir).filter(col("o_orderstatus") === "F")
     val scan = q.queryExecution.executedPlan.toString

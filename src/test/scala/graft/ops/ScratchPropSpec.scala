@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -24,7 +22,7 @@ class ScratchPropSpec extends GraftTestBase {
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(seed + i)))
 
   private def stage(name: String, df: DataFrame): String = {
-    val dir = Files.createTempDirectory("graft-sprop").toString
+    val dir = tempDir("graft-sprop")
     df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
     dir
   }
@@ -488,7 +486,6 @@ class ScratchPropSpec extends GraftTestBase {
   behavior of "series folds across generated series-length floors"
 
   it should "emit rows per the documented floors and never throw" in {
-    import spark.implicits._
     // daily purchase series of length L for L around every floor: the
     // round-12 purchaseless sweep fixed negative slice lengths in all
     // four folds — this walks the whole boundary ladder

@@ -1,7 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
-
 import graft.GraftTestBase
 
 class SketchesSpec extends GraftTestBase {

@@ -3,7 +3,7 @@ package graft.ops
 import graft.GraftTestBase
 import graft.Scratch.{cents, eventRows, utcDate, variantOf}
 
-import java.time.{DayOfWeek, ZoneOffset}
+import java.time.DayOfWeek
 import java.time.temporal.TemporalAdjusters
 
 /** THIRD-IMPLEMENTATION battery for the formula-dense statistics.
@@ -270,7 +270,7 @@ class ThirdImplSpec extends GraftTestBase {
         dt.toDouble * (n1.toDouble * math.exp(b)) /
           (n1.toDouble * math.exp(b) + n0.toDouble) }
   private def coxI(frame: Vector[(Long, Long, Long, Long)], b: Double) =
-    frame.foldLeft(0.0) { case (acc, (d1, dt, n1, n0)) =>
+    frame.foldLeft(0.0) { case (acc, (_, dt, n1, n0)) =>
       acc + dt.toDouble * (n1.toDouble * math.exp(b)) * n0.toDouble /
         math.pow(n1.toDouble * math.exp(b) + n0.toDouble, 2) }
 

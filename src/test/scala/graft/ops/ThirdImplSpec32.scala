@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.GraftTestBase
-import graft.Tables
 import graft.Scratch.{ev, utcDate}
 
 /** THIRD-IMPLEMENTATION battery, batch 32: event-sequence analytics.

@@ -55,7 +55,7 @@ class ThirdImplSpec35 extends GraftTestBase {
     val n = cents.length.toLong
     def disc(q: Double): Long = cents(math.ceil(q * cents.length).toInt - 1)
     val (q1, q3) = (disc(0.25), disc(0.75))
-    var r0 = math.floor(math.pow(n.toDouble, 1.0 / 3.0)).toLong
+    val r0 = math.floor(math.pow(n.toDouble, 1.0 / 3.0)).toLong
     val r =
       if ((r0 + 1) * (r0 + 1) * (r0 + 1) <= n) r0 + 1
       else if (r0 * r0 * r0 > n) r0 - 1

@@ -38,7 +38,7 @@ class ThirdImplSpec36 extends GraftTestBase {
       .sortBy { case (pk, c) => (-c, pk) }
     val tot = partRev.map(_._2).sum
     var cum = 0L
-    val classed = partRev.map { case (pk, c) =>
+    val classed = partRev.map { case (_, c) =>
       val prev = cum
       cum += c
       val cls =

@@ -55,7 +55,7 @@ class FetchSpec extends GraftTestBase {
   behavior of "Fetch.fetchSnapshots"
 
   it should "stage 200 responses and skip non-200 dates" in {
-    val landing = Files.createTempDirectory("fetch-l").toString
+    val landing = tempDir("fetch-l")
     val bodies = Map(
       "2025-01-05" -> csvBody(Seq(
         "1,A,1,H,\\N,N,42.0,-73.0,R,10.00,1,0,\\N,\\N,1,1,0,\\N")),
@@ -78,9 +78,9 @@ class FetchSpec extends GraftTestBase {
   }
 
   it should "feed the real fetch -> ingest -> export chain with one missing date" in {
-    val landing = Files.createTempDirectory("fetch-l2").toString
-    val table = Files.createTempDirectory("fetch-t").toString + "/tbl"
-    val export = Files.createTempDirectory("fetch-e").toString
+    val landing = tempDir("fetch-l2")
+    val table = tempDir("fetch-t") + "/tbl"
+    val export = tempDir("fetch-e")
     val bodies = Map(
       "2025-01-05" -> csvBody(Seq(
         "1,A,1,H,\\N,N,42.0,-73.0,R,10.00,1,0,\\N,\\N,1,1,0,\\N")),

@@ -42,7 +42,7 @@ class PipelinePropSpec extends GraftTestBase {
   it should "preserve arbitrary non-null, non-empty strings byte-exactly" in {
     samples(Gen.listOfN(8, nastyString), 15).foreach { strings =>
       val rows = strings.zipWithIndex.map { case (s, i) => Row(i.toLong, s, i * 1.5) }
-      val dir = Files.createTempDirectory("csvprop").toString
+      val dir = tempDir("csvprop")
       val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
       CsvExport.writeCsv(df, s"$dir/out", singleObject = true)
       val back = spark.read
@@ -67,9 +67,9 @@ class PipelinePropSpec extends GraftTestBase {
       day <- Gen.choose(1, 27)
     } yield (ids, day)
     samples(batchGen, 5).foreach { case (ids, day) =>
-      val landing = Files.createTempDirectory("l").toString
-      val table = Files.createTempDirectory("t").toString + "/tbl"
-      val export = Files.createTempDirectory("e").toString
+      val landing = tempDir("l")
+      val table = tempDir("t") + "/tbl"
+      val export = tempDir("e")
       val date = f"2025-01-$day%02d"
       val header = graft.schema.Listings.dataColumnNames.mkString(",")
       val rows = ids.map(i =>

@@ -18,9 +18,6 @@ import graft.GraftTestBase
   * snapshot, FAILFAST casting. */
 class PipelineSpec extends GraftTestBase {
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   private val header = "id,name,host_id,host_name,neighbourhood_group," +
     "neighbourhood,latitude,longitude,room_type,price,minimum_nights," +
     "number_of_reviews,last_review,reviews_per_month," +
@@ -39,7 +36,7 @@ class PipelineSpec extends GraftTestBase {
   behavior of "Pipeline.run"
 
   it should "ingest \\N as NULL and export NULL as empty field (the asymmetry)" in {
-    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    val (landing, table, export) = (tempDir("l"), tempDir("t") + "/tbl", tempDir("e"))
     writeSnapshot(landing, "2025-01-05", Seq(
       "1,\"Cozy, downtown \"\"loft\"\"\",10,Ann,\\N,Center,42.6,-73.7,Entire,120.50,2,14,2024-11-02,1.25,3,200,5,\\N",
       "2,Plain,11,Bob,\\N,North,42.7,-73.8,Private,\\N,1,0,\\N,\\N,1,365,0,ABC"))
@@ -63,7 +60,7 @@ class PipelineSpec extends GraftTestBase {
   }
 
   it should "be idempotent: re-running a runDate replaces, never appends" in {
-    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    val (landing, table, export) = (tempDir("l"), tempDir("t") + "/tbl", tempDir("e"))
     writeSnapshot(landing, "2025-01-05", Seq(
       "1,A,1,H,\\N,N,42.0,-73.0,R,10.00,1,0,\\N,\\N,1,1,0,\\N"))
     runOnce(landing, table, export, Seq("2025-01-05"), "2025-03-01")
@@ -81,7 +78,7 @@ class PipelineSpec extends GraftTestBase {
   }
 
   it should "skip missing snapshot dates without failing" in {
-    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    val (landing, table, export) = (tempDir("l"), tempDir("t") + "/tbl", tempDir("e"))
     writeSnapshot(landing, "2025-01-05", Seq(
       "1,A,1,H,\\N,N,42.0,-73.0,R,10.00,1,0,\\N,\\N,1,1,0,\\N"))
     val res = runOnce(landing, table, export,
@@ -90,7 +87,7 @@ class PipelineSpec extends GraftTestBase {
   }
 
   it should "fail fast on malformed numerics (the reference's COPY abort)" in {
-    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    val (landing, table, export) = (tempDir("l"), tempDir("t") + "/tbl", tempDir("e"))
     writeSnapshot(landing, "2025-01-05", Seq(
       "1,A,1,H,\\N,N,42.0,-73.0,R,not_a_price,1,0,\\N,\\N,1,1,0,\\N"))
     an[Exception] should be thrownBy
@@ -98,7 +95,7 @@ class PipelineSpec extends GraftTestBase {
   }
 
   it should "keep a quoted line break inside its field (RFC 4180)" in {
-    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    val (landing, table, export) = (tempDir("l"), tempDir("t") + "/tbl", tempDir("e"))
     // every field already in the export's rendering, so the exported
     // record must equal the input record byte for byte
     val multi = "1,\"two\nlines\",10,Ann,Queens,Center,42.6000000,-73.7000000," +
@@ -121,7 +118,7 @@ class PipelineSpec extends GraftTestBase {
   }
 
   it should "stamp load_date and processed_at (the fired defaults)" in {
-    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    val (landing, table, export) = (tempDir("l"), tempDir("t") + "/tbl", tempDir("e"))
     writeSnapshot(landing, "2025-01-05", Seq(
       "1,A,1,H,\\N,N,42.0,-73.0,R,10.00,1,0,\\N,\\N,1,1,0,\\N"))
     runOnce(landing, table, export, Seq("2025-01-05"), "2025-03-01")
@@ -145,7 +142,7 @@ class PipelineSpec extends GraftTestBase {
   }
 
   it should "count the loaded and exported rows in the writes themselves" in {
-    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    val (landing, table, export) = (tempDir("l"), tempDir("t") + "/tbl", tempDir("e"))
     val dates = Seq("2025-01-05", "2025-01-06", "2025-01-07")
     dates.zipWithIndex.foreach { case (d, k) =>
       writeSnapshot(landing, d, (1 to 40).map(i =>
@@ -159,7 +156,7 @@ class PipelineSpec extends GraftTestBase {
   }
 
   it should "count the quoted-line-break batch's rows in the writes themselves" in {
-    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    val (landing, table, export) = (tempDir("l"), tempDir("t") + "/tbl", tempDir("e"))
     writeSnapshot(landing, "2025-01-05", Seq(
       record(1, "\"two\nlines\""),
       record(2, "B"),
@@ -170,7 +167,7 @@ class PipelineSpec extends GraftTestBase {
   }
 
   it should "run exactly two Spark actions per batch: the load write and the export write" in {
-    val (landing, table, export) = (tmpDir("l"), tmpDir("t") + "/tbl", tmpDir("e"))
+    val (landing, table, export) = (tempDir("l"), tempDir("t") + "/tbl", tempDir("e"))
     writeSnapshot(landing, "2025-01-05", (1 to 20).map(i => record(i, "A")))
     runOnce(landing, table, export, Seq("2025-01-05"), "2025-02-28")
     // an action is a root SQL execution

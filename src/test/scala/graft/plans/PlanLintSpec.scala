@@ -102,7 +102,6 @@ class PlanLintSpec extends GraftTestBase {
   }
 
   it should "catch a UDF hiding in a join condition, not just projections" in {
-    import spark.implicits._
     val sameLen = org.apache.spark.sql.functions.udf((a: String, b: String) => a.length == b.length)
     val t = graft.Tables.nation(spark, sf)
     val joined = t.as("a").join(t.as("b"), sameLen(col("a.n_name"), col("b.n_name")))

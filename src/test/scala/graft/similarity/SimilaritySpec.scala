@@ -116,7 +116,6 @@ class SimilaritySpec extends GraftTestBase {
   behavior of "covarianceMatrix"
 
   it should "emit the full upper triangle with PSD-consistent entries" in {
-    import spark.implicits._
     val dim = graft.Tables.embeddings(spark, sf)
       .select(org.apache.spark.sql.functions.size(col("embedding"))).head().getInt(0)
     val rows = Similarity.covarianceMatrix(spark, sf).collect()

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,7 +24,7 @@ class FormatRoundTripSpec extends GraftTestBase {
 
   it should "preserve the documents table bit-for-bit through ORC" in {
     val docs = Tables.documents(spark, sf)
-    val dir = Files.createTempDirectory("fmt_orc").toString
+    val dir = tempDir("fmt_orc")
     docs.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
     back.schema.fields.map(f => (f.name, f.dataType)).toSeq shouldBe
@@ -38,7 +36,7 @@ class FormatRoundTripSpec extends GraftTestBase {
     // JSON has no date/decimal types — the read schema restores them,
     // which is the production contract for JSON landing zones
     val orders = Tables.orders(spark, sf)
-    val dir = Files.createTempDirectory("fmt_json").toString
+    val dir = tempDir("fmt_json")
     orders.write.mode("overwrite").json(dir)
     val back = spark.read.schema(orders.schema).json(dir)
     checksum(back) shouldBe checksum(orders)
@@ -46,7 +44,7 @@ class FormatRoundTripSpec extends GraftTestBase {
 
   it should "predicate-pushdown into the ORC scan like parquet" in {
     val docs = Tables.documents(spark, sf)
-    val dir = Files.createTempDirectory("fmt_orc_pd").toString
+    val dir = tempDir("fmt_orc_pd")
     docs.write.mode("overwrite").orc(dir)
     val plan = spark.read.orc(dir).filter(col("doc_id") < 10)
       .queryExecution.executedPlan.toString

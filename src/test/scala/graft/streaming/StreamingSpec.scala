@@ -22,8 +22,9 @@ class StreamingSpec extends GraftTestBase {
       Event(3, ts("2024-01-01 11:30:00"), 1, "a", 1.0), // gap 80min -> new session
       Event(4, ts("2024-01-01 10:05:00"), 2, "b", 1.0)
     ).toDF()
-    events.write.mode("overwrite").parquet("/tmp/graft-spec-events/events.parquet")
-    val out = EventStreams.sessionizeBatch(spark, "/tmp/graft-spec-events")
+    val dir = tempDir("graft-spec-events")
+    events.write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val out = EventStreams.sessionizeBatch(spark, dir)
       .orderBy("user_id", "session_seq").collect()
     out should have length 3
     out(0).getAs[Long]("n_events") shouldBe 2
@@ -485,8 +486,7 @@ class StreamingSpec extends GraftTestBase {
   it should "refresh only touched keys and retain untouched partitions" in {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = "/tmp/graft-spec-mv"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = tempDir("graft-spec-mv")
     val input = MemoryStream[Event]
     val query = EventStreams.incrementalTotals(
       input.toDF().withColumn("ts", col("ts").cast("timestamp")),

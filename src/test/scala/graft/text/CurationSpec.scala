@@ -1,7 +1,5 @@
 package graft.text
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.GraftTestBase
@@ -140,7 +138,6 @@ class CurationSpec extends GraftTestBase {
   }
 
   it should "rebuild the document from stride-aligned prefixes of each chunk" in {
-    import spark.implicits._
     val rebuilt = Curation.chunkDocuments(spark, sf)
       .withColumn("piece",
         // first `stride` tokens of each chunk, in chunk order, concatenated
@@ -178,7 +175,7 @@ class CurationSpec extends GraftTestBase {
   behavior of "materializeCorpus"
 
   it should "write only deduped in-language docs, partitioned by lang" in {
-    val out = Files.createTempDirectory("graft-corpus").toString + "/corpus"
+    val out = tempDir("graft-corpus") + "/corpus"
     val curated = Curation.materializeCorpus(spark, sf, out)
     val written = spark.read.parquet(out)
     written.count() shouldBe curated.count()

@@ -99,8 +99,7 @@ class TextAnalysisSpec extends GraftTestBase {
     import spark.implicits._
     val planted = Seq((-1L, Seq.fill(50)("spam").mkString(" "), "en", "src0", 200L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = "/tmp/graft-repetition-spec"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = tempDir("graft-repetition-spec")
     graft.Tables.documents(spark, sf).unionByName(planted)
       .write.parquet(s"$dir/documents.parquet")
     val r = TextAnalysis.repetitionStats(spark, dir)
@@ -164,8 +163,7 @@ class TextAnalysisSpec extends GraftTestBase {
       (2L, (1 to 10).map(i => s"r$i").mkString(" ")),
       (3L, Seq.fill(20)("common").mkString(" ")))
       .toDF("doc_id", "text")
-    val dir = "/tmp/graft-lm-score-spec"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = tempDir("graft-lm-score-spec")
     planted.write.parquet(s"$dir/documents.parquet")
     val out = TextAnalysis.lmScore(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap

@@ -1,7 +1,5 @@
 package graft.text
 
-import org.apache.spark.sql.functions._
-
 import graft.GraftTestBase
 
 class WinnowingSpec extends GraftTestBase {
@@ -71,7 +69,7 @@ class WinnowingSpec extends GraftTestBase {
       (2L, s"b1 b2 $passage y1 y2 y3 y4 y5 y6"),
       (3L, "c1 c2 c3 c4 c5 c6 c7 c8 c9 c10 c11 c12 c13 c14"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("winnow").toString
+    val dir = tempDir("winnow")
     df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // reuse the operator against the staged mini-corpus
     val out = Winnowing.winnowFingerprints(spark, dir).collect()
