@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** SQL entry point: the reference's users speak SQL (`SELECT * FROM
   * listings ...` through Postgres — `postgres_to_s3_operator.py:43-56`
@@ -22,7 +22,4 @@ object SqlSurface {
     * oracle schema names it (idempotent; re-registration swaps the dir). */
   def registerTables(s: SparkSession, sfDir: String): Unit =
     Tables.all.foreach(t => Tables(s, sfDir, t).createOrReplaceTempView(t))
-
-  /** Run a SQL query against the registered views. */
-  def sql(s: SparkSession, query: String): DataFrame = s.sql(query)
 }

@@ -46,8 +46,8 @@ import graft.WriteCount
   * part), so no data bytes pass through the driver and the object
   * appears at `CompleteMultipartUpload`; that rendering needs the S3A
   * connector and is not built here. [[writeCsv]] defaults to `false`,
-  * a plain multi-part write; [[exportBatch]] defaults to `true`, the
-  * reference's one object, and `Pipeline.run` always writes one object.
+  * a plain multi-part write; [[exportBatch]], and so `Pipeline.run`,
+  * always writes the reference's one object.
   * The filter is a Catalyst predicate, so against a partitioned table it
   * prunes to the single `load_date` partition instead of scanning
   * history.
@@ -164,10 +164,9 @@ object CsvExport {
       tablePath: String,
       runDate: LocalDate,
       outPath: String,
-      singleObject: Boolean = true,
-      columns: Seq[String] = Nil): Long = {
-    val batch = currentBatch(spark.read.parquet(tablePath), runDate)
-    val result = if (columns.nonEmpty) batch.select(columns.map(col): _*) else batch
-    writeCsv(result, outPath, singleObject)
+      columns: Seq[String]): Long = {
+    val result =
+      currentBatch(spark.read.parquet(tablePath), runDate).select(columns.map(col): _*)
+    writeCsv(result, outPath, singleObject = true)
   }
 }

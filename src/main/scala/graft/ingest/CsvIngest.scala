@@ -138,11 +138,11 @@ object CsvIngest {
 
   /** Snapshot-union scan (SURVEY.md S-4): read every per-date snapshot
     * file that exists, skipping absent dates — the reference's
-    * skip-on-missing download semantics (dag:38-39) — and tag provenance.
+    * skip-on-missing download semantics (dag:38-39).
     *
     * The union of homogeneous files is a single multi-file scan (no
-    * shuffle, no per-file job); `input_file_name()` records which snapshot
-    * each row came from, standing in for the reference's per-file loop.
+    * shuffle, no per-file job), standing in for the reference's per-file
+    * loop.
     */
   def readSnapshots(
       spark: SparkSession,
@@ -162,6 +162,5 @@ object CsvIngest {
         "naming is listing-<date>-processed.csv (the reference's preprocess-" +
         "stage output name); stage raw files under that name")
     readCsv(spark, present, schema, mode)
-      .withColumn("source_file", input_file_name())
   }
 }

@@ -59,8 +59,7 @@ object Pipeline {
       BatchLoad.ingest(raw, Listings.dataColumnNames, runDate, conf.tablePath)
     val exportPath = s"${conf.exportDir}/postgres_data_$runDate.csv"
     val exported = CsvExport.exportBatch(
-      spark, conf.tablePath, runDate, exportPath, singleObject = true,
-      columns = Listings.tableColumnNames)
+      spark, conf.tablePath, runDate, exportPath, Listings.tableColumnNames)
     RunResult(loaded, exported, exportPath)
   }
 }

@@ -45,7 +45,7 @@ class SqlSurfaceSpec extends GraftTestBase {
 
   it should "answer SQL text identically to the DataFrame rendering" in {
     SqlSurface.registerTables(spark, sf)
-    val viaSql = SqlSurface.sql(spark,
+    val viaSql = spark.sql(
       """SELECT l_returnflag, l_linestatus,
         |  sum(l_quantity) AS sum_qty,
         |  count(*) AS n
@@ -66,21 +66,21 @@ class SqlSurfaceSpec extends GraftTestBase {
     graft.functions.GraftFunctions.register(spark)
     // native expression through SQL: self-pairs hit the SelfCosineRule
     // rewrite, cross pairs the codegen'd cosine loop
-    val r = SqlSurface.sql(spark,
+    val r = spark.sql(
       """SELECT a.vec_id, round(cosine_sim(a.embedding, b.embedding), 4) AS c
         |FROM embeddings a JOIN embeddings b ON a.vec_id = b.vec_id""".stripMargin)
       .collect()
     r.length should be > 0
     r.foreach(_.getDouble(1) shouldBe 1.0)
     // UDTF through SQL
-    val ng = SqlSurface.sql(spark,
+    val ng = spark.sql(
       "SELECT word_ngrams(text, 2) AS (pos, ngram) FROM documents LIMIT 5")
     ng.count() should be > 0L
   }
 
   it should "normalize events.ts in the view exactly like the DataFrame path" in {
     SqlSurface.registerTables(spark, sf)
-    val viaSql = SqlSurface.sql(spark, "SELECT event_id, ts FROM events")
+    val viaSql = spark.sql("SELECT event_id, ts FROM events")
     viaSql.exceptAll(Tables.events(spark, sf).select("event_id", "ts"))
       .count() shouldBe 0
     viaSql.schema("ts").dataType.typeName shouldBe "timestamp"

@@ -75,12 +75,12 @@ class CsvExportCommitterSpec extends GraftTestBase {
     Seq((1, "v1", d)).toDF("id", "v", "load_date")
       .write.mode("overwrite").parquet(table)
     CsvExport.exportBatch(spark, table, LocalDate.parse("2025-03-01"), out,
-      singleObject = true, columns = Seq("id", "v")) shouldBe 1L
+      columns = Seq("id", "v")) shouldBe 1L
     // upstream batch changes; the re-export must fully supersede
     Seq((1, "v2", d), (2, "v2", d)).toDF("id", "v", "load_date")
       .write.mode("overwrite").parquet(table)
     CsvExport.exportBatch(spark, table, LocalDate.parse("2025-03-01"), out,
-      singleObject = true, columns = Seq("id", "v")) shouldBe 2L
+      columns = Seq("id", "v")) shouldBe 2L
     val lines = committedParts(out)
       .flatMap(p => Files.readAllLines(p).asScala).sorted
     lines shouldBe Seq("1,v2", "2,v2", "id,v")

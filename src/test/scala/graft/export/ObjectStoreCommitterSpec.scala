@@ -82,7 +82,7 @@ class ObjectStoreCommitterSpec extends GraftTestBase {
       val cursor = ObjectStoreFileSystem.putCursor()
       val out = s"$root/exports/batch.csv"
       CsvExport.exportBatch(spark, table, LocalDate.parse("2025-03-01"), out,
-        singleObject = true, columns = Seq("id", "v")) shouldBe 2L
+        columns = Seq("id", "v")) shouldBe 2L
       val keys = committedCsvKeys("exports/batch.csv")
       keys.size shouldBe 1
       val remoteBytes =
@@ -91,7 +91,7 @@ class ObjectStoreCommitterSpec extends GraftTestBase {
       // (header synthesis, RFC4180 quoting, NULL → empty)
       val localOut = tempDir("oss-local") + "/batch.csv"
       CsvExport.exportBatch(spark, table, LocalDate.parse("2025-03-01"),
-        localOut, singleObject = true, columns = Seq("id", "v")) shouldBe 2L
+        localOut, columns = Seq("id", "v")) shouldBe 2L
       val localPart = java.nio.file.Files.walk(java.nio.file.Paths.get(localOut))
         .iterator()
       val localBytes = scala.jdk.CollectionConverters

@@ -86,6 +86,15 @@ class PipelineSpec extends GraftTestBase {
     res.loadedRows shouldBe 1
   }
 
+  it should "refuse a run with no snapshot on disk, naming the expected file name" in {
+    val (landing, table, export) = (tempDir("l"), tempDir("t") + "/tbl", tempDir("e"))
+    val e = the[IllegalArgumentException] thrownBy
+      runOnce(landing, table, export, Seq("2025-01-05", "2025-02-05"), "2025-03-01")
+    e.getMessage should include("listing-<date>-processed.csv")
+    Files.exists(Paths.get(table)) shouldBe false
+    new java.io.File(export).list().filter(_.startsWith("postgres_data_")) shouldBe empty
+  }
+
   it should "fail fast on malformed numerics (the reference's COPY abort)" in {
     val (landing, table, export) = (tempDir("l"), tempDir("t") + "/tbl", tempDir("e"))
     writeSnapshot(landing, "2025-01-05", Seq(
