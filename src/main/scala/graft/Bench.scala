@@ -60,8 +60,10 @@ object Bench {
       // pinned blocks (BENCH_r06's ghost regressions: q_incr_agg 5.7 s
       // in-suite vs 1.8 s isolated). An explicit GC after each query
       // hands the dead blocks to the cleaner while the shared memos
-      // survive — they're still strongly referenced. Measured cost:
-      // ~10-30 ms per GC on the 8 GB bench heap, ~5 s across the suite.
+      // survive — they're still strongly referenced. Measured cost: one
+      // call took 0.15-0.30 s on the catalog_heavy panel at sf0.1, so a
+      // 414-query pass spends about 60-120 s here, outside every
+      // query's time (ROADMAP item 6).
       System.gc()
       Timed(name, dt, built, compiles)
     }
@@ -100,7 +102,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // optional comma-separated query-name filter for local iteration
     // (unset, every query is timed); an unknown name fails here, before
     // any session or sweep

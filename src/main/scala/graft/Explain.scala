@@ -15,7 +15,7 @@ object Explain {
       .getOrElse("/root/testdata/sf0.1")
     val showPlan = args.contains("--plan")
     val fresh = args.contains("--fresh")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local()
     selected.foreach { case SparkEntry.Query(n, fn, _) =>
       // --fresh: drop every memoized pinned frame first so each query's
       // captured plan is the COLD-plan shape (what Bench times), not a

@@ -59,10 +59,15 @@ object GraftSession {
     Tables.requiredConf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
   }
 
-  /** local[cpus] session for harness entrypoints. Also registers graft's
-    * native SQL functions (cosine_sim) — cluster deploys get the same via
-    * spark.sql.extensions=graft.functions.GraftExtensions. */
-  def local(cpus: String): SparkSession = {
+  /** The core count every entry point runs with: `SPARK_GRAFT_CPUS` when
+    * set (a deployment setting), else the processors this JVM can use. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** local[cpus] session for harness entrypoints. The native SQL
+    * functions come with [[builder]]'s extensions; this adds the UDAFs,
+    * which extensions cannot inject. */
+  def local(cpus: String = GraftSession.cpus): SparkSession = {
     val spark = builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)

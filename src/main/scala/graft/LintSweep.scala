@@ -13,7 +13,7 @@ import scala.util.control.NonFatal
 object LintSweep {
   def main(args: Array[String]): Unit = {
     val selected = SparkEntry.select(args.toSeq)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = GraftSession.local()
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     var flagged = 0
     var errored = 0

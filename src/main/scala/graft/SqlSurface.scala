@@ -12,9 +12,10 @@ import org.apache.spark.sql.SparkSession
   * Views are lazy logical plans over the parquet scans, read with
   * [[Tables.schemas]] — registration runs no job, and every SQL query
   * still gets full pushdown/pruning/AQE. Native graft functions
-  * (`cosine_sim`, `word_ngrams`, `xor_checksum`) are SQL-callable after
-  * [[graft.functions.GraftFunctions.register]], which [[GraftSession]]
-  * already runs.
+  * (`cosine_sim`, `word_ngrams`) are SQL-callable in every
+  * [[GraftSession]] through its extensions, and the UDAFs
+  * (`xor_checksum`, ...) after [[graft.functions.GraftFunctions.register]],
+  * which `GraftSession.local` already runs.
   */
 object SqlSurface {
 

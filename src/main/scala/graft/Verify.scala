@@ -9,8 +9,7 @@ object Verify {
     // Optional comma-separated query filter for local iteration, as in
     // Bench's SPARK_GRAFT_ONLY; an unknown name fails before any dump.
     val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY").toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     selected.foreach { query =>
       try query.run(spark, sfDir).coalesce(1).write.mode("overwrite")

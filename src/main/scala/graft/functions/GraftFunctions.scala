@@ -7,12 +7,14 @@ import org.apache.spark.sql.graft.shims
 
 /** Registration surface for graft's native expressions.
   *
-  * Two entry styles, both public-Spark:
-  *  - `GraftExtensions` for `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    (the cluster-deploy path: the function exists in every session created
-  *    from the conf, including SQL-only clients);
-  *  - [[GraftFunctions.register]] for imperative wiring from an existing
-  *    session (the test/driver path).
+  * Two entry points, both public-Spark:
+  *  - `GraftExtensions` injects the native functions, the optimizer rule
+  *    and the planner strategy. `GraftSession.builder` installs it, and a
+  *    cluster deploy sets `spark.sql.extensions=graft.functions.GraftExtensions`
+  *    so that every session created from the conf has them, SQL-only
+  *    clients included;
+  *  - [[GraftFunctions.register]] adds the UDAFs to an existing session,
+  *    which extensions cannot do (`GraftSession.local` calls it).
   *
   * Plus a typed Column API ([[GraftFunctions.cosineSim]]) that needs no
   * registration at all.
@@ -27,8 +29,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftFunctions {
 
-  /** The native SQL functions, one (name, info, builder) each:
-    * [[GraftExtensions]] injects them and [[register]] registers them. */
+  /** The native SQL functions, one (name, info, builder) each, that
+    * [[GraftExtensions]] injects. */
   private[functions] val descriptors
       : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("cosine_sim"),
@@ -96,16 +98,11 @@ object GraftFunctions {
         SortedIntersect(children.head, children(1))
       }))
 
-  /** Imperatively register the native functions and the UDAFs
-    * (`xor_checksum`, `space_saving`, `quantile_sketch`) in an existing
-    * session (idempotent). UDAFs have no SparkSessionExtensions
-    * injection point, so they are registered only here, not by
-    * GraftExtensions. */
+  /** Register the UDAFs (`xor_checksum`, `space_saving`,
+    * `quantile_sketch`) in an existing session (idempotent). UDAFs have
+    * no SparkSessionExtensions injection point, so they are registered
+    * only here, not by GraftExtensions. */
   def register(spark: SparkSession): Unit = {
-    descriptors.foreach {
-      case (ident, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
     spark.udf.register("xor_checksum", XorChecksum.udaf)
     spark.udf.register("space_saving", SpaceSaving.udaf)
     spark.udf.register("quantile_sketch", QuantileSketch.udaf)

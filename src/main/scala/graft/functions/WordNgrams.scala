@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * renderings and DuckDB oracles agree bit-for-bit.
   *
   * Registered SQL-side as `word_ngrams(text, n)` by
-  * [[GraftFunctions.register]] / [[GraftExtensions]]; Column-side via
+  * [[GraftExtensions]]; Column-side via
   * [[GraftFunctions.wordNgrams]]. n must be a foldable positive int.
   */
 case class WordNgrams(child: Expression, n: Expression)

@@ -52,43 +52,49 @@ object Multimodal {
     StructField("media_id", LongType),
     StructField("payload", BinaryType)))
 
-  /** One REAL P6 image per document: `Ppm.encode(renderPattern(...))`
-    * produces a spec-valid Netpbm file any external tool could open. */
-  def imageTable(s: SparkSession, d: String): DataFrame = {
+  /** One synthesized payload per document (`media_id`, `payload`):
+    * `payload(media_id, byte length of the document's UTF-8 text)`. */
+  private def synthesized(s: SparkSession, d: String)
+      (payload: (Long, Int) => Array[Byte]): DataFrame = {
     val enc = RowEncoder.encoderFor(payloadSchema)
     Tables.documents(s, d)
       .select(col("doc_id").as("media_id"),
         length(encode(col("text"), "UTF-8")).cast("int").as("len"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val (w, h) = dims(r.getInt(1))
-          Row(id, Ppm.encode(Ppm.renderPattern(seed(id), w, h)))
-        }
-      }(enc)
+      .mapPartitions(rows =>
+        rows.map(r => Row(r.getLong(0), payload(r.getLong(0), r.getInt(1)))))(enc)
   }
+
+  /** Every [[imageTable]] payload decoded and mapped to one row of
+    * `schema` by `census(media_id, image)`, iterator to iterator. */
+  private def decodedImages(s: SparkSession, d: String, schema: StructType)
+      (census: (Long, Ppm.Image) => Row): DataFrame =
+    imageTable(s, d)
+      .select(col("media_id"), col("payload"))
+      .mapPartitions(rows => rows.map(r =>
+        census(r.getLong(0), Ppm.decode(r.getAs[Array[Byte]](1)))))(
+        RowEncoder.encoderFor(schema))
+
+  /** One REAL P6 image per document: `Ppm.encode(renderPattern(...))`
+    * produces a spec-valid Netpbm file any external tool could open. */
+  def imageTable(s: SparkSession, d: String): DataFrame =
+    synthesized(s, d) { (id, len) =>
+      val (w, h) = dims(len)
+      Ppm.encode(Ppm.renderPattern(seed(id), w, h))
+    }
 
   /** One REAL multi-frame payload per document: [[videoFrames]]
     * concatenated P6 streams (frame f's pattern is seeded seed+13f), the
     * de-facto animated-PPM convention — frame boundaries are only
     * discoverable by parsing each header. */
-  def videoTable(s: SparkSession, d: String): DataFrame = {
-    val enc = RowEncoder.encoderFor(payloadSchema)
-    Tables.documents(s, d)
-      .select(col("doc_id").as("media_id"),
-        length(encode(col("text"), "UTF-8")).cast("int").as("len"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val (w, h) = dims(r.getInt(1))
-          val frames = (0 until videoFrames).map(f =>
-            Ppm.encode(Ppm.renderPattern(seed(id), w, h, f)))
-          val out = new java.io.ByteArrayOutputStream()
-          frames.foreach(out.write)
-          Row(id, out.toByteArray)
-        }
-      }(enc)
-  }
+  def videoTable(s: SparkSession, d: String): DataFrame =
+    synthesized(s, d) { (id, len) =>
+      val (w, h) = dims(len)
+      val frames = (0 until videoFrames).map(f =>
+        Ppm.encode(Ppm.renderPattern(seed(id), w, h, f)))
+      val out = new java.io.ByteArrayOutputStream()
+      frames.foreach(out.write)
+      out.toByteArray
+    }
 
   private val decodedSchema = StructType(Seq(
     StructField("media_id", LongType),
@@ -139,16 +145,10 @@ object Multimodal {
       StructField("height", IntegerType),
       StructField("n_pixel_bytes", LongType),
       StructField("pixel_sum", LongType)))
-    val enc = RowEncoder.encoderFor(schema)
-    imageTable(s, d)
-      .select(col("media_id"), col("payload"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val img = Ppm.decode(r.getAs[Array[Byte]](1))
-          Row(r.getLong(0), img.width, img.height,
-            img.pixels.length.toLong, Ppm.pixelSum(img))
-        }
-      }(enc)
+    decodedImages(s, d, schema) { (id, img) =>
+      Row(id, img.width, img.height,
+        img.pixels.length.toLong, Ppm.pixelSum(img))
+    }
       .select(col("media_id"), col("width"), col("height"),
         col("n_pixel_bytes"), col("pixel_sum"),
         round(col("pixel_sum").cast("double") / col("n_pixel_bytes"), 4)
@@ -205,21 +205,15 @@ object Multimodal {
       StructField("n_pixel_bytes", LongType),
       StructField("h0", LongType), StructField("h1", LongType),
       StructField("h2", LongType), StructField("h3", LongType)))
-    val enc = RowEncoder.encoderFor(schema)
-    imageTable(s, d)
-      .select(col("media_id"), col("payload"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val img = Ppm.decode(r.getAs[Array[Byte]](1))
-          val h = new Array[Long](4)
-          var i = 0
-          while (i < img.pixels.length) {
-            h((img.pixels(i) & 0xff) >> 6) += 1
-            i += 1
-          }
-          Row(r.getLong(0), img.pixels.length.toLong, h(0), h(1), h(2), h(3))
-        }
-      }(enc)
+    decodedImages(s, d, schema) { (id, img) =>
+      val h = new Array[Long](4)
+      var i = 0
+      while (i < img.pixels.length) {
+        h((img.pixels(i) & 0xff) >> 6) += 1
+        i += 1
+      }
+      Row(id, img.pixels.length.toLong, h(0), h(1), h(2), h(3))
+    }
       .orderBy("media_id")
   }
 
@@ -285,35 +279,29 @@ object Multimodal {
       StructField("ahash_hi", LongType),
       StructField("ahash_lo", LongType),
       StructField("bits_set", IntegerType)))
-    val enc = RowEncoder.encoderFor(schema)
-    imageTable(s, d)
-      .select(col("media_id"), col("payload"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val img = Ppm.decode(r.getAs[Array[Byte]](1))
-          val small = Ppm.resizeNearest(img, ahashDim, ahashDim)
-          val n = ahashDim * ahashDim
-          val lums = new Array[Long](n)
-          var total = 0L
-          var p = 0
-          while (p < n) {
-            val base = p * 3
-            val l = (small.pixels(base) & 0xff).toLong +
-              (small.pixels(base + 1) & 0xff) + (small.pixels(base + 2) & 0xff)
-            lums(p) = l; total += l; p += 1
-          }
-          var hi = 0L; var lo = 0L; var c = 0
-          p = 0
-          while (p < n) {
-            if (lums(p) * n > total) {
-              c += 1
-              if (p < 32) lo |= 1L << p else hi |= 1L << (p - 32)
-            }
-            p += 1
-          }
-          Row(r.getLong(0), hi, lo, c)
+    decodedImages(s, d, schema) { (id, img) =>
+      val small = Ppm.resizeNearest(img, ahashDim, ahashDim)
+      val n = ahashDim * ahashDim
+      val lums = new Array[Long](n)
+      var total = 0L
+      var p = 0
+      while (p < n) {
+        val base = p * 3
+        val l = (small.pixels(base) & 0xff).toLong +
+          (small.pixels(base + 1) & 0xff) + (small.pixels(base + 2) & 0xff)
+        lums(p) = l; total += l; p += 1
+      }
+      var hi = 0L; var lo = 0L; var c = 0
+      p = 0
+      while (p < n) {
+        if (lums(p) * n > total) {
+          c += 1
+          if (p < 32) lo |= 1L << p else hi |= 1L << (p - 32)
         }
-      }(enc)
+        p += 1
+      }
+      Row(id, hi, lo, c)
+    }
       .orderBy("media_id")
   }
 
@@ -504,16 +492,10 @@ object Multimodal {
       StructField("out_w", IntegerType),
       StructField("out_h", IntegerType),
       StructField("resized_sum", LongType)))
-    val enc = RowEncoder.encoderFor(schema)
-    imageTable(s, d)
-      .select(col("media_id"), col("payload"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val img = Ppm.decode(r.getAs[Array[Byte]](1))
-          val small = Ppm.resizeNearest(img, thumbW, thumbH)
-          Row(r.getLong(0), small.width, small.height, Ppm.pixelSum(small))
-        }
-      }(enc)
+    decodedImages(s, d, schema) { (id, img) =>
+      val small = Ppm.resizeNearest(img, thumbW, thumbH)
+      Row(id, small.width, small.height, Ppm.pixelSum(small))
+    }
       .orderBy("media_id")
   }
 
@@ -676,28 +658,20 @@ object Multimodal {
     * chunk would carry it. Sample count derives from the text byte
     * length ((len mod 1024) + 512) — the generation contract the oracle
     * mirrors in integer arithmetic without touching a byte. */
-  def audioTable(s: SparkSession, d: String): DataFrame = {
-    val enc = RowEncoder.encoderFor(payloadSchema)
-    Tables.documents(s, d)
-      .select(col("doc_id").as("media_id"),
-        length(encode(col("text"), "UTF-8")).cast("int").as("len"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val n = (r.getInt(1) % 1024) + 512
-          val sd = ((id * 131) % pcmMod).toInt
-          val bytes = new Array[Byte](n * 2)
-          var i = 0
-          while (i < n) {
-            val v = (((sd + 7L * i) % pcmMod) - 32768L).toInt
-            bytes(2 * i) = (v & 0xff).toByte
-            bytes(2 * i + 1) = ((v >> 8) & 0xff).toByte
-            i += 1
-          }
-          Row(id, bytes)
-        }
-      }(enc)
-  }
+  def audioTable(s: SparkSession, d: String): DataFrame =
+    synthesized(s, d) { (id, len) =>
+      val n = (len % 1024) + 512
+      val sd = ((id * 131) % pcmMod).toInt
+      val bytes = new Array[Byte](n * 2)
+      var i = 0
+      while (i < n) {
+        val v = (((sd + 7L * i) % pcmMod) - 32768L).toInt
+        bytes(2 * i) = (v & 0xff).toByte
+        bytes(2 * i + 1) = ((v >> 8) & 0xff).toByte
+        i += 1
+      }
+      bytes
+    }
 
   /** AUDIO FRAME CENSUS (driver-graded): per document, the decoded
     * sample count, complete [[audioFrame]]-sample frame count, total

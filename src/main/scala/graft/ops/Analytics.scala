@@ -2541,6 +2541,42 @@ object Analytics {
       |FROM iso, unnest(generate_series(1, len(a))) AS t(i)
       |ORDER BY discount_pct""".stripMargin
 
+  /** Per-`event_type` moments of the events' value in cents: `n`, `sx`
+    * = Σx and `sq` = Σx², exact DECIMAL(38,0) sums. */
+  private def typeCentsCells(s: SparkSession, d: String): DataFrame = {
+    val big = DecimalType(38, 0)
+    val cents = (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
+    Tables.events(s, d)
+      .select(col("event_type"), cents.as("x"))
+      .groupBy("event_type")
+      .agg(count(lit(1)).cast("long").as("n"),
+        sum(col("x").cast(big)).cast(big).as("sx"),
+        sum(col("x").cast(big) * col("x").cast(big)).cast(big).as("sq"))
+  }
+
+  /** `a`: the (`key`, n, sx, sq) group cells in one array sorted by key. */
+  private def packedCells(key: String): Column =
+    sort_array(collect_list(struct(
+      col(key), col("n"), col("sx"), col("sq")))).as("a")
+
+  /** The one-way ANOVA sums over the group cells (`key`, n, sx, sq), in
+    * one row: k groups, n_total, gs = Σsx, gq = Σsq and sg = Σ sx²/n —
+    * the only float terms, folded in key order. */
+  private def oneWaySums(groups: DataFrame, key: String): DataFrame = {
+    val big = DecimalType(38, 0)
+    groups
+      .agg(packedCells(key),
+        count(lit(1)).cast("long").as("k"),
+        sum(col("n")).cast("long").as("n_total"),
+        sum(col("sx")).cast(big).as("gs"),
+        sum(col("sq")).cast(big).as("gq"))
+      .select(col("k"), col("n_total"),
+        expr("""aggregate(a, CAST(0.0 AS DOUBLE),
+                 (acc, e) -> acc + CAST(e.sx * e.sx AS DOUBLE) / e.n)""")
+          .as("sg"),
+        col("gs"), col("gq"))
+  }
+
   /** ONE-WAY ANOVA: does mean event value differ across event types?
     * F = (SSB/(k−1)) / (SSW/(N−k)) over exact-cents power sums.
     *
@@ -2554,27 +2590,7 @@ object Analytics {
     * one-row fold. No window, no join, no shuffle beyond the k-group
     * aggregate. */
   def anovaValueByType(s: SparkSession, d: String): DataFrame = {
-    val big = DecimalType(38, 0)
-    val cents = (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-    val groups = Tables.events(s, d)
-      .select(col("event_type"), cents.as("x"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(col("x").cast(big)).cast(big).as("sx"),
-        sum(col("x").cast(big) * col("x").cast(big)).cast(big).as("sq"))
-    groups
-      .agg(sort_array(collect_list(struct(
-        col("event_type"), col("n"), col("sx"), col("sq")))).as("a"),
-        count(lit(1)).cast("long").as("k"),
-        sum(col("n")).cast("long").as("n_total"),
-        sum(col("sx")).cast(big).as("gs"),
-        sum(col("sq")).cast(big).as("gq"))
-      .select(col("k"), col("n_total"),
-        // Σ S_g²/n_g folded in event_type order (the only float terms)
-        expr("""aggregate(a, CAST(0.0 AS DOUBLE),
-                 (acc, e) -> acc + CAST(e.sx * e.sx AS DOUBLE) / e.n)""")
-          .as("sg"),
-        col("gs"), col("gq"))
+    oneWaySums(typeCentsCells(s, d), "event_type")
       .select(col("k"), col("n_total"),
         round(col("sg") - (col("gs") * col("gs")).cast("double")
           / col("n_total"), 6).as("ssb"),
@@ -2665,18 +2681,7 @@ object Analytics {
       .agg(sum(col("m")).cast("long").as("n"),
         sum(col("dv") * col("m")).cast(big).as("sx"),
         sum(col("dv") * col("dv") * col("m")).cast(big).as("sq"))
-    groups
-      .agg(sort_array(collect_list(struct(
-        col("l_returnflag"), col("n"), col("sx"), col("sq")))).as("a"),
-        count(lit(1)).cast("long").as("k"),
-        sum(col("n")).cast("long").as("n_total"),
-        sum(col("sx")).cast(big).as("gs"),
-        sum(col("sq")).cast(big).as("gq"))
-      .select(col("k"), col("n_total"),
-        expr("""aggregate(a, CAST(0.0 AS DOUBLE),
-                 (acc, e) -> acc + CAST(e.sx * e.sx AS DOUBLE) / e.n)""")
-          .as("sg"),
-        col("gs"), col("gq"))
+    oneWaySums(groups, "l_returnflag")
       .select(col("k"), col("n_total"),
         // NULL guard (collapsed-dimension edge sweep): k = 1 zeroes the
         // between-groups df — NULL on DuckDB, ANSI error here
@@ -2730,20 +2735,13 @@ object Analytics {
     * pair frame is O(k²) with the one-row MSW broadcast. */
   def tukeyHsdPairs(s: SparkSession, d: String): DataFrame = {
     val big = DecimalType(38, 0)
-    val cents = (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-    val groups = Tables.events(s, d)
-      .select(col("event_type"), cents.as("x"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(col("x").cast(big)).cast(big).as("sx"),
-        sum(col("x").cast(big) * col("x").cast(big)).cast(big).as("sq"))
+    val groups = typeCentsCells(s, d)
     // everything downstream of the k-group census happens INSIDE one
     // scalar-aggregate row: MSW from the sorted array fold, pairs by
     // the array-combination expansion (the co-purchase pairing idiom) —
     // no self-join, no broadcast, nothing for a plan linter to doubt
     val packed = groups
-      .agg(sort_array(collect_list(struct(
-        col("event_type"), col("n"), col("sx"), col("sq")))).as("a"),
+      .agg(packedCells("event_type"),
         count(lit(1)).cast("long").as("k"),
         sum(col("n")).cast("long").as("n_total"),
         sum(col("sq")).cast(big).as("gq"))
@@ -4739,6 +4737,73 @@ object Analytics {
   /** Newton iteration count for [[ipwAte]]'s propensity model. */
   val ipwIters = 8
 
+  /** The quantity census behind [[ipwAte]] and [[drAte]], in one row.
+    * Each lineitem is x = its quantity, t = discount ≥ 5% and y =
+    * returned. The row holds n, ntr (treated rows), ts1 and ts0 (treated
+    * and control returns) and `cells`, the (x, cnt, nt, s1, s0) counts
+    * per quantity sorted by x. */
+  private def treatmentCensus(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .select(col("l_quantity").cast("long").as("x"),
+        when(dec(col("l_discount")) * 100 >= 5, 1L).otherwise(0L).as("t"),
+        when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
+      .groupBy("x")
+      .agg(count(lit(1)).cast("long").as("cnt"),
+        sum(col("t")).cast("long").as("nt"),
+        sum(col("t") * col("y")).cast("long").as("s1"),
+        sum((lit(1L) - col("t")) * col("y")).cast("long").as("s0"))
+      .agg(
+        sum(col("cnt")).cast("long").as("n"),
+        sum(col("nt")).cast("long").as("ntr"),
+        sum(col("s1")).cast("long").as("ts1"),
+        sum(col("s0")).cast("long").as("ts0"),
+        sort_array(collect_list(struct(col("x"), col("cnt"), col("nt"),
+          col("s1"), col("s0")))).as("cells"))
+
+  /** SQL text of the fitted propensity e(x) = P(t = 1 | x) of census cell
+    * `c` under the 2-parameter logit coefficients `b`. */
+  private def propensity(b: String): String =
+    s"(1.0 / (1.0 + exp(-($b[0] + $b[1] * CAST(c.x AS DOUBLE)))))"
+
+  /** SQL text of Σ `term` over the census `cells`, each P in `term`
+    * standing for [[propensity]] under `b`. */
+  private def cellSum(term: String, b: String): String =
+    s"""aggregate(cells, CAST(0.0 AS DOUBLE), (acc, c) -> acc + ($term))"""
+      .replace("P", propensity(b))
+
+  /** The propensity model of [[treatmentCensus]]: `k` unrolled Newton
+    * steps of the logit of t on x from β = 0, the
+    * [[logisticRegression]] IRLS census with a 2×2 adjugate. The fold is
+    * WRAPPED in a Column-level empty-census guard (the
+    * logisticRegression `degenerate` precedent) rather than relying on
+    * the fold's det CASE alone: over an AQE-emptied scan the downstream
+    * round(b[0]) extraction was measured to read the fold's INIT
+    * elements instead of the guard's NULLs (empty-orders edge sweep) —
+    * the CaseWhen wrapper is the shape that evaluates correctly, and
+    * DuckDB's empty-list moments give NULL betas there. */
+  private def propensityFit(k: Int): Column = {
+    val sums = Seq(
+      "(CAST(c.nt AS DOUBLE) - CAST(c.cnt AS DOUBLE) * P)",
+      "(CAST(c.nt AS DOUBLE) - CAST(c.cnt AS DOUBLE) * P) * CAST(c.x AS DOUBLE)",
+      "CAST(c.cnt AS DOUBLE) * P * (1.0 - P)",
+      "CAST(c.cnt AS DOUBLE) * P * (1.0 - P) * CAST(c.x AS DOUBLE)",
+      "CAST(c.cnt AS DOUBLE) * P * (1.0 - P) * CAST(c.x AS DOUBLE) * CAST(c.x AS DOUBLE)")
+    val sumsArr = sums.map(t => cellSum(t, "b")).mkString("array(", ",\n", ")")
+    val det = "(s[2] * s[4] - s[3] * s[3])"
+    val d0 = s"(s[4] * s[0] - s[3] * s[1]) / $det"
+    val d1 = s"(s[2] * s[1] - s[3] * s[0]) / $det"
+    when(size(col("cells")) === 0,
+      array(lit(null).cast("double"), lit(null).cast("double")))
+      .otherwise(expr(
+        s"""aggregate(sequence(1, $k),
+           |  array(CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE)),
+           |  (b, t) -> aggregate(array($sumsArr), b,
+           |    (bb, s) -> CASE WHEN $det = 0.0D
+           |      THEN array(CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE))
+           |      ELSE array(bb[0] + $d0, bb[1] + $d1) END))"""
+          .stripMargin))
+  }
+
   /** INVERSE-PROPENSITY-WEIGHTED ATE — the model-based member of the
     * causal battery: [[q: strat_ate]] stratifies on the raw covariate,
     * [[q: cem]] coarsens and matches; IPW fits a PROPENSITY MODEL
@@ -4764,64 +4829,14 @@ object Analytics {
     * Scale: one combinable census shuffle; everything after is O(50)
     * arithmetic. */
   def ipwAte(s: SparkSession, d: String): DataFrame = {
-    val k = ipwIters
-    val cells = Tables.lineitem(s, d)
-      .select(col("l_quantity").cast("long").as("x"),
-        when(dec(col("l_discount")) * 100 >= 5, 1L).otherwise(0L).as("t"),
-        when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
-      .groupBy("x")
-      .agg(count(lit(1)).cast("long").as("cnt"),
-        sum(col("t")).cast("long").as("nt"),
-        sum(col("t") * col("y")).cast("long").as("s1"),
-        sum((lit(1L) - col("t")) * col("y")).cast("long").as("s0"))
-    val packed = cells.agg(
-      sum(col("cnt")).cast("long").as("n"),
-      sum(col("nt")).cast("long").as("ntr"),
-      sum(col("s1")).cast("long").as("ts1"),
-      sum(col("s0")).cast("long").as("ts0"),
-      sort_array(collect_list(struct(col("x"), col("cnt"), col("nt"),
-        col("s1"), col("s0")))).as("cells"))
-    def p(b: String) =
-      s"(1.0 / (1.0 + exp(-($b[0] + $b[1] * CAST(c.x AS DOUBLE)))))"
-    def mom(term: String, b: String) =
-      s"""aggregate(cells, CAST(0.0 AS DOUBLE), (acc, c) -> acc + ($term))"""
-        .replace("P", p(b))
-    val sums = Seq(
-      "(CAST(c.nt AS DOUBLE) - CAST(c.cnt AS DOUBLE) * P)",
-      "(CAST(c.nt AS DOUBLE) - CAST(c.cnt AS DOUBLE) * P) * CAST(c.x AS DOUBLE)",
-      "CAST(c.cnt AS DOUBLE) * P * (1.0 - P)",
-      "CAST(c.cnt AS DOUBLE) * P * (1.0 - P) * CAST(c.x AS DOUBLE)",
-      "CAST(c.cnt AS DOUBLE) * P * (1.0 - P) * CAST(c.x AS DOUBLE) * CAST(c.x AS DOUBLE)")
-    def sumsArr(b: String) =
-      sums.map(t => mom(t, b)).mkString("array(", ",\n", ")")
-    val det = "(s[2] * s[4] - s[3] * s[3])"
-    val d0 = s"(s[4] * s[0] - s[3] * s[1]) / $det"
-    val d1 = s"(s[2] * s[1] - s[3] * s[0]) / $det"
-    // the Newton fold is WRAPPED in a Column-level empty-census guard
-    // (the logisticRegression `degenerate` precedent) rather than
-    // relying on the fold's det CASE alone: over an AQE-emptied scan
-    // the downstream round(b[0]) extraction was measured to read the
-    // fold's INIT elements instead of the guard's NULLs (empty-orders
-    // edge sweep) — the CaseWhen wrapper is the shape that evaluates
-    // correctly, and DuckDB's empty-list moments give NULL betas there
-    val fitted = packed.select(col("n"), col("ntr"), col("ts1"), col("ts0"),
-      col("cells"),
-      when(size(col("cells")) === 0,
-        array(lit(null).cast("double"), lit(null).cast("double")))
-        .otherwise(expr(
-          s"""aggregate(sequence(1, $k),
-             |  array(CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE)),
-             |  (b, t) -> aggregate(array(${sumsArr("b")}), b,
-             |    (bb, s) -> CASE WHEN $det = 0.0D
-             |      THEN array(CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE))
-             |      ELSE array(bb[0] + $d0, bb[1] + $d1) END))"""
-            .stripMargin)).as("b"))
+    val fitted = treatmentCensus(s, d).select(col("n"), col("ntr"),
+      col("ts1"), col("ts0"), col("cells"), propensityFit(ipwIters).as("b"))
     // one-armed-corpus guards (collapsed-dimension edge sweep): with
     // every row treated (or none), the control mean and the Hajek
     // normalizers divide by zero — NULL on DuckDB, ANSI errors here
     val nullD = lit(null).cast("double")
-    val hajekDen1 = expr(mom("CAST(c.nt AS DOUBLE) / P", "b"))
-    val hajekDen0 = expr(mom("CAST(c.cnt - c.nt AS DOUBLE) / (1.0 - P)", "b"))
+    val hajekDen1 = expr(cellSum("CAST(c.nt AS DOUBLE) / P", "b"))
+    val hajekDen0 = expr(cellSum("CAST(c.cnt - c.nt AS DOUBLE) / (1.0 - P)", "b"))
     fitted.select(col("n"), col("ntr").as("n_treated"),
       round(expr("b[0]"), 6).as("beta0"),
       round(expr("b[1]"), 6).as("beta_quantity"),
@@ -4829,13 +4844,13 @@ object Analytics {
         .otherwise(round(col("ts1").cast("double") / col("ntr") -
           col("ts0").cast("double") / (col("n") - col("ntr")), 6))
         .as("naive_diff"),
-      round((expr(mom("CAST(c.s1 AS DOUBLE) / P", "b")).cast("double") -
-        expr(mom("CAST(c.s0 AS DOUBLE) / (1.0 - P)", "b"))) /
+      round((expr(cellSum("CAST(c.s1 AS DOUBLE) / P", "b")).cast("double") -
+        expr(cellSum("CAST(c.s0 AS DOUBLE) / (1.0 - P)", "b"))) /
         col("n").cast("double"), 6).as("ate_ht"),
       when(hajekDen1 === 0d || hajekDen0 === 0d, nullD)
-        .otherwise(round(expr(mom("CAST(c.s1 AS DOUBLE) / P", "b")) /
+        .otherwise(round(expr(cellSum("CAST(c.s1 AS DOUBLE) / P", "b")) /
           hajekDen1 -
-          expr(mom("CAST(c.s0 AS DOUBLE) / (1.0 - P)", "b")) /
+          expr(cellSum("CAST(c.s0 AS DOUBLE) / (1.0 - P)", "b")) /
           hajekDen0, 6))
         .as("ate_hajek"))
   }
@@ -4920,14 +4935,7 @@ object Analytics {
     * Scale: one map-side-combinable aggregate over facts → k = 5 rows →
     * one-row folds. */
   def welchAnova(s: SparkSession, d: String): DataFrame = {
-    val big = DecimalType(38, 0)
-    val cents = (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-    val groups = Tables.events(s, d)
-      .select(col("event_type"), cents.as("x"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(col("x").cast(big)).cast(big).as("sx"),
-        sum(col("x").cast(big) * col("x").cast(big)).cast(big).as("sq"))
+    val groups = typeCentsCells(s, d)
     // the only float per group: s² as ONE decimal→double conversion
     val s2e = """(CAST(e.n * e.sq - e.sx * e.sx AS DOUBLE)
       / (CAST(e.n AS DOUBLE) * (CAST(e.n AS DOUBLE) - 1.0)))"""
@@ -4947,8 +4955,7 @@ object Analytics {
       THEN CAST(NULL AS DOUBLE) ELSE (CAST(e.n AS DOUBLE) / $s2e) END)"""
     val me = "(CAST(e.sx AS DOUBLE) / CAST(e.n AS DOUBLE))"
     val packed = groups
-      .agg(sort_array(collect_list(struct(
-        col("event_type"), col("n"), col("sx"), col("sq")))).as("a"),
+      .agg(packedCells("event_type"),
         count(lit(1)).cast("long").as("k"),
         sum(col("n")).cast("long").as("n_total"))
       .select(col("a"), col("k"), col("n_total"),
@@ -5055,17 +5062,7 @@ object Analytics {
     *
     * Scale: one combinable census over facts → O(k²) arithmetic. */
   def gamesHowellPairs(s: SparkSession, d: String): DataFrame = {
-    val big = DecimalType(38, 0)
-    val cents = (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-    val groups = Tables.events(s, d)
-      .select(col("event_type"), cents.as("x"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(col("x").cast(big)).cast(big).as("sx"),
-        sum(col("x").cast(big) * col("x").cast(big)).cast(big).as("sq"))
-    val packed = groups
-      .agg(sort_array(collect_list(struct(
-        col("event_type"), col("n"), col("sx"), col("sq")))).as("a"))
+    val packed = typeCentsCells(s, d).agg(packedCells("event_type"))
     // per-side variance-over-n as one textual macro (va = s_a²/n_a)
     def von(p: String) =
       s"""(CAST(p.n$p * p.sq$p - p.sx$p * p.sx$p AS DOUBLE)
@@ -5246,37 +5243,6 @@ object Analytics {
     * Scale: one combinable census shuffle, then O(50) arithmetic. */
   def drAte(s: SparkSession, d: String): DataFrame = {
     val k = drIters
-    val cells = Tables.lineitem(s, d)
-      .select(col("l_quantity").cast("long").as("x"),
-        when(dec(col("l_discount")) * 100 >= 5, 1L).otherwise(0L).as("t"),
-        when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
-      .groupBy("x")
-      .agg(count(lit(1)).cast("long").as("cnt"),
-        sum(col("t")).cast("long").as("nt"),
-        sum(col("t") * col("y")).cast("long").as("s1"),
-        sum((lit(1L) - col("t")) * col("y")).cast("long").as("s0"))
-    val packed = cells.agg(
-      sum(col("cnt")).cast("long").as("n"),
-      sum(col("nt")).cast("long").as("ntr"),
-      sort_array(collect_list(struct(col("x"), col("cnt"), col("nt"),
-        col("s1"), col("s0")))).as("cells"))
-    // ---- propensity fit: P(t=1 | x), 2-param logit (ipwAte verbatim)
-    def pe(b: String) =
-      s"(1.0 / (1.0 + exp(-($b[0] + $b[1] * CAST(c.x AS DOUBLE)))))"
-    def momE(term: String, b: String) =
-      s"""aggregate(cells, CAST(0.0 AS DOUBLE), (acc, c) -> acc + ($term))"""
-        .replace("P", pe(b))
-    val sumsE = Seq(
-      "(CAST(c.nt AS DOUBLE) - CAST(c.cnt AS DOUBLE) * P)",
-      "(CAST(c.nt AS DOUBLE) - CAST(c.cnt AS DOUBLE) * P) * CAST(c.x AS DOUBLE)",
-      "CAST(c.cnt AS DOUBLE) * P * (1.0 - P)",
-      "CAST(c.cnt AS DOUBLE) * P * (1.0 - P) * CAST(c.x AS DOUBLE)",
-      "CAST(c.cnt AS DOUBLE) * P * (1.0 - P) * CAST(c.x AS DOUBLE) * CAST(c.x AS DOUBLE)")
-    def sumsArrE(b: String) =
-      sumsE.map(t => momE(t, b)).mkString("array(", ",\n", ")")
-    val detE = "(s[2] * s[4] - s[3] * s[3])"
-    val d0E = s"(s[4] * s[0] - s[3] * s[1]) / $detE"
-    val d1E = s"(s[2] * s[1] - s[3] * s[0]) / $detE"
     // ---- outcome fit: P(y=1 | t, x), 3-param logit; each census cell
     // contributes its t=0 cell (cnt−nt, s0) then its t=1 cell (nt, s1)
     // in that fixed order, so the moment fold is order-pinned
@@ -5324,19 +5290,8 @@ object Analytics {
     // singular-design guards (collapsed-dimension edge sweep): a
     // one-armed treatment makes the outcome Hessian singular (det = 0
     // — NULL on DuckDB, ANSI error here); mirrored for both fits
-    // empty-census wrapper on the propensity fold: same AQE-emptied
-    // extraction hazard (and DuckDB NULL mirror) as ipwAte — see there
-    val fitted = packed.select(col("n"), col("ntr"), col("cells"),
-      when(size(col("cells")) === 0,
-        array(lit(null).cast("double"), lit(null).cast("double")))
-        .otherwise(expr(
-          s"""aggregate(sequence(1, $k),
-             |  array(CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE)),
-             |  (b, t) -> aggregate(array(${sumsArrE("b")}), b,
-             |    (bb, s) -> CASE WHEN $detE = 0.0D
-             |      THEN array(CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE))
-             |      ELSE array(bb[0] + $d0E, bb[1] + $d1E) END))"""
-            .stripMargin)).as("be"),
+    val fitted = treatmentCensus(s, d).select(col("n"), col("ntr"),
+      col("cells"), propensityFit(k).as("be"),
       // exact-integer one-armed guard: with ntr = 0 or ntr = n the
       // treatment indicator is constant and the outcome design is
       // singular — decided on the INTEGER counts (identical on both
@@ -5359,7 +5314,7 @@ object Analytics {
     // AIPW fold: cnt·(m1−m0) + (s1 − nt·m1)/e − (s0 − (cnt−nt)·m0)/(1−e)
     val mu1 = m1("bo", "1.0")
     val mu0 = m1("bo", "0.0")
-    val eprop = pe("be")
+    val eprop = propensity("be")
     val aipw =
       s"""aggregate(cells, CAST(0.0 AS DOUBLE), (acc, c) -> acc
          |  + CAST(c.cnt AS DOUBLE) * ($mu1 - $mu0)

@@ -22,6 +22,56 @@ object Behavior {
 
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
+  /** A user's md5 bucket out of `n`: the first 15 hex chars of
+    * md5(user_id as a decimal string), parsed base 16, mod `n` (a BIGINT).
+    * The oracles spell the same rule in SQL; the streaming replicas are
+    * `EventStreams.variantHash` (n = 2) and `aaHash` (n = 16). */
+  private[graft] def userBucket(n: Int): Column =
+    conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
+      .cast("long") % n
+
+  /** A user's experiment arm, 0 or 1: the 50/50 split every A/B readout
+    * here shares. */
+  private[graft] def arm: Column = userBucket(2).cast("int")
+
+  /** One row per purchasing user: `cents`, the user's summed purchase
+    * value in cents (each value cast to LONG cents first). */
+  private def purchaseCents(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .filter(col("event_type") === "purchase")
+      .groupBy("user_id")
+      .agg(sum((dec(col("value")) * 100).cast("long")).as("cents"))
+
+  /** Per-`variant` moment cells (`n`, `sx`, `sq`) spread into one row:
+    * n0, sx0, sq0, n1, sx1, sq1. */
+  private def armMoments: Seq[Column] =
+    for (v <- 0 to 1; c <- Seq("n", "sx", "sq"))
+      yield max(when(col("variant") === v, col(c))).as(s"$c$v")
+
+  /** `conv`: 1 when the group holds a purchase, else 0. */
+  private def converted: Column =
+    max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv")
+
+  /** The 2×2 `variant` × `conv` count table: a and b count the treated
+    * (variant 1) converters and non-converters, c and d the control's. */
+  private def conversionTable: Seq[Column] =
+    Seq((1, 1, "a"), (1, 0, "b"), (0, 1, "c"), (0, 0, "d")).map {
+      case (v, c, name) =>
+        sum(when(col("variant") === v && col("conv") === c, 1L).otherwise(0L))
+          .as(name)
+    }
+
+  /** A cell's mean from its sum and count. */
+  private def cellMean(sx: Column, n: Column): Column =
+    sx.cast("double") / n.cast("double")
+
+  /** The variance of a cell's mean, (Σx² − (Σx)²/n)/(n − 1)/n, with the
+    * n − 1 floored at 1 so the division is total under ANSI. */
+  private def cellVar(sq: Column, sx: Column, n: Column): Column =
+    (sq.cast("double") - sx.cast("double") * sx.cast("double") /
+      n.cast("double")) /
+      greatest(n.cast("double") - 1.0, lit(1.0)) / n.cast("double")
+
   /** Strict first-occurrence funnel view → click → purchase: a user
     * converts a step only if the step's first occurrence happens after the
     * previous step's first occurrence (the standard "ordered funnel"
@@ -142,6 +192,18 @@ object Behavior {
       |FROM paths GROUP BY path
       |ORDER BY n_users DESC, path LIMIT 20""".stripMargin
 
+  /** The count `n` of each consecutive (`prev_type` → `next_type`)
+    * event pair inside a user's timeline (ordered by ts, event_id). */
+  private def transitionPairs(s: SparkSession, d: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+    Tables.events(s, d)
+      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
+      .withColumn("prev_type", lag("event_type", 1).over(w))
+      .filter(col("prev_type").isNotNull)
+      .groupBy(col("prev_type"), col("event_type").as("next_type"))
+      .agg(count("*").as("n"))
+  }
+
   /** First-order Markov transition matrix over event types: for every
     * consecutive (prev → next) pair inside a user's timeline, the count
     * and the transition probability P(next | prev). The
@@ -153,13 +215,7 @@ object Behavior {
     * events. Counts are exact longs; the probability is one long/long
     * IEEE division, portable. */
   def transitionMatrix(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val pairs = Tables.events(s, d)
-      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      .withColumn("prev_type", lag("event_type", 1).over(w))
-      .filter(col("prev_type").isNotNull)
-      .groupBy(col("prev_type"), col("event_type").as("next_type"))
-      .agg(count("*").as("n"))
+    val pairs = transitionPairs(s, d)
     pairs.select(col("prev_type"), col("next_type"), col("n"),
       (col("n").cast("double") /
         sum(col("n")).over(Window.partitionBy("prev_type"))).as("p"))
@@ -199,13 +255,7 @@ object Behavior {
     * divisions and the final π rounds 6. The oracle unrolls the same
     * iterations as chained CTEs with the identical expression text. */
   def markovStationary(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val pairs = Tables.events(s, d)
-      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      .withColumn("prev_type", lag("event_type", 1).over(w))
-      .filter(col("prev_type").isNotNull)
-      .groupBy(col("prev_type"), col("event_type").as("next_type"))
-      .agg(count("*").as("n"))
+    val pairs = transitionPairs(s, d)
     // one wide row: transition counts + per-source row sums
     val cells = eventTypes.flatMap { i =>
       eventTypes.map { j =>
@@ -489,6 +539,21 @@ object Behavior {
     * this date is covariate, the rest is the experiment metric. */
   val cupedSplitDate = "2024-01-16"
 
+  /** One row per user: `variant` (the [[arm]]) and the user's purchase
+    * revenue in cents before (`x`, the CUPED covariate) and from
+    * (`y`) [[cupedSplitDate]] — exact decimal sums cast to LONG. */
+  private def cupedUsers(s: SparkSession, d: String): DataFrame = {
+    val split = lit(cupedSplitDate).cast("timestamp")
+    Tables.events(s, d)
+      .groupBy("user_id")
+      .agg(
+        (sum(when(col("event_type") === "purchase" && col("ts") < split,
+          dec(col("value"))).otherwise(dec(lit(0)))) * 100).cast("long").as("x"),
+        (sum(when(col("event_type") === "purchase" && col("ts") >= split,
+          dec(col("value"))).otherwise(dec(lit(0)))) * 100).cast("long").as("y"))
+      .select(arm.as("variant"), col("x"), col("y"))
+  }
+
   /** CUPED variance reduction — the experimentation-platform workhorse
     * on top of [[abTestRevenue]]'s assignment: adjust each user's
     * in-experiment revenue y by their PRE-period revenue x,
@@ -509,18 +574,7 @@ object Behavior {
     import org.apache.spark.sql.types.DecimalType
     val big = DecimalType(38, 0)
     def d0(c: Column) = c.cast(big)
-    val split = lit(cupedSplitDate).cast("timestamp")
-    val perUser = Tables.events(s, d)
-      .groupBy("user_id")
-      .agg(
-        (sum(when(col("event_type") === "purchase" && col("ts") < split,
-          dec(col("value"))).otherwise(dec(lit(0)))) * 100).cast("long").as("x"),
-        (sum(when(col("event_type") === "purchase" && col("ts") >= split,
-          dec(col("value"))).otherwise(dec(lit(0)))) * 100).cast("long").as("y"))
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("variant"),
-        col("x"), col("y"))
+    val perUser = cupedUsers(s, d)
     val byVariant = perUser.groupBy("variant")
       .agg(count(lit(1)).as("n"),
         sum(d0(col("x"))).as("sx"), sum(d0(col("y"))).as("sy"))
@@ -634,18 +688,7 @@ object Behavior {
     import org.apache.spark.sql.types.DecimalType
     val big = DecimalType(38, 0)
     def d0(c: Column) = c.cast(big)
-    val split = lit(cupedSplitDate).cast("timestamp")
-    val perUser = Tables.events(s, d)
-      .groupBy("user_id")
-      .agg(
-        (sum(when(col("event_type") === "purchase" && col("ts") < split,
-          dec(col("value"))).otherwise(dec(lit(0)))) * 100).cast("long").as("x"),
-        (sum(when(col("event_type") === "purchase" && col("ts") >= split,
-          dec(col("value"))).otherwise(dec(lit(0)))) * 100).cast("long").as("y"))
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("variant"),
-        col("x"), col("y"))
+    val perUser = cupedUsers(s, d)
     val sums = perUser.agg(
       count(lit(1)).as("n"),
       sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_a"),
@@ -754,10 +797,7 @@ object Behavior {
       .groupBy("user_id")
       .agg(sum(when(col("event_type") === "purchase",
         dec(col("value"))).otherwise(dec(lit(0)))).as("revenue"))
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("variant"),
-        col("revenue"))
+      .select(arm.as("variant"), col("revenue"))
     val wide = perUser
       .groupBy("variant")
       .agg(count(lit(1)).as("n"),
@@ -1260,32 +1300,15 @@ object Behavior {
     * small-arm-gated); Δ, se, both z's are one pinned double formula
     * each. Scale: one user aggregate, O(1) output. */
   def tostEquivalence(s: SparkSession, d: String): DataFrame = {
-    val cells = Tables.events(s, d)
-      .filter(col("event_type") === "purchase")
-      .groupBy("user_id")
-      .agg(sum((dec(col("value")) * 100).cast("long")).as("cents"))
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("variant"),
-        col("cents"))
+    val cells = purchaseCents(s, d)
+      .select(arm.as("variant"), col("cents"))
       .groupBy("variant")
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sx"),
         sum(col("cents") * col("cents")).as("sq"))
-    val wide = cells.agg(
-      max(when(col("variant") === 0, col("n"))).as("n0"),
-      max(when(col("variant") === 0, col("sx"))).as("sx0"),
-      max(when(col("variant") === 0, col("sq"))).as("sq0"),
-      max(when(col("variant") === 1, col("n"))).as("n1"),
-      max(when(col("variant") === 1, col("sx"))).as("sx1"),
-      max(when(col("variant") === 1, col("sq"))).as("sq1"))
-    def m(sx: Column, n: Column) = sx.cast("double") / n.cast("double")
-    def varm(sq: Column, sx: Column, n: Column) =
-      (sq.cast("double") - sx.cast("double") * sx.cast("double") /
-        n.cast("double")) /
-        greatest(n.cast("double") - 1.0, lit(1.0)) / n.cast("double")
-    val diff = m(col("sx1"), col("n1")) - m(col("sx0"), col("n0"))
-    val se = sqrt(varm(col("sq1"), col("sx1"), col("n1")) +
-      varm(col("sq0"), col("sx0"), col("n0")))
+    val wide = cells.agg(armMoments.head, armMoments.tail: _*)
+    val diff = cellMean(col("sx1"), col("n1")) - cellMean(col("sx0"), col("n0"))
+    val se = sqrt(cellVar(col("sq1"), col("sx1"), col("n1")) +
+      cellVar(col("sq0"), col("sx0"), col("n0")))
     val z1 = (diff + tostMarginCents) / se
     val z2 = (lit(tostMarginCents) - diff) / se
     val crit = 1.6448536269514722
@@ -1444,14 +1467,8 @@ object Behavior {
     * one user aggregate, two percentile_disc aggregates over the
     * O(users) frame, O(9) output. */
   def quantileTreatmentEffects(s: SparkSession, d: String): DataFrame = {
-    val perUser = Tables.events(s, d)
-      .filter(col("event_type") === "purchase")
-      .groupBy("user_id")
-      .agg(sum((dec(col("value")) * 100).cast("long")).as("cents"))
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("variant"),
-        col("cents"))
+    val perUser = purchaseCents(s, d)
+      .select(arm.as("variant"), col("cents"))
     val deciles = (1 to 9).map(_ / 10.0)
     val wide = perUser.groupBy("variant").agg(
       count(lit(1)).as("n"),
@@ -1531,10 +1548,7 @@ object Behavior {
     * K×2 cells map-side, so the shuffle carries O(K) rows per
     * partition. K is fixed by the analyst, not the data. */
   def permutationTest(s: SparkSession, d: String): DataFrame = {
-    val perUser = Tables.events(s, d)
-      .filter(col("event_type") === "purchase")
-      .groupBy("user_id")
-      .agg(sum((dec(col("value")) * 100).cast("long")).as("cents"))
+    val perUser = purchaseCents(s, d)
       .select(col("user_id").cast("string").as("u"), col("cents"))
       .pin()
     def diffExpr(n1: Column, s1: Column, n0: Column, s0: Column) =
@@ -1635,40 +1649,23 @@ object Behavior {
     * the 1.96 compare sees identical doubles on both engines. Scale:
     * one user aggregate, then O(16) cells. */
   def aaCalibration(s: SparkSession, d: String): DataFrame = {
-    val perUser = Tables.events(s, d)
-      .filter(col("event_type") === "purchase")
-      .groupBy("user_id")
-      .agg(sum((dec(col("value")) * 100).cast("long")).as("cents"))
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 16).as("h"),
-        col("cents"))
+    val perUser = purchaseCents(s, d)
+      .select(userBucket(16).as("h"), col("cents"))
       .select((col("h") % 8).as("exp_id"), expr("h div 8").as("variant"),
         col("cents"))
     val cells = perUser.groupBy("exp_id", "variant")
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sx"),
         sum(col("cents") * col("cents")).as("sq"))
-    val wide = cells.groupBy("exp_id").agg(
-      max(when(col("variant") === 0, col("n"))).as("n0"),
-      max(when(col("variant") === 0, col("sx"))).as("sx0"),
-      max(when(col("variant") === 0, col("sq"))).as("sq0"),
-      max(when(col("variant") === 1, col("n"))).as("n1"),
-      max(when(col("variant") === 1, col("sx"))).as("sx1"),
-      max(when(col("variant") === 1, col("sq"))).as("sq1"))
-    def m(sx: Column, n: Column) = sx.cast("double") / n.cast("double")
-    // divisions TOTAL (ANSI raises on double/0 in Spark 4) — the n = 1
-    // branch is unread because z is gated on both arms having n >= 2
-    def varm(sq: Column, sx: Column, n: Column) =
-      (sq.cast("double") - sx.cast("double") * sx.cast("double") /
-        n.cast("double")) /
-        greatest(n.cast("double") - 1.0, lit(1.0)) / n.cast("double")
-    val zRaw = (m(col("sx1"), col("n1")) - m(col("sx0"), col("n0"))) /
-      sqrt(varm(col("sq1"), col("sx1"), col("n1")) +
-        varm(col("sq0"), col("sx0"), col("n0")))
+    val wide = cells.groupBy("exp_id")
+      .agg(armMoments.head, armMoments.tail: _*)
+    // cellVar's n = 1 branch is unread: z is gated on both arms having n >= 2
+    val zRaw = (cellMean(col("sx1"), col("n1")) - cellMean(col("sx0"), col("n0"))) /
+      sqrt(cellVar(col("sq1"), col("sx1"), col("n1")) +
+        cellVar(col("sq0"), col("sx0"), col("n0")))
     val z = when(col("n0") >= 2 && col("n1") >= 2, zRaw)
     wide.select(col("exp_id"), col("n0"), col("n1"),
-      round(m(col("sx0"), col("n0")), 6).as("mean0_cents"),
-      round(m(col("sx1"), col("n1")), 6).as("mean1_cents"),
+      round(cellMean(col("sx0"), col("n0")), 6).as("mean0_cents"),
+      round(cellMean(col("sx1"), col("n1")), 6).as("mean1_cents"),
       round(z, 6).as("z_stat"),
       coalesce(abs(z) > 1.959963984540054, lit(false)).as("false_positive"))
   }
@@ -1783,10 +1780,7 @@ object Behavior {
   private def variantValueCensusBuild(s: SparkSession, d: String): DataFrame = {
     val obs = Tables.events(s, d)
       .filter(col("event_type") === "purchase")
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("variant"),
-        (dec(col("value")) * 100).cast("long").as("v"))
+      .select(arm.as("variant"), (dec(col("value")) * 100).cast("long").as("v"))
     val byValue = obs.groupBy("v").agg(
       count(lit(1)).as("t"),
       sum(when(col("variant") === 0, 1L).otherwise(0L)).as("t0"),
@@ -2390,6 +2384,78 @@ object Behavior {
       |    ELSE 'large' END AS magnitude
       |FROM stat""".stripMargin
 
+  /** One row per signed-up user for the signup → first-purchase
+    * survival queries: arm `g`, `dur_h` and `converted`. Time origin is
+    * the user's first signup; the event is the first purchase at or
+    * after it (`converted`), and a user without one is censored at the
+    * study close (the last event's ts). `dur_h` is whole hours. */
+  private def survivalUsers(s: SparkSession, d: String): DataFrame = {
+    val ev = Tables.events(s, d)
+    val perUser = ev.groupBy(col("user_id"))
+      .agg(
+        min(when(col("event_type") === "signup", col("ts"))).as("t0"),
+        min(when(col("event_type") === "purchase", col("ts"))).as("tp"))
+      .filter(col("t0").isNotNull)
+      .select(arm.as("g"), col("t0"), col("tp"))
+    val studyEnd = ev.agg(max(col("ts")).as("t_end"))
+    perUser.crossJoin(broadcast(studyEnd))
+      .select(col("g"),
+        when(col("tp").isNotNull && col("tp") >= col("t0"),
+          (unix_timestamp(col("tp")) - unix_timestamp(col("t0"))) / 3600L)
+          .otherwise(
+            (unix_timestamp(col("t_end")) - unix_timestamp(col("t0"))) / 3600L)
+          .cast("long").as("dur_h"),
+        (col("tp").isNotNull && col("tp") >= col("t0")).as("converted"))
+  }
+
+  /** Running frame in `dur_h` order over a one-row-per-hour census. */
+  private def hourCum =
+    Window.orderBy(col("dur_h"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** The pooled survival census, one row per distinct `dur_h`: events
+    * `d` and censorings `c`. */
+  private def hourCensus(s: SparkSession, d: String): DataFrame =
+    survivalUsers(s, d).groupBy(col("dur_h"))
+      .agg(
+        sum(when(col("converted"), 1L).otherwise(0L)).as("d"),
+        sum(when(col("converted"), 0L).otherwise(1L)).as("c"))
+
+  /** `n_risk` over [[hourCensus]]: the users still at risk at the start
+    * of the hour (everyone minus the earlier hours' d + c). */
+  private def nRisk: Column = {
+    val wAll = Window.rowsBetween(
+      Window.unboundedPreceding, Window.unboundedFollowing)
+    (sum(col("d") + col("c")).over(wAll) -
+      sum(col("d") + col("c")).over(hourCum) + col("d") + col("c"))
+      .cast("long").as("n_risk")
+  }
+
+  /** The per-arm survival census on a DENSE hour × arm grid, so each
+    * arm's at-risk count is defined at every observed hour: `dur_h`,
+    * `g`, events `d` and `nr`, the arm's users still at risk. */
+  private def armAtRisk(durations: DataFrame): DataFrame = {
+    val byCell = durations.groupBy(col("dur_h"), col("g"))
+      .agg(sum(when(col("converted"), 1L).otherwise(0L)).as("d"),
+        sum(when(col("converted"), 0L).otherwise(1L)).as("c"))
+    val arms = durations.sparkSession.range(0, 2)
+      .select(col("id").cast("int").as("g"))
+    val grid = byCell.select(col("dur_h")).distinct()
+      .crossJoin(broadcast(arms))
+      .join(byCell, Seq("dur_h", "g"), "left")
+      .select(col("dur_h"), col("g"),
+        coalesce(col("d"), lit(0L)).as("d"),
+        coalesce(col("c"), lit(0L)).as("c"))
+    val wCumG = Window.partitionBy("g").orderBy("dur_h")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wAllG = Window.partitionBy("g").rowsBetween(
+      Window.unboundedPreceding, Window.unboundedFollowing)
+    grid.select(col("dur_h"), col("g"), col("d"),
+      (sum(col("d") + col("c")).over(wAllG) -
+        sum(col("d") + col("c")).over(wCumG) + col("d") + col("c"))
+        .cast("long").as("nr"))
+  }
+
   /** LOG-RANK TEST — the two-group survival comparison completing the
     * [[kaplanMeier]]/[[nelsonAalen]] family: does time-to-first-purchase
     * differ between the hash-assigned arms? At every event time t,
@@ -2408,44 +2474,8 @@ object Behavior {
     * 2) — calendar-bounded, not data-bounded; the windows ride the
     * O(hours) aggregate (the [[kaplanMeier]] advisory class). */
   def logRank(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val perUser = ev.groupBy(col("user_id"))
-      .agg(
-        min(when(col("event_type") === "signup", col("ts"))).as("t0"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("tp"))
-      .filter(col("t0").isNotNull)
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("g"),
-        col("t0"), col("tp"))
-    val studyEnd = ev.agg(max(col("ts")).as("t_end"))
-    val durations = perUser.crossJoin(broadcast(studyEnd))
-      .select(col("g"),
-        when(col("tp").isNotNull && col("tp") >= col("t0"),
-          (unix_timestamp(col("tp")) - unix_timestamp(col("t0"))) / 3600L)
-          .otherwise(
-            (unix_timestamp(col("t_end")) - unix_timestamp(col("t0"))) / 3600L)
-          .cast("long").as("dur_h"),
-        (col("tp").isNotNull && col("tp") >= col("t0")).as("converted"))
-    val byCell = durations.groupBy(col("dur_h"), col("g"))
-      .agg(sum(when(col("converted"), 1L).otherwise(0L)).as("d"),
-        sum(when(col("converted"), 0L).otherwise(1L)).as("c"))
-    // dense grid: every observed time × both arms, so per-arm at-risk
-    // windows are defined at every time
-    val grid = byCell.select(col("dur_h")).distinct()
-      .crossJoin(broadcast(s.range(0, 2).select(col("id").cast("int").as("g"))))
-      .join(byCell, Seq("dur_h", "g"), "left")
-      .select(col("dur_h"), col("g"),
-        coalesce(col("d"), lit(0L)).as("d"),
-        coalesce(col("c"), lit(0L)).as("c"))
-    val wCumG = Window.partitionBy("g").orderBy("dur_h")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAllG = Window.partitionBy("g").rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    val atRisk = grid.select(col("dur_h"), col("g"), col("d"),
-      (sum(col("d") + col("c")).over(wAllG) -
-        sum(col("d") + col("c")).over(wCumG) + col("d") + col("c"))
-        .cast("long").as("nr"))
+    val durations = survivalUsers(s, d)
+    val atRisk = armAtRisk(durations)
     val wide = atRisk.groupBy("dur_h")
       .agg(sum(when(col("g") === 1, col("d")).otherwise(0L)).as("d1"),
         sum(when(col("g") === 0, col("d")).otherwise(0L)).as("d0"),
@@ -2582,10 +2612,7 @@ object Behavior {
           (dec(col("value")) * 100).cast("long")).otherwise(0L)).as("y"),
         sum(when(col("event_type") =!= "purchase", 1L).otherwise(0L))
           .as("acts"))
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("g"),
-        col("y"), least(lit(4L), expr("acts div 5")).as("st"))
+      .select(arm.as("g"), col("y"), least(lit(4L), expr("acts div 5")).as("st"))
     val cells = perUser.groupBy("st").agg(
       sum(when(col("g") === 1, 1L).otherwise(0L)).as("n1"),
       sum(when(col("g") === 0, 1L).otherwise(0L)).as("n0"),
@@ -2942,8 +2969,7 @@ object Behavior {
   def sampleRatioCheck(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .select(col("user_id")).distinct()
-      .select((conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % 2).cast("int").as("variant"))
+      .select(arm.as("variant"))
       .agg(
         sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_a"),
         sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_b"))
@@ -2995,38 +3021,11 @@ object Behavior {
     * each term one correctly-rounded double op; output rounds to 6
     * places (the [[graft.text.TextAnalysis]] log-function contract). */
   def kaplanMeier(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val perUser = ev.groupBy(col("user_id"))
-      .agg(
-        min(when(col("event_type") === "signup", col("ts"))).as("t0"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("tp"))
-      .filter(col("t0").isNotNull)
-    val studyEnd = ev.agg(max(col("ts")).as("t_end"))
-    val durations = perUser.crossJoin(broadcast(studyEnd))
-      .select(
-        when(col("tp").isNotNull && col("tp") >= col("t0"),
-          (unix_timestamp(col("tp")) - unix_timestamp(col("t0"))) / 3600L)
-          .otherwise(
-            (unix_timestamp(col("t_end")) - unix_timestamp(col("t0"))) / 3600L)
-          .cast("long").as("dur_h"),
-        (col("tp").isNotNull && col("tp") >= col("t0")).as("converted"))
-    val byHour = durations.groupBy(col("dur_h"))
-      .agg(
-        sum(when(col("converted"), 1L).otherwise(0L)).as("d"),
-        sum(when(col("converted"), 0L).otherwise(1L)).as("c"))
-    val wCum = Window.orderBy(col("dur_h"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    byHour
-      .select(col("dur_h"), col("d"), col("c"),
-        (sum(col("d") + col("c")).over(wAll) -
-          sum(col("d") + col("c")).over(wCum) + col("d") + col("c"))
-          .cast("long").as("n_risk"))
+    hourCensus(s, d).select(col("dur_h"), col("d"), col("c"), nRisk)
       .withColumn("survival",
         round(exp(sum(
           log(lit(1.0) - col("d").cast("double") / col("n_risk").cast("double")))
-          .over(wCum)), 6))
+          .over(hourCum)), 6))
       .filter(col("d") > 0)
       .select(col("dur_h"), col("n_risk"), col("d").as("n_events"),
         col("c").as("n_censored"), col("survival"))
@@ -3212,8 +3211,7 @@ object Behavior {
     val cents = (dec(col("value")) * 100).cast("long")
     val cells = Tables.events(s, d)
       .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("variant"),
+        arm.as("variant"),
         (col("ts") >= lit("2024-01-16").cast("timestamp")).as("p2"),
         cents.as("x"))
       .groupBy("variant", "p2")
@@ -3312,10 +3310,7 @@ object Behavior {
         max(when(col("event_type") === "purchase" &&
           (dec(col("value")) * 100).cast("long") >= 15000L, 1L)
           .otherwise(0L)).as("conv"))
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("variant"),
-        col("wk0"), col("conv"))
+      .select(arm.as("variant"), col("wk0"), col("conv"))
     // looks = the first 4 CALENDAR weeks of the event stream (every
     // user joins in week 1 on this dense corpus, so first-seen weeks
     // would collapse to one look)
@@ -3406,21 +3401,9 @@ object Behavior {
   def oddsRatioConversion(s: SparkSession, d: String): DataFrame = {
     val perUser = Tables.events(s, d)
       .groupBy("user_id")
-      .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-        .as("conv"))
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("variant"),
-        col("conv"))
-    val cells = perUser.agg(
-      sum(when(col("variant") === 1 && col("conv") === 1, 1L).otherwise(0L))
-        .as("a"),
-      sum(when(col("variant") === 1 && col("conv") === 0, 1L).otherwise(0L))
-        .as("b"),
-      sum(when(col("variant") === 0 && col("conv") === 1, 1L).otherwise(0L))
-        .as("c"),
-      sum(when(col("variant") === 0 && col("conv") === 0, 1L).otherwise(0L))
-        .as("d"))
+      .agg(converted)
+      .select(arm.as("variant"), col("conv"))
+    val cells = perUser.agg(conversionTable.head, conversionTable.tail: _*)
     // Haldane–Anscombe +0.5 on every cell: the standard zero-cell
     // correction, and what keeps the division total under ANSI (at this
     // corpus nearly every user converts, so a non-converter cell CAN be
@@ -3625,21 +3608,10 @@ object Behavior {
     val perUserWeek = Tables.events(s, d)
       .groupBy(date_trunc("week", col("ts")).cast("date").as("wk"),
         col("user_id"))
-      .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-        .as("conv"))
-      .select(col("wk"),
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("variant"),
-        col("conv"))
-    val cells = perUserWeek.groupBy("wk").agg(
-      sum(when(col("variant") === 1 && col("conv") === 1, 1L).otherwise(0L))
-        .as("a"),
-      sum(when(col("variant") === 1 && col("conv") === 0, 1L).otherwise(0L))
-        .as("b"),
-      sum(when(col("variant") === 0 && col("conv") === 1, 1L).otherwise(0L))
-        .as("c"),
-      sum(when(col("variant") === 0 && col("conv") === 0, 1L).otherwise(0L))
-        .as("d"))
+      .agg(converted)
+      .select(col("wk"), arm.as("variant"), col("conv"))
+    val cells = perUserWeek.groupBy("wk")
+      .agg(conversionTable.head, conversionTable.tail: _*)
     val packed = cells.agg(
       count(lit(1)).cast("long").as("k"),
       sort_array(collect_list(struct(col("wk"), col("a"), col("b"),
@@ -3951,41 +3923,14 @@ object Behavior {
     * Scale: one user-keyed aggregate over facts, then O(distinct
     * hours) windows — the [[kaplanMeier]] class. */
   def nelsonAalen(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val perUser = ev.groupBy(col("user_id"))
-      .agg(
-        min(when(col("event_type") === "signup", col("ts"))).as("t0"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("tp"))
-      .filter(col("t0").isNotNull)
-    val studyEnd = ev.agg(max(col("ts")).as("t_end"))
-    val durations = perUser.crossJoin(broadcast(studyEnd))
-      .select(
-        when(col("tp").isNotNull && col("tp") >= col("t0"),
-          (unix_timestamp(col("tp")) - unix_timestamp(col("t0"))) / 3600L)
-          .otherwise(
-            (unix_timestamp(col("t_end")) - unix_timestamp(col("t0"))) / 3600L)
-          .cast("long").as("dur_h"),
-        (col("tp").isNotNull && col("tp") >= col("t0")).as("converted"))
-    val byHour = durations.groupBy(col("dur_h"))
-      .agg(
-        sum(when(col("converted"), 1L).otherwise(0L)).as("d"),
-        sum(when(col("converted"), 0L).otherwise(1L)).as("c"))
-    val wCum = Window.orderBy(col("dur_h"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    byHour
-      .select(col("dur_h"), col("d"), col("c"),
-        (sum(col("d") + col("c")).over(wAll) -
-          sum(col("d") + col("c")).over(wCum) + col("d") + col("c"))
-          .cast("long").as("n_risk"))
+    hourCensus(s, d).select(col("dur_h"), col("d"), col("c"), nRisk)
       .withColumn("cum_hazard",
         round(sum(col("d").cast("double") / col("n_risk").cast("double"))
-          .over(wCum), 6))
+          .over(hourCum), 6))
       .withColumn("var_hazard",
         round(sum(col("d").cast("double") /
           (col("n_risk").cast("double") * col("n_risk").cast("double")))
-          .over(wCum), 6))
+          .over(hourCum), 6))
       .filter(col("d") > 0)
       .select(col("dur_h"), col("n_risk"), col("d").as("n_events"),
         col("cum_hazard"), col("var_hazard"))
@@ -4819,8 +4764,7 @@ object Behavior {
     val cells = Tables.events(s, d)
       .filter(col("event_type") === "purchase")
       .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("variant"),
+        arm.as("variant"),
         expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) div 2000")
           .as("bucket"))
       .groupBy("bucket")
@@ -4936,35 +4880,7 @@ object Behavior {
     * census, O(hours) fold. */
   def rmst(s: SparkSession, d: String): DataFrame = {
     val tau = rmstTauH
-    val ev = Tables.events(s, d)
-    val perUser = ev.groupBy(col("user_id"))
-      .agg(
-        min(when(col("event_type") === "signup", col("ts"))).as("t0"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("tp"))
-      .filter(col("t0").isNotNull)
-    val studyEnd = ev.agg(max(col("ts")).as("t_end"))
-    val durations = perUser.crossJoin(broadcast(studyEnd))
-      .select(
-        when(col("tp").isNotNull && col("tp") >= col("t0"),
-          (unix_timestamp(col("tp")) - unix_timestamp(col("t0"))) / 3600L)
-          .otherwise(
-            (unix_timestamp(col("t_end")) - unix_timestamp(col("t0"))) / 3600L)
-          .cast("long").as("dur_h"),
-        (col("tp").isNotNull && col("tp") >= col("t0")).as("converted"))
-    val byHour = durations.groupBy(col("dur_h"))
-      .agg(
-        sum(when(col("converted"), 1L).otherwise(0L)).as("d"),
-        sum(when(col("converted"), 0L).otherwise(1L)).as("c"))
-    val wCum = Window.orderBy(col("dur_h"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    val risk = byHour
-      .select(col("dur_h"), col("d"),
-        (sum(col("d") + col("c")).over(wAll) -
-          sum(col("d") + col("c")).over(wCum) + col("d") + col("c"))
-          .cast("long").as("n_risk"))
-    risk.groupBy()
+    hourCensus(s, d).select(col("dur_h"), col("d"), nRisk).groupBy()
       .agg(count(lit(1)).cast("long").as("n_times"),
         sort_array(collect_list(struct(col("dur_h"), col("d"), col("n_risk"))))
           .as("arr"))
@@ -5071,23 +4987,11 @@ object Behavior {
     val perUser = Tables.events(s, d)
       .groupBy(date_trunc("week", col("ts")).cast("date").as("wk"),
         col("user_id"))
-      .agg(count(lit(1)).cast("long").as("n_events"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("conv"))
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("variant"),
-        least(expr("n_events div 5"), lit(4L)).as("stratum"),
-        col("conv"))
-    val cells = perUser.groupBy("stratum").agg(
-      sum(when(col("variant") === 1 && col("conv") === 1, 1L).otherwise(0L))
-        .as("a"),
-      sum(when(col("variant") === 1 && col("conv") === 0, 1L).otherwise(0L))
-        .as("b"),
-      sum(when(col("variant") === 0 && col("conv") === 1, 1L).otherwise(0L))
-        .as("c"),
-      sum(when(col("variant") === 0 && col("conv") === 0, 1L).otherwise(0L))
-        .as("d"))
+      .agg(count(lit(1)).cast("long").as("n_events"), converted)
+      .select(arm.as("variant"),
+        least(expr("n_events div 5"), lit(4L)).as("stratum"), col("conv"))
+    val cells = perUser.groupBy("stratum")
+      .agg(conversionTable.head, conversionTable.tail: _*)
     val packed = cells
       .select(col("stratum"), col("a"), col("b"), col("c"), col("d"),
         (col("a") + col("b") + col("c") + col("d")).as("n"))
@@ -5272,43 +5176,7 @@ object Behavior {
     memoCache(s, d, "coxEventFrame") { coxEventFrameBuild(s, d).pin() }
 
   private def coxEventFrameBuild(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val perUser = ev.groupBy(col("user_id"))
-      .agg(
-        min(when(col("event_type") === "signup", col("ts"))).as("t0"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("tp"))
-      .filter(col("t0").isNotNull)
-      .select(
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 2).cast("int").as("g"),
-        col("t0"), col("tp"))
-    val studyEnd = ev.agg(max(col("ts")).as("t_end"))
-    val durations = perUser.crossJoin(broadcast(studyEnd))
-      .select(col("g"),
-        when(col("tp").isNotNull && col("tp") >= col("t0"),
-          (unix_timestamp(col("tp")) - unix_timestamp(col("t0"))) / 3600L)
-          .otherwise(
-            (unix_timestamp(col("t_end")) - unix_timestamp(col("t0"))) / 3600L)
-          .cast("long").as("dur_h"),
-        (col("tp").isNotNull && col("tp") >= col("t0")).as("converted"))
-    val byCell = durations.groupBy(col("dur_h"), col("g"))
-      .agg(sum(when(col("converted"), 1L).otherwise(0L)).as("d"),
-        sum(when(col("converted"), 0L).otherwise(1L)).as("c"))
-    val grid = byCell.select(col("dur_h")).distinct()
-      .crossJoin(broadcast(s.range(0, 2).select(col("id").cast("int").as("g"))))
-      .join(byCell, Seq("dur_h", "g"), "left")
-      .select(col("dur_h"), col("g"),
-        coalesce(col("d"), lit(0L)).as("d"),
-        coalesce(col("c"), lit(0L)).as("c"))
-    val wCumG = Window.partitionBy("g").orderBy("dur_h")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAllG = Window.partitionBy("g").rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    val atRisk = grid.select(col("dur_h"), col("g"), col("d"),
-      (sum(col("d") + col("c")).over(wAllG) -
-        sum(col("d") + col("c")).over(wCumG) + col("d") + col("c"))
-        .cast("long").as("nr"))
-    atRisk.groupBy("dur_h")
+    armAtRisk(survivalUsers(s, d)).groupBy("dur_h")
       .agg(sum(when(col("g") === 1, col("d")).otherwise(0L)).as("d1"),
         sum(col("d")).as("dt"),
         max(when(col("g") === 1, col("nr"))).as("n1"),

@@ -1361,10 +1361,7 @@ object TimeSeries {
   }
 
   def forecastBacktest(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.events(s, d)
-      .groupBy(col("event_type"), date_trunc("day", col("ts")).cast("date").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
+    val daily = dailyCents(s, d)
     val w = Window.partitionBy("event_type").orderBy("day")
     val maxDay = daily.agg(max(col("day")).as("max_day"))
     daily
@@ -1439,10 +1436,7 @@ object TimeSeries {
     * sum. Facts shuffle once into the daily aggregate; the fold is a
     * per-row array op. */
   def decayedPopularity(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.events(s, d)
-      .groupBy(col("event_type"), date_trunc("day", col("ts")).cast("date").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
+    val daily = dailyCents(s, d)
     val maxDay = daily.agg(max(col("day")).as("max_day"))
     daily.crossJoin(broadcast(maxDay))
       .groupBy(col("event_type"), col("max_day"))
@@ -1491,12 +1485,7 @@ object TimeSeries {
     * the q_kendall contingency-census discipline (quadratic only in a
     * catalog-bounded domain, never in fact rows). */
   def mannKendall(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast("date").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-      .pin() // 3 consumers: both pair-join sides + tie census
+    val daily = dailyCents(s, d).pin() // 3 consumers: both pair-join sides + tie census
     val a = daily.select(col("event_type"), col("day"), col("cents"))
     val b = daily.select(col("event_type").as("et2"), col("day").as("day2"),
       col("cents").as("cents2"))
@@ -2984,6 +2973,25 @@ object TimeSeries {
        |  (dtw <= lockstep_l1) AS contained
        |FROM dp""".stripMargin
 
+  /** Daily order revenue over 1998 in exact cents: one row per order
+    * day, `day` and `cents`. */
+  private def dailyOrderCents1998(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .filter(year(col("o_orderdate")) === 1998)
+      .groupBy(col("o_orderdate").cast("date").as("day"))
+      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
+        .cast("long")).as("cents"))
+
+  /** [[dailyOrderCents1998]] with the naive (`l1`, yesterday) and
+    * seasonal-naive (`l7`, a week back) forecasts of each day. */
+  private def dailyOrderLags1998(s: SparkSession, d: String): DataFrame = {
+    val ord = Window.orderBy("day")
+    dailyOrderCents1998(s, d)
+      .select(col("day"), col("cents"),
+        lag(col("cents"), 1).over(ord).as("l1"),
+        lag(col("cents"), 7).over(ord).as("l7"))
+  }
+
   /** DURBIN–WATSON TEST — serial correlation in the residuals of the
     * daily-revenue-vs-time OLS for 1998 (the regression-diagnostics
     * companion to [[q_rolling_ols]]/[[grangerCausality]]: a trend fit
@@ -3009,11 +3017,7 @@ object TimeSeries {
     * reduce. */
   def durbinWatson(s: SparkSession, d: String): DataFrame = {
     val ord = Window.orderBy("day")
-    val daily = Tables.orders(s, d)
-      .filter(year(col("o_orderdate")) === 1998)
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long")).as("cents"))
+    val daily = dailyOrderCents1998(s, d)
       .select(col("day"), expr("cents div 100").as("y"))
       .select(col("day"), col("y"),
         row_number().over(ord).cast("long").as("t"),
@@ -3108,15 +3112,7 @@ object TimeSeries {
     * [[durbinWatson]]). Scale: one daily aggregate + one O(days) lag
     * window + a single-row reduce. */
   def maseForecast(s: SparkSession, d: String): DataFrame = {
-    val ord = Window.orderBy("day")
-    val daily = Tables.orders(s, d)
-      .filter(year(col("o_orderdate")) === 1998)
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long")).as("cents"))
-      .select(col("day"), col("cents"),
-        lag(col("cents"), 1).over(ord).as("l1"),
-        lag(col("cents"), 7).over(ord).as("l7"))
+    val daily = dailyOrderLags1998(s, d)
     val sums = daily.agg(
       count(lit(1)).as("n_days"),
       sum(when(col("l7").isNotNull, 1L).otherwise(0L)).as("n7"),
@@ -3184,15 +3180,7 @@ object TimeSeries {
   def theilU(s: SparkSession, d: String): DataFrame = {
     val big = DecimalType(38, 0)
     def d0(c: org.apache.spark.sql.Column) = c.cast(big)
-    val ord = Window.orderBy("day")
-    val daily = Tables.orders(s, d)
-      .filter(year(col("o_orderdate")) === 1998)
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long")).as("cents"))
-      .select(col("day"), col("cents"),
-        lag(col("cents"), 1).over(ord).as("l1"),
-        lag(col("cents"), 7).over(ord).as("l7"))
+    val daily = dailyOrderLags1998(s, d)
     val sums = daily.agg(
       count(lit(1)).as("n_days"),
       sum(when(col("l7").isNotNull, 1L).otherwise(0L)).as("n7"),
@@ -3293,11 +3281,7 @@ object TimeSeries {
     val big = DecimalType(38, 0)
     def d0(c: org.apache.spark.sql.Column) = c.cast(big)
     val ord = Window.orderBy("day")
-    val daily = Tables.orders(s, d)
-      .filter(year(col("o_orderdate")) === 1998)
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long")).as("cents"))
+    val daily = dailyOrderCents1998(s, d)
     val stats = daily.agg(
       count(lit(1)).cast("long").as("n"),
       sum(col("cents")).cast("long").as("sy"),
@@ -3538,6 +3522,14 @@ object TimeSeries {
   /** Max PACF lag. */
   val pacfMaxLag = 7
 
+  /** Daily order revenue over every order date in exact cents: one row
+    * per day, `day` and `y`. */
+  private def dailyOrderRevenue(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .groupBy(to_date(col("o_orderdate")).as("day"))
+      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+        .cast("long").as("y"))
+
   /** PARTIAL AUTOCORRELATION FUNCTION, lags 1..[[pacfMaxLag]], via the
     * Durbin–Levinson recursion — the AR-order-selection readout the
     * plain ACF ([[acfDailyRevenue]]) can't give (a pure AR(p) series
@@ -3564,10 +3556,7 @@ object TimeSeries {
     val K = pacfMaxLag
     val big = DecimalType(38, 0)
     def d0(c: org.apache.spark.sql.Column) = c.cast(big)
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("y"))
+    val daily = dailyOrderRevenue(s, d)
     val glob = daily.agg(count(lit(1)).cast("long").as("n"),
       sum(col("y")).cast("long").as("sgl"),
       sum(d0(col("y")) * d0(col("y"))).as("syy"))
@@ -3708,6 +3697,21 @@ object TimeSeries {
        |WHERE dl.k = $K""".stripMargin
   }
 
+  /** Daily purchase revenue in exact cents, packed into one row: `arr`,
+    * the day-sorted (day, y) pairs, `n` days and `mu`, the mean of y. */
+  private def dailyPurchasePacked(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .filter(col("event_type") === "purchase")
+      .groupBy(date_trunc("day", col("ts")).cast("date").as("day"))
+      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100)
+        .cast("long").as("y"))
+      .groupBy()
+      .agg(sort_array(collect_list(struct(col("day"), col("y")))).as("arr"),
+        count(lit(1)).cast("long").as("n"),
+        sum(col("y")).cast(DecimalType(38, 0)).as("sy"))
+      .select(col("arr"), col("n"),
+        (col("sy").cast("double") / col("n").cast("double")).as("mu"))
+
   /** ENGLE'S ARCH LM TEST on daily purchase revenue — "is the VARIANCE
     * autocorrelated?", the volatility-clustering readout none of the
     * existing diagnostics see: [[ljungBox]] tests serial correlation of
@@ -3729,17 +3733,7 @@ object TimeSeries {
     * Scale: one combinable daily aggregate + an O(days) fold — the
     * accepted single-partition day-frame class. */
   def archTest(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.events(s, d)
-      .filter(col("event_type") === "purchase")
-      .groupBy(date_trunc("day", col("ts")).cast("date").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("y"))
-    val packed = daily.groupBy()
-      .agg(sort_array(collect_list(struct(col("day"), col("y")))).as("arr"),
-        count(lit(1)).cast("long").as("n"),
-        sum(col("y")).cast(DecimalType(38, 0)).as("sy"))
-      .select(col("arr"), col("n"),
-        (col("sy").cast("double") / col("n").cast("double")).as("mu"))
+    val packed = dailyPurchasePacked(s, d)
     // state: (pd = prev day, pu = prev e², m = pairs, and the 5 moments)
     val folded = packed.select(col("n"), expr(
       """aggregate(slice(arr, 2, size(arr) - 1),
@@ -3866,10 +3860,7 @@ object TimeSeries {
   def chowTest(s: SparkSession, d: String): DataFrame = {
     val big = DecimalType(38, 0)
     def d0(c: org.apache.spark.sql.Column) = c.cast(big)
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("y"))
+    val daily = dailyOrderRevenue(s, d)
     val bounds = daily.agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
     val based = daily.crossJoin(broadcast(bounds))
       .select(datediff(col("day"), col("dmin")).cast("long").as("t"),
@@ -3965,10 +3956,7 @@ object TimeSeries {
   private def olsDailyPacked(s: SparkSession, d: String): DataFrame = {
     val big = DecimalType(38, 0)
     def d0(c: org.apache.spark.sql.Column) = c.cast(big)
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("y"))
+    val daily = dailyOrderRevenue(s, d)
     val bounds = daily.agg(min(col("day")).as("dmin"))
     daily.crossJoin(broadcast(bounds))
       .select(datediff(col("day"), col("dmin")).cast("long").as("t"),
@@ -4359,17 +4347,8 @@ object TimeSeries {
     * Scale: one combinable daily aggregate; the fold is O(days ×
     * periods) scalar work on one row — the accepted day-frame class. */
   def periodogram(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.events(s, d)
-      .filter(col("event_type") === "purchase")
-      .groupBy(date_trunc("day", col("ts")).cast("date").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("y"))
-    val packed = daily.groupBy()
-      .agg(sort_array(collect_list(struct(col("day"), col("y")))).as("arr"),
-        count(lit(1)).cast("long").as("n"),
-        sum(col("y")).cast(DecimalType(38, 0)).as("sy"))
-      .select(col("arr"), col("n"),
-        (col("sy").cast("double") / col("n").cast("double")).as("mu"),
+    val packed = dailyPurchasePacked(s, d)
+      .select(col("arr"), col("n"), col("mu"),
         expr("""aggregate(arr, CAST(0.0 AS DOUBLE), (acc, e) ->
           acc + (CAST(e.y AS DOUBLE) - mu) * (CAST(e.y AS DOUBLE) - mu))""")
           .as("ss"))

@@ -35,8 +35,7 @@ object PipelineMain {
   def main(args: Array[String]): Unit = {
     val (conf, runDate) = parseArgs(args)
     val spark = graft.GraftSession.builder(
-        sys.env.getOrElse("SPARK_MASTER", "local[*]"),
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+        sys.env.getOrElse("SPARK_MASTER", "local[*]"), graft.GraftSession.cpus)
       .appName("graft-pipeline")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -38,23 +38,33 @@ object Similarity {
   val nQueries = 5
   val topK = 3
 
-  /** Exact top-k cosine neighbors for each query vector. The query side
-    * is broadcast (it is tiny by construction); the corpus is scanned
-    * once; ranking shuffles only (query, candidate, score) triples. */
-  def bruteForceTopK(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < nQueries)
+  /** The [[nQueries]] query vectors: `query_id`, `q_emb`. */
+  private def queryVectors(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val corpus = emb.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
-    val scored = corpus.crossJoin(broadcast(queries))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        round(cosineSim(col("q_emb"), col("c_emb")), 4).as("cosine"))
+
+  /** The [[topK]] best-scored candidates per query, ranked by cosine
+    * descending then cand_id: query_id, rank, cand_id, cosine. */
+  private def topKOf(scored: DataFrame): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("cand_id").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
       .select("query_id", "rank", "cand_id", "cosine")
+  }
+
+  /** Exact top-k cosine neighbors for each query vector. The query side
+    * is broadcast (it is tiny by construction); the corpus is scanned
+    * once; ranking shuffles only (query, candidate, score) triples. */
+  def bruteForceTopK(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    val queries = queryVectors(emb)
+    val corpus = emb.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
+    val scored = corpus.crossJoin(broadcast(queries))
+      .filter(col("query_id") =!= col("cand_id"))
+      .select(col("query_id"), col("cand_id"),
+        round(cosineSim(col("q_emb"), col("c_emb")), 4).as("cosine"))
+    topKOf(scored)
   }
 
   /** Multi-table sign-random-projection LSH: `nTables` independent hash
@@ -212,11 +222,7 @@ object Similarity {
       .join(byId.as("ce"), col("cand_id") === col("ce.vec_id"))
       .select(col("query_id"), col("cand_id"),
         round(cosineSim(col("qe.embedding"), col("ce.embedding")), 4).as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("cand_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("query_id", "rank", "cand_id", "cosine")
+    topKOf(scored)
   }
 
   /** Centroid per label — the IVF coarse-quantizer build step done as a
@@ -255,8 +261,7 @@ object Similarity {
       .agg(array_sort(collect_list(struct(col("dim"), col("cv")))).as("dcv"))
       .select(col("label").as("cent_label"),
         expr("transform(dcv, x -> CAST(x.cv AS FLOAT))").as("centroid"))
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val queries = queryVectors(emb)
     // probe assignment: rank centroids per query, keep nProbe
     val probes = queries.crossJoin(broadcast(cents))
       .select(col("query_id"), col("q_emb"), col("cent_label"),
@@ -271,11 +276,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("cand_id"),
         round(cosineSim(col("q_emb"), col("embedding")), 4).as("cosine"))
       .distinct()
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("cand_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select("query_id", "rank", "cand_id", "cosine")
+    topKOf(scored)
   }
 
   /** Deterministic recall grading for the approximate-ANN paths — the
@@ -356,6 +357,24 @@ object Similarity {
   private def zeroSafe(c: org.apache.spark.sql.Column) =
     when(c === 0d, lit(0d)).otherwise(c)
 
+  /** Per-label centroids, each dimension's mean rounded to 4 places:
+    * `c_label`, `centroid` (dimension-ordered doubles). */
+  private def roundedCentroids(emb: DataFrame): DataFrame =
+    emb
+      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
+      .groupBy("label", "dim").agg(round(avg(col("v").cast("double")), 4).as("cv"))
+      .groupBy("label")
+      .agg(array_sort(collect_list(struct(col("dim"), col("cv")))).as("dcv"))
+      .select(col("label").as("c_label"),
+        expr("transform(dcv, x -> x.cv)").as("centroid"))
+
+  /** Euclidean distance from `embedding` to `centroid`, rounded to 4. */
+  private def centroidDist: Column =
+    round(sqrt(aggregate(
+      zip_with(col("embedding"), col("centroid"),
+        (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
+      lit(0.0d), (acc, v) => acc + v)), 4)
+
   /** SIMPLIFIED SILHOUETTE per label — the clustering-quality audit run
     * before trusting semantic-dedup/cluster assignments: for each
     * vector, a = distance to its OWN label centroid, b = distance to
@@ -374,20 +393,10 @@ object Similarity {
     * discipline, applied to L2). */
   def silhouette(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val cents = emb
-      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .groupBy("label", "dim").agg(round(avg(col("v").cast("double")), 4).as("cv"))
-      .groupBy("label")
-      .agg(array_sort(collect_list(struct(col("dim"), col("cv")))).as("dcv"))
-      .select(col("label").as("c_label"),
-        expr("transform(dcv, x -> x.cv)").as("centroid"))
-    val dist = round(sqrt(aggregate(
-      zip_with(col("embedding"), col("centroid"),
-        (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
-      lit(0.0d), (acc, v) => acc + v)), 4)
+    val cents = roundedCentroids(emb)
     val scored = emb.select(col("vec_id"), col("label"), col("embedding"))
       .crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("label"), col("c_label"), dist.as("dist"))
+      .select(col("vec_id"), col("label"), col("c_label"), centroidDist.as("dist"))
     val a = scored.filter(col("label") === col("c_label"))
       .select(col("vec_id"), col("label"), col("dist").as("a"))
     val b = scored.filter(col("label") =!= col("c_label"))
@@ -459,8 +468,7 @@ object Similarity {
   def matryoshkaRecall(s: SparkSession, d: String): DataFrame = {
     import graft.functions.GraftFunctions.cosineSim
     val emb = Tables.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val queries = queryVectors(emb)
     val scored = emb.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
       .crossJoin(broadcast(queries))
       .filter(col("query_id") =!= col("cand_id"))
@@ -1057,6 +1065,60 @@ object Similarity {
     * (including itself) holds at least this many points. */
   val dbscanMinPts = 3
 
+  /** The clustering step both DBSCAN forms share, over the symmetric
+    * eps-graph `sym` (src, dst). Core points (x) are the vertices with
+    * degree ≥ minPts−1; each core's label is the MIN core id of its
+    * connected component in the core-core subgraph, propagated round by
+    * round (the [[graft.dedup.Dedup.dedupClusters]] loop, each round
+    * pinned) and required to converge within 16 rounds — `name` heads
+    * the error when it does not. Returns the core points, the core-core
+    * edges and the (x, label) frame.
+    *
+    * The core-core edges are pinned AND hash-partitioned on the
+    * round-join key ONCE: the loop used to re-derive them from `sym`
+    * with two joins inside EVERY round's plan (the per-round waste the
+    * label-prop/sssp partitioning-reuse attacks deleted elsewhere — pin
+    * preserves outputPartitioning, so each round's dst-join reuses this
+    * exchange and only the O(core) label frame shuffles). Measured
+    * NEUTRAL at sf0.1 (iso best-of-5 5.30 → 5.32 s, PERF.md round 12):
+    * the exact form's bill is the all-pairs cosine verifier stage, not
+    * the loop — kept on the loop-invariant-materialization argument (at
+    * a core set that no longer fits a few partitions, re-deriving two
+    * joins per round is real per-round shuffle work). */
+  private def dbscanCores(sym: DataFrame, name: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val core = sym.groupBy(col("src")).agg(count(lit(1)).as("nn"))
+      .filter(col("nn") >= dbscanMinPts - 1)
+      .select(col("src").as("x"))
+      .pin()
+    val coreEdges = sym
+      .join(core.select(col("x").as("src")), Seq("src"))
+      .join(core.select(col("x").as("dst")), Seq("dst"))
+      .select(col("src"), col("dst"))
+      .repartition(col("dst"))
+      .pin()
+    var labels = core.select(col("x"), col("x").as("label")).pin()
+    var converged = false
+    var iter = 0
+    while (!converged && iter < 16) {
+      val nbrMin = coreEdges
+        .join(labels.select(col("x").as("dst"), col("label").as("dl")), Seq("dst"))
+        .groupBy(col("src").as("x"))
+        .agg(min(col("dl")).as("nl"))
+      val next = labels.join(nbrMin, Seq("x"), "left")
+        .select(col("x"),
+          least(col("label"), coalesce(col("nl"), col("label"))).as("label"),
+          (coalesce(col("nl"), col("label")) < col("label")).as("changed"))
+        .pin()
+      converged = next.filter(col("changed")).isEmpty
+      labels = next.select(col("x"), col("label"))
+      iter += 1
+    }
+    require(converged,
+      s"$name core-label propagation did not converge in $iter rounds")
+    (core, coreEdges, labels)
+  }
+
   /** DBSCAN density clustering over the embedding space — per-cluster
     * (n_core, n_border) census. Semantics are the textbook ones made
     * DETERMINISTIC: core points are eps-graph vertices with degree ≥
@@ -1091,46 +1153,7 @@ object Similarity {
     val sym = half.select(col("va").as("src"), col("vb").as("dst"))
       .unionAll(half.select(col("vb").as("src"), col("va").as("dst")))
       .pin()
-    val core = sym.groupBy(col("src")).agg(count(lit(1)).as("nn"))
-      .filter(col("nn") >= dbscanMinPts - 1)
-      .select(col("src").as("x"))
-      .pin()
-    // Pinned AND hash-partitioned on the round-join key ONCE: the
-    // propagation loop previously re-derived core-core edges from `sym`
-    // with two joins inside EVERY round's plan (the per-round waste the
-    // label-prop/sssp partitioning-reuse attacks deleted elsewhere —
-    // pin preserves outputPartitioning, so each round's dst-join reuses
-    // this exchange and only the O(core) label frame shuffles).
-    // Measured NEUTRAL at sf0.1 (iso best-of-5 5.30 → 5.32 s, PERF.md
-    // round 12): the query's bill is the all-pairs cosine verifier
-    // stage, not the loop — kept on the loop-invariant-materialization
-    // argument (at a core set that no longer fits a few partitions,
-    // re-deriving two joins per round is real per-round shuffle work).
-    val coreEdges = sym
-      .join(core.select(col("x").as("src")), Seq("src"))
-      .join(core.select(col("x").as("dst")), Seq("dst"))
-      .select(col("src"), col("dst"))
-      .repartition(col("dst"))
-      .pin()
-    var labels = core.select(col("x"), col("x").as("label")).pin()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 16) {
-      val nbrMin = coreEdges
-        .join(labels.select(col("x").as("dst"), col("label").as("dl")), Seq("dst"))
-        .groupBy(col("src").as("x"))
-        .agg(min(col("dl")).as("nl"))
-      val next = labels.join(nbrMin, Seq("x"), "left")
-        .select(col("x"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("label"),
-          (coalesce(col("nl"), col("label")) < col("label")).as("changed"))
-        .pin()
-      converged = next.filter(col("changed")).isEmpty
-      labels = next.select(col("x"), col("label"))
-      iter += 1
-    }
-    require(converged,
-      s"DBSCAN core-label propagation did not converge in $iter rounds")
+    val (core, _, labels) = dbscanCores(sym, "DBSCAN")
     val border = sym
       .join(labels.select(col("x").as("dst"), col("label")), Seq("dst"))
       .join(core.select(col("x").as("src")), Seq("src"), "left_anti")
@@ -1195,37 +1218,7 @@ object Similarity {
     val sym = pairs.select(col("vec_a").as("src"), col("vec_b").as("dst"))
       .unionAll(pairs.select(col("vec_b").as("src"), col("vec_a").as("dst")))
       .pin()
-    val core = sym.groupBy(col("src")).agg(count(lit(1)).as("nn"))
-      .filter(col("nn") >= dbscanMinPts - 1)
-      .select(col("src").as("x"))
-      .pin()
-    // same loop-invariant materialization as the exact form: core-core
-    // edges pinned + partitioned on the round-join key once
-    val coreEdges = sym
-      .join(core.select(col("x").as("src")), Seq("src"))
-      .join(core.select(col("x").as("dst")), Seq("dst"))
-      .select(col("src"), col("dst"))
-      .repartition(col("dst"))
-      .pin()
-    var labels = core.select(col("x"), col("x").as("label")).pin()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 16) {
-      val nbrMin = coreEdges
-        .join(labels.select(col("x").as("dst"), col("label").as("dl")), Seq("dst"))
-        .groupBy(col("src").as("x"))
-        .agg(min(col("dl")).as("nl"))
-      val next = labels.join(nbrMin, Seq("x"), "left")
-        .select(col("x"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("label"),
-          (coalesce(col("nl"), col("label")) < col("label")).as("changed"))
-        .pin()
-      converged = next.filter(col("changed")).isEmpty
-      labels = next.select(col("x"), col("label"))
-      iter += 1
-    }
-    require(converged,
-      s"blocked DBSCAN core-label propagation did not converge in $iter rounds")
+    val (core, coreEdges, labels) = dbscanCores(sym, "blocked DBSCAN")
     // exact sample stage: O(cap · n) broadcast scan, the linear anchor
     val sampleQ = e.filter(col("vec_id") < cap)
       .select(col("vec_id").as("sa"), col("embedding").as("sea"),
@@ -1918,21 +1911,10 @@ object Similarity {
     * is O(k²) driver-free arithmetic. */
   def clusterValidity(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val cents = emb
-      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .groupBy("label", "dim")
-      .agg(round(avg(col("v").cast("double")), 4).as("cv"))
-      .groupBy("label")
-      .agg(array_sort(collect_list(struct(col("dim"), col("cv")))).as("dcv"))
-      .select(col("label").as("c_label"),
-        expr("transform(dcv, x -> x.cv)").as("centroid"))
-    val dist = round(sqrt(aggregate(
-      zip_with(col("embedding"), col("centroid"),
-        (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
-      lit(0.0d), (acc, v) => acc + v)), 4)
+    val cents = roundedCentroids(emb)
     // per-cluster: n_i, S_i = mean dist-to-own-centroid, within = mean d²
     val own = emb.join(broadcast(cents), col("label") === col("c_label"))
-      .select(col("label"), dist.as("d"))
+      .select(col("label"), centroidDist.as("d"))
       .groupBy("label")
       .agg(count(lit(1)).cast("long").as("ni"),
         round(avg(col("d")), 4).as("si"),

@@ -35,8 +35,7 @@ object StreamDrive {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val nChunks = if (args.length > 1) args(1).toInt else 4
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

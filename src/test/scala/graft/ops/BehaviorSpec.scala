@@ -539,4 +539,20 @@ class BehaviorSpec extends GraftTestBase {
       case _ =>
     }
   }
+
+  behavior of "the experiment arm rule"
+
+  it should "match the plain-Scala md5 hashes for user_id 0 to 999" in {
+    val rows = spark.range(0, 1000).select(col("id").as("user_id"))
+      .select(col("user_id"), Behavior.arm.as("arm"),
+        Behavior.userBucket(16).as("h"))
+      .collect()
+    rows should have length 1000
+    rows.foreach { r =>
+      val u = r.getLong(0)
+      r.getInt(1) shouldBe graft.Scratch.variantOf(u)
+      r.getInt(1).toLong shouldBe graft.streaming.EventStreams.variantHash(u)
+      r.getLong(2) shouldBe graft.streaming.EventStreams.aaHash(u)
+    }
+  }
 }

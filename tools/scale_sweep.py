@@ -204,7 +204,6 @@ def derive(r, outdir):
 def bench_once(sfdir, queries, tag):
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR=sfdir,
-               SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "32"),
                SPARK_GRAFT_ONLY=",".join(queries))
     p = subprocess.run(
         ["sbt", "-batch", "runMain graft.Bench"],
