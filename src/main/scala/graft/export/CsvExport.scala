@@ -29,7 +29,7 @@ import graft.WriteCount
   *    SURVEY.md §1.4).
   *
   * Scale posture: the one object is written by as many tasks as the
-  * export plan has partitions. `singleObject=true` writes the frame as
+  * export plan has partitions. [[writeCsv]] writes the frame as
   * headerless parts to a staging directory under `outPath/_temporary`,
   * then joins them on the driver, in part-index order, into one
   * `part-…csv` object with the header written once. Part-index order is
@@ -45,9 +45,7 @@ import graft.WriteCount
   * `UploadPartCopy`s of the staged parts (the header as a small leading
   * part), so no data bytes pass through the driver and the object
   * appears at `CompleteMultipartUpload`; that rendering needs the S3A
-  * connector and is not built here. [[writeCsv]] defaults to `false`,
-  * a plain multi-part write; [[exportBatch]], and so `Pipeline.run`,
-  * always writes the reference's one object.
+  * connector and is not built here.
   * The filter is a Catalyst predicate, so against a partitioned table it
   * prunes to the single `load_date` partition instead of scanning
   * history.
@@ -82,27 +80,23 @@ object CsvExport {
 
   /** Write a query result as headered CSV with export-NULL semantics,
     * replacing whatever `outPath` held; returns the rows written, counted
-    * by the write's own job. With `singleObject` the result is one object
-    * (see the scale posture above); a failed write leaves no `.csv` and no
-    * `_SUCCESS` outside `_temporary`. */
-  def writeCsv(result: DataFrame, outPath: String, singleObject: Boolean = false): Long = {
+    * by the write's own job. The result is one object (see the scale
+    * posture above); a failed write leaves no `.csv` and no `_SUCCESS`
+    * outside `_temporary`. */
+  def writeCsv(result: DataFrame, outPath: String): Long = {
     val counted = new WriteCount(result)
-    if (!singleObject) {
-      counted.frame.write.mode(SaveMode.Overwrite).options(writerOptions).csv(outPath)
-    } else {
-      val out = new Path(outPath)
-      val fs = out.getFileSystem(result.sparkSession.sparkContext.hadoopConfiguration)
-      val scratch = new Path(out, "_temporary")
-      val staging = new Path(scratch, s"parts-${java.util.UUID.randomUUID}")
-      // SaveMode.Overwrite: the previous export goes before the new one is written
-      fs.delete(out, true)
-      try {
-        counted.frame.write.mode(SaveMode.Overwrite)
-          .options(writerOptions + ("header" -> "false"))
-          .csv(staging.toString)
-        joinParts(fs, staging, out, header(result.schema))
-      } finally fs.delete(scratch, true)
-    }
+    val out = new Path(outPath)
+    val fs = out.getFileSystem(result.sparkSession.sparkContext.hadoopConfiguration)
+    val scratch = new Path(out, "_temporary")
+    val staging = new Path(scratch, s"parts-${java.util.UUID.randomUUID}")
+    // SaveMode.Overwrite: the previous export goes before the new one is written
+    fs.delete(out, true)
+    try {
+      counted.frame.write.mode(SaveMode.Overwrite)
+        .options(writerOptions + ("header" -> "false"))
+        .csv(staging.toString)
+      joinParts(fs, staging, out, header(result.schema))
+    } finally fs.delete(scratch, true)
     counted.rows
   }
 
@@ -167,6 +161,6 @@ object CsvExport {
       columns: Seq[String]): Long = {
     val result =
       currentBatch(spark.read.parquet(tablePath), runDate).select(columns.map(col): _*)
-    writeCsv(result, outPath, singleObject = true)
+    writeCsv(result, outPath)
   }
 }

@@ -40,22 +40,6 @@ object CountMin extends Aggregator[java.lang.Long, Array[Long], Seq[Long]] {
   def cell(j: Int, x: Long): Int =
     (((rowA(j) * x + rowB(j)) % prime) % width).toInt
 
-  /** JVM mirror of the column-side key hash
-    * `pmod(conv(substring(md5(s), 1, 15), 16, 10), prime)` — the same
-    * value DuckDB computes as `('0x' || substr(md5(s),1,15))::BIGINT %
-    * prime`, so streaming state, batch UDAF, and oracle all hash keys
-    * identically. */
-  def keyHash(key: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(15)
-    java.lang.Long.parseLong(hex, 16) % prime
-  }
-
-  /** Point estimate of key x from a finished sketch. */
-  def estimate(sketch: Seq[Long], x: Long): Long =
-    (0 until depth).map(j => sketch(j * width + cell(j, x))).min
-
   override def zero: Array[Long] = new Array[Long](depth * width)
 
   override def reduce(buf: Array[Long], x: java.lang.Long): Array[Long] = {

@@ -24,8 +24,8 @@ object Behavior {
 
   /** A user's md5 bucket out of `n`: the first 15 hex chars of
     * md5(user_id as a decimal string), parsed base 16, mod `n` (a BIGINT).
-    * The oracles spell the same rule in SQL; the streaming replicas are
-    * `EventStreams.variantHash` (n = 2) and `aaHash` (n = 16). */
+    * The oracles spell the same rule in SQL; the streaming replica is
+    * `EventStreams.variantHash` (n = 2). */
   private[graft] def userBucket(n: Int): Column =
     conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
       .cast("long") % n

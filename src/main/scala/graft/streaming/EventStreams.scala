@@ -228,77 +228,6 @@ object EventStreams {
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
 
-  final case class QuantState(buf: graft.functions.KllBuf, snap: Long, n: Long)
-  final case class QuantOut(event_type: String, snapshot: Long, n_seen: Long,
-      p25: Double, p50: Double, p75: Double)
-
-  /** Streaming QUANTILES: each event type maintains a
-    * [[graft.functions.QuantileSketch]] buffer as its group state and
-    * emits a quantile snapshot per micro-batch — the live latency/value
-    * dashboard aggregate. This is the UDAF's buffer doing double duty as
-    * flatMapGroupsWithState state: the same mergeable O(k log n/k)
-    * structure serves the batch aggregate, the streaming state, and any
-    * tier merge between them — one sketch implementation, three
-    * surfaces. State stays bounded forever (no watermark eviction
-    * needed) because the sketch compacts itself; the rank-error contract
-    * is the batch UDAF's, asserted against exact ranks in StreamingSpec. */
-  def quantileStream(events: Dataset[Event]): Dataset[QuantOut] = {
-    import events.sparkSession.implicits._
-    import graft.functions.QuantileSketch
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[QuantState, QuantOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (etype: String, batch: Iterator[Event], state: GroupState[QuantState]) =>
-          val st = state.getOption
-            .getOrElse(QuantState(QuantileSketch.zero, 0L, 0L))
-          var buf = st.buf
-          var n = st.n
-          batch.foreach { e => buf = QuantileSketch.reduce(buf, e.value); n += 1 }
-          val snap = st.snap + 1
-          state.update(QuantState(buf, snap, n))
-          val qs = QuantileSketch.finish(buf)
-          Iterator(QuantOut(etype, snap, n, qs(0), qs(1), qs(2)))
-      }
-  }
-
-  final case class TopKState(counts: Map[Long, Long], snap: Long)
-  final case class TopKOut(event_type: String, snapshot: Long, rank: Int,
-      user_id: Long, n_events: Long)
-
-  /** Streaming TOP-K: after every micro-batch, each event type emits its
-    * current k most-active users (count desc, user_id asc — exact
-    * deterministic tie-break), tagged with a per-key snapshot sequence so
-    * Append mode (which can't revoke superseded leaderboards) still lets
-    * readers select the latest view per key. The live-leaderboard
-    * incremental rendering of `q_topk_per_group`.
-    *
-    * State per event type is the user→count map — exact, O(active users
-    * per type). At real scale the map swaps for the bounded
-    * [[graft.functions.SpaceSaving]] state (same emit shape, count
-    * becomes a lower bound): the point of the sketch UDAF is exactly
-    * this cap. Unlike the other stateful ops this one needs NO
-    * event-time order — counts are order-insensitive — so it has no
-    * in-order-input contract at all. */
-  def topkStream(events: Dataset[Event], k: Int = 3): Dataset[TopKOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[TopKState, TopKOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (etype: String, batch: Iterator[Event], state: GroupState[TopKState]) =>
-          val st = state.getOption.getOrElse(TopKState(Map.empty, 0L))
-          var counts = st.counts
-          batch.foreach { e =>
-            counts = counts.updated(e.user_id, counts.getOrElse(e.user_id, 0L) + 1)
-          }
-          val snap = st.snap + 1
-          state.update(TopKState(counts, snap))
-          counts.toSeq.sortBy { case (u, n) => (-n, u) }.take(k).zipWithIndex
-            .map { case ((u, n), i) => TopKOut(etype, snap, i + 1, u, n) }
-            .iterator
-      }
-  }
   final case class SessionState(start: Long, last: Long, n: Long)
   final case class SessionOut(user_id: Long, session_start: Timestamp,
       n_events: Long, duration_sec: Long)
@@ -484,56 +413,6 @@ object EventStreams {
       }
   }
 
-  final case class CmsState(cells: Seq[Long], snap: Long, n: Long)
-  final case class CmsOut(event_type: String, snapshot: Long, n_seen: Long,
-      user_id: Long, est: Long)
-
-  /** User ids probed by [[cmsStream]] — fixed low ids that exist at
-    * every scale factor. */
-  val cmsProbeUsers: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L)
-
-  /** Streaming COUNT-MIN: one bounded 4×256
-    * [[graft.functions.CountMin]] grid per event type as
-    * `flatMapGroupsWithState` state; after every micro-batch each type
-    * re-emits its per-probe-user event-count estimates (snapshot-tagged
-    * for Append mode, the [[topkStream]] discipline). The
-    * frequency-table stream whose state does NOT grow with distinct
-    * users — the live counterpart of the batch `q_cms` query.
-    *
-    * Because CMS updates commute, the final-snapshot state is EXACTLY
-    * the batch sketch over the same rows regardless of micro-batch
-    * boundaries (asserted in StreamingSpec) — a stronger equality than
-    * the rank-contract streams can claim. Keys are hashed with
-    * [[graft.functions.CountMin.keyHash]], the JVM mirror of the batch
-    * query's column hash, so stream, batch UDAF, and oracle share one
-    * hash family. Counts are order-insensitive, so this op has no
-    * in-order-input contract. */
-  def cmsStream(events: Dataset[Event]): Dataset[CmsOut] = {
-    import events.sparkSession.implicits._
-    import graft.functions.CountMin
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[CmsState, CmsOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (etype: String, batch: Iterator[Event], state: GroupState[CmsState]) =>
-          val st = state.getOption
-            .getOrElse(CmsState(CountMin.zero.toSeq, 0L, 0L))
-          val buf = st.cells.toArray
-          var n = st.n
-          batch.foreach { e =>
-            CountMin.reduce(buf, CountMin.keyHash(e.user_id.toString))
-            n += 1
-          }
-          val snap = st.snap + 1
-          state.update(CmsState(buf.toSeq, snap, n))
-          val sk = buf.toSeq
-          cmsProbeUsers.iterator.map { u =>
-            CmsOut(etype, snap, n, u,
-              CountMin.estimate(sk, CountMin.keyHash(u.toString)))
-          }
-      }
-  }
-
   /** Streaming OHLC bars — the live candlestick face of
     * [[graft.ops.TimeSeries.ohlcDaily]]: daily tumbling event-time
     * windows maintaining open/high/low/close/volume/turnover as ONE
@@ -562,166 +441,6 @@ object EventStreams {
         col("high"), col("low"), col("close"), col("volume"),
         col("turnover"))
 
-  // ------------------------------------------------------- SPRT monitor
-
-  final case class SprtState(flags: Map[Long, Long], snap: Long)
-  final case class SprtOut(snapshot: Long, n_users: Long, k_total: Long,
-      decision: String, n_at_decision: java.lang.Long,
-      k_at_decision: java.lang.Long)
-
-  /** Per-event cents under the engine's decimal discipline: the same
-    * HALF_UP double→DECIMAL(18,2) rounding `dec(value) * 100` applies
-    * in the batch operators, so streamed state sums the identical
-    * integers. */
-  private def centsOf(v: Double): Long =
-    BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-      .*(BigDecimal(100)).toLongExact
-
-  /** Streaming face of [[graft.ops.Behavior.sprtMonitor]] (VERDICT r8
-    * task 7): Wald's SPRT on the big-purchase conversion rate,
-    * re-adjudicated after every micro-batch. The monitor's decision
-    * path is defined over users in user_id order (the batch contract),
-    * and a late event can flip an EARLIER user's conversion flag — so
-    * the honest incremental rendering keeps the per-user flag map as
-    * state and replays the O(users) LLR walk per snapshot, exactly like
-    * the batch form's prefix pass; there is no cheaper exact
-    * maintenance for an order-defined stopping rule. All four
-    * transcendental constants are the batch operator's pinned literals;
-    * every LLR is k·c₁ + (n−k)·c₀ on exact integers.
-    *
-    * State: O(users) flags (one long each). At 100 TB the map swaps for
-    * a per-user keyed state + a periodic batch re-adjudication — the
-    * monitor output is one row, so the replay never leaves the driver-
-    * side group. Emits one snapshot row per micro-batch (Append mode;
-    * readers select the max snapshot). */
-  def sprtStream(events: Dataset[Event]): Dataset[SprtOut] = {
-    import events.sparkSession.implicits._
-    val c1 = 0.22314355131420976 // ln(0.5/0.4)
-    val c0 = -0.1823215567939546 // ln(0.5/0.6)
-    val up = 2.9444389791664403 // ln 19
-    val dn = -2.9444389791664403
-    events
-      .groupByKey(_ => 0)
-      .flatMapGroupsWithState[SprtState, SprtOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, batch: Iterator[Event], state: GroupState[SprtState]) =>
-          val st = state.getOption.getOrElse(SprtState(Map.empty, 0L))
-          var flags = st.flags
-          batch.foreach { e =>
-            val x = if (e.event_type == "purchase" && centsOf(e.value) >= 15000L)
-              1L else 0L
-            flags = flags.updated(e.user_id,
-              math.max(flags.getOrElse(e.user_id, 0L), x))
-          }
-          var k = 0L; var n = 0L
-          var hit1: Option[(Long, Long)] = None
-          var hit0: Option[(Long, Long)] = None
-          flags.toSeq.sortBy(_._1).foreach { case (_, x) =>
-            n += 1; k += x
-            val llr = k.toDouble * c1 + (n - k).toDouble * c0
-            if (hit1.isEmpty && llr >= up) hit1 = Some((n, k))
-            if (hit0.isEmpty && llr <= dn) hit0 = Some((n, k))
-          }
-          val h1Wins = hit1.isDefined &&
-            (hit0.isEmpty || hit1.get._1 < hit0.get._1)
-          val decision =
-            if (h1Wins) "accept_h1"
-            else if (hit0.isDefined) "accept_h0"
-            else "continue"
-          val nAt: java.lang.Long = (hit1, hit0) match {
-            case (Some(a), Some(b)) => java.lang.Long.valueOf(math.min(a._1, b._1))
-            case (Some(a), None) => java.lang.Long.valueOf(a._1)
-            case (None, Some(b)) => java.lang.Long.valueOf(b._1)
-            case _ => null
-          }
-          val kAt: java.lang.Long =
-            if (h1Wins) java.lang.Long.valueOf(hit1.get._2)
-            else hit0.map(b => java.lang.Long.valueOf(b._2)).orNull
-          val snap = st.snap + 1
-          state.update(SprtState(flags, snap))
-          Iterator(SprtOut(snap, n, k, decision, nAt, kAt))
-      }
-  }
-
-  // ----------------------------------------------------- A/A calibration
-
-  final case class AaState(cents: Map[Long, Long], snap: Long)
-  /** n0/n1 are nullable: an experiment whose variant arm has no users
-    * yet reports NULL for that arm (the batch `max(when(...))` cell
-    * semantics), not 0. */
-  final case class AaOut(snapshot: Long, exp_id: Long,
-      n0: java.lang.Long, n1: java.lang.Long,
-      mean0_cents: java.lang.Double, mean1_cents: java.lang.Double,
-      z_stat: java.lang.Double, false_positive: Boolean)
-
-  /** md5-derived experiment hash, identical to the batch operator's
-    * `conv(substring(md5(user_id), 1, 15), 16, 10) % 16`. */
-  private[graft] def aaHash(userId: Long): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(userId.toString.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16) % 16
-  }
-
-  /** Streaming face of [[graft.ops.Behavior.aaCalibration]] (VERDICT r8
-    * task 7): the 8 hash-derived null experiments re-scored after every
-    * micro-batch — the platform health monitor as a live dashboard
-    * rather than a nightly batch. Events route to their experiment by
-    * the same md5 hash as the batch side, so each experiment's group
-    * state is only ITS users' cent totals; per snapshot the group
-    * recomputes the Welch z from exact integer (n, Σx, Σx²) cells —
-    * the identical IEEE operation sequence as the batch column
-    * expressions, so per-prefix equality holds to the bit.
-    *
-    * State: O(users/8) longs per experiment key, map-side partitioned
-    * by exp_id (8-way keyed state — the natural Structured Streaming
-    * sharding of a multi-experiment monitor). */
-  def aaCalibStream(events: Dataset[Event]): Dataset[AaOut] = {
-    import events.sparkSession.implicits._
-    events
-      .filter(_.event_type == "purchase")
-      .groupByKey(e => aaHash(e.user_id) % 8)
-      .flatMapGroupsWithState[AaState, AaOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (expId: Long, batch: Iterator[Event], state: GroupState[AaState]) =>
-          val st = state.getOption.getOrElse(AaState(Map.empty, 0L))
-          var cents = st.cents
-          batch.foreach { e =>
-            cents = cents.updated(e.user_id,
-              cents.getOrElse(e.user_id, 0L) + centsOf(e.value))
-          }
-          var n0 = 0L; var sx0 = 0L; var sq0 = 0L
-          var n1 = 0L; var sx1 = 0L; var sq1 = 0L
-          cents.foreach { case (u, c) =>
-            if (aaHash(u) / 8 == 0) { n0 += 1; sx0 += c; sq0 += c * c }
-            else { n1 += 1; sx1 += c; sq1 += c * c }
-          }
-          def round6(x: Double): Double =
-            BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          def mean(sx: Long, n: Long): java.lang.Double =
-            if (n == 0) null else java.lang.Double.valueOf(round6(sx.toDouble / n.toDouble))
-          def varm(sq: Long, sx: Long, n: Long): Double =
-            (sq.toDouble - sx.toDouble * sx.toDouble / n.toDouble) /
-              math.max(n.toDouble - 1.0, 1.0) / n.toDouble
-          // fp compares the UNROUNDED z, exactly like the batch column
-          // (rounding happens only on the shipped z_stat)
-          val zRaw: Option[Double] =
-            if (n0 >= 2 && n1 >= 2)
-              Some((sx1.toDouble / n1.toDouble - sx0.toDouble / n0.toDouble) /
-                math.sqrt(varm(sq1, sx1, n1) + varm(sq0, sx0, n0)))
-            else None
-          val z: java.lang.Double =
-            zRaw.map(v => java.lang.Double.valueOf(round6(v))).orNull
-          val fp = zRaw.exists(v => math.abs(v) > 1.959963984540054)
-          val snap = st.snap + 1
-          state.update(AaState(cents, snap))
-          def nOrNull(n: Long): java.lang.Long =
-            if (n == 0) null else java.lang.Long.valueOf(n)
-          Iterator(AaOut(snap, expId, nOrNull(n0), nOrNull(n1),
-            mean(sx0, n0), mean(sx1, n1), z, fp))
-      }
-  }
-
   // --------------------------------------------- Mantel-Haenszel monitor
 
   final case class MhState(cells: Map[(Long, Long), (Long, Long)], snap: Long)
@@ -748,13 +467,12 @@ object EventStreams {
 
   /** Streaming face of [[graft.ops.Behavior.mantelHaenszel]]: the
     * activity-stratified variant→conversion monitor re-adjudicated
-    * after every micro-batch — the confounder-adjusted live dashboard
-    * next to [[sprtStream]]/[[aaCalibStream]]. A late event can move a
-    * user-week ACROSS strata (its event count grows) or flip its
-    * conversion, so the honest incremental rendering keeps the
-    * per-user-week (count, conv) map as state and rebuilds the ≤5
-    * stratum 2×2 cells per snapshot — the stratum census is O(5), the
-    * replay O(user-weeks), same contract as the SPRT face. All double
+    * after every micro-batch — the confounder-adjusted live dashboard.
+    * A late event can move a user-week ACROSS strata (its event count
+    * grows) or flip its conversion, so the honest incremental rendering
+    * keeps the per-user-week (count, conv) map as state and rebuilds the
+    * ≤5 stratum 2×2 cells per snapshot — the stratum census is O(5), the
+    * replay O(user-weeks). All double
     * arithmetic replays the batch column expressions' IEEE sequence
     * (stratum-sorted fold, one ½ continuity literal), so per-prefix
     * equality holds to the bit; or_mh/log_or_mh/cmh_chi2/reject_95

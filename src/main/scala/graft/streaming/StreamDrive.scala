@@ -57,30 +57,40 @@ object StreamDrive {
       }
     }
 
-    /** Complete-mode window aggregation faces: per-prefix equality of
-      * the streaming table vs the same face over the static prefix. */
-    def driveComplete(face: String, f: DataFrame => DataFrame): Unit = {
-      val input = MemoryStream[Event]
-      val q = f(input.toDF())
-        .writeStream.format("memory").queryName(s"drive_$face")
-        .outputMode("complete").start()
+    /** Replay the chunks, in order, through `f` over `inputs` fresh
+      * MemoryStreams (each chunk goes to every input) into a memory sink;
+      * after each chunk is fully processed, `check(sink, i, prefix)` lists
+      * that prefix's mismatches. */
+    def drive(face: String, mode: String, inputs: Int = 1)(
+        f: Seq[MemoryStream[Event]] => DataFrame)(
+        check: (DataFrame, Int, Seq[Event]) => Seq[String]): Unit = {
+      val ins = Seq.fill(inputs)(MemoryStream[Event])
+      val q = f(ins).writeStream.format("memory").queryName(s"drive_$face")
+        .outputMode(mode).start()
       val errs = scala.collection.mutable.ArrayBuffer.empty[String]
       try {
         var prefix = Seq.empty[Event]
         chunks.zipWithIndex.foreach { case (chunk, i) =>
-          if (chunk.nonEmpty) input.addData(chunk)
+          if (chunk.nonEmpty) ins.foreach(_.addData(chunk))
           q.processAllAvailable()
           prefix ++= chunk
-          val got = canon(spark.table(s"drive_$face"))
-          val want = canon(f(prefix.toDF()))
-          if (got != want)
-            errs += s"prefix ${i + 1}/${chunks.size} (${prefix.size} rows): " +
-              s"stream ${got.size} rows != batch ${want.size} rows; " +
-              s"first diff: ${(want.diff(got) ++ got.diff(want)).headOption}"
+          errs ++= check(spark.table(s"drive_$face"), i, prefix)
         }
       } finally q.stop()
       report(face, errs.toSeq)
     }
+
+    /** Complete-mode window aggregation faces: per-prefix equality of
+      * the streaming table vs the same face over the static prefix. */
+    def driveComplete(face: String, g: DataFrame => DataFrame): Unit =
+      drive(face, "complete")(ins => g(ins.head.toDF())) { (sink, i, prefix) =>
+        val got = canon(sink)
+        val want = canon(g(prefix.toDF()))
+        if (got == want) Nil
+        else Seq(s"prefix ${i + 1}/${chunks.size} (${prefix.size} rows): " +
+          s"stream ${got.size} rows != batch ${want.size} rows; " +
+          s"first diff: ${(want.diff(got) ++ got.diff(want)).headOption}")
+      }
 
     driveComplete("hourly_tumbling", EventStreams.hourlyTumbling)
     driveComplete("sliding_counts", EventStreams.slidingCounts)
@@ -88,93 +98,52 @@ object StreamDrive {
 
     // dedup: append mode; per-prefix the emitted id-set must equal the
     // distinct id-set of the prefix (row choice per id is unspecified)
-    locally {
-      val face = "dedup_events"
-      val input = MemoryStream[Event]
-      val q = EventStreams.dedupEvents(input.toDF())
-        .writeStream.format("memory").queryName(s"drive_$face")
-        .outputMode("append").start()
-      val errs = scala.collection.mutable.ArrayBuffer.empty[String]
-      try {
-        var prefix = Seq.empty[Event]
-        chunks.zipWithIndex.foreach { case (chunk, i) =>
-          if (chunk.nonEmpty) input.addData(chunk)
-          q.processAllAvailable()
-          prefix ++= chunk
-          val got = spark.table(s"drive_$face")
-            .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
-          val want = prefix.map(_.event_id).distinct.sorted
-          if (got != want)
-            errs += s"prefix ${i + 1}: stream ids ${got.size} != " +
-              s"distinct prefix ids ${want.size}"
-        }
-      } finally q.stop()
-      report(face, errs.toSeq)
+    drive("dedup_events", "append")(ins => EventStreams.dedupEvents(ins.head.toDF())) {
+      (sink, i, prefix) =>
+        val got = sink.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+        val want = prefix.map(_.event_id).distinct.sorted
+        if (got == want) Nil
+        else Seq(s"prefix ${i + 1}: stream ids ${got.size} != " +
+          s"distinct prefix ids ${want.size}")
     }
 
     // stream-stream interval join (views ⋈ clicks within 30 min): the
     // in-order feed means every joinable pair inside the prefix has
     // been emitted by the time the prefix is fully processed
-    locally {
-      val face = "correlate_streams"
-      val vIn = MemoryStream[Event]
-      val cIn = MemoryStream[Event]
-      val q = EventStreams.correlateStreams(
-          vIn.toDF().filter(col("event_type") === "view"),
-          cIn.toDF().filter(col("event_type") === "click"))
-        .writeStream.format("memory").queryName(s"drive_$face")
-        .outputMode("append").start()
-      val errs = scala.collection.mutable.ArrayBuffer.empty[String]
-      try {
-        var prefix = Seq.empty[Event]
-        chunks.zipWithIndex.foreach { case (chunk, i) =>
-          if (chunk.nonEmpty) { vIn.addData(chunk); cIn.addData(chunk) }
-          q.processAllAvailable()
-          prefix ++= chunk
-          val pdf = prefix.toDF()
-          val got = canon(spark.table(s"drive_$face"))
-          val want = canon(EventStreams.correlateStreams(
-            pdf.filter(col("event_type") === "view"),
-            pdf.filter(col("event_type") === "click")))
-          if (got != want)
-            errs += s"prefix ${i + 1}: stream ${got.size} pairs != " +
-              s"batch ${want.size} pairs"
-        }
-      } finally q.stop()
-      report(face, errs.toSeq)
+    def correlate(views: DataFrame, clicks: DataFrame): DataFrame =
+      EventStreams.correlateStreams(
+        views.filter(col("event_type") === "view"),
+        clicks.filter(col("event_type") === "click"))
+    drive("correlate_streams", "append", inputs = 2)(
+        ins => correlate(ins(0).toDF(), ins(1).toDF())) { (sink, i, prefix) =>
+      val pdf = prefix.toDF()
+      val got = canon(sink)
+      val want = canon(correlate(pdf, pdf))
+      if (got == want) Nil
+      else Seq(s"prefix ${i + 1}: stream ${got.size} pairs != " +
+        s"batch ${want.size} pairs")
     }
 
     // typed Mantel–Haenszel monitor: final snapshot vs the batch
     // operator (per-prefix algebra is MhMonitorStreamSpec's job)
-    locally {
-      val face = "mh_monitor_final"
-      if (all.isEmpty) {
-        // no events → no snapshots; the empty-input behavior is pinned
-        // by StreamEdgeSpec — nothing to compare against the batch
-        // operator's aggregate row here
-        println(s"[stream_drive] PASS $face (empty corpus, no snapshots)")
-      } else {
-        val input = MemoryStream[Event]
-        val q = EventStreams.mhStream(input.toDS())
-          .writeStream.format("memory").queryName(s"drive_$face")
-          .outputMode("append").start()
-        val errs = scala.collection.mutable.ArrayBuffer.empty[String]
-        try {
-          chunks.foreach { chunk =>
-            if (chunk.nonEmpty) input.addData(chunk)
-            q.processAllAvailable()
-          }
-          val fin = spark.table(s"drive_$face").collect()
-            .maxBy(_.getAs[Long]("snapshot"))
-          val batch = graft.ops.Behavior.mantelHaenszel(spark, sfDir).head()
-          Seq("n_strata", "or_mh", "log_or_mh", "cmh_chi2", "reject_95")
-            .foreach { c =>
+    if (all.isEmpty) {
+      // no events → no snapshots; the empty-input behavior is pinned
+      // by StreamEdgeSpec — nothing to compare against the batch
+      // operator's aggregate row here
+      println("[stream_drive] PASS mh_monitor_final (empty corpus, no snapshots)")
+    } else {
+      drive("mh_monitor_final", "append")(ins => EventStreams.mhStream(ins.head.toDS()).toDF()) {
+        (sink, i, _) =>
+          if (i < chunks.size - 1) Nil
+          else {
+            val fin = sink.collect().maxBy(_.getAs[Long]("snapshot"))
+            val batch = graft.ops.Behavior.mantelHaenszel(spark, sfDir).head()
+            Seq("n_strata", "or_mh", "log_or_mh", "cmh_chi2", "reject_95").flatMap { c =>
               val g = String.valueOf(fin.getAs[Any](c))
               val w = String.valueOf(batch.getAs[Any](c))
-              if (g != w) errs += s"$c: stream $g != batch $w"
+              if (g != w) Some(s"$c: stream $g != batch $w") else None
             }
-        } finally q.stop()
-        report(face, errs.toSeq)
+          }
       }
     }
 

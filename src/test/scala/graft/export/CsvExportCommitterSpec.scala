@@ -37,12 +37,12 @@ class CsvExportCommitterSpec extends GraftTestBase {
     // write 1: multi-part layout (4 shuffle partitions → up to 4 parts)
     val first = (1 to 100).map(i => (i, "old")).toDF("id", "tag")
       .repartition(4)
-    CsvExport.writeCsv(first, out, singleObject = false)
+    first.write.options(CsvExport.writerOptions).csv(out)
     committedParts(out).size should be > 1
     // write 2: SMALLER single-object layout over the same path — the
     // classic overwrite hazard is write 1's extra parts surviving
     val second = Seq((1, "new")).toDF("id", "tag")
-    CsvExport.writeCsv(second, out, singleObject = true)
+    CsvExport.writeCsv(second, out)
     val parts = committedParts(out)
     parts.size shouldBe 1
     val lines = Files.readAllLines(parts.head).asScala
@@ -58,7 +58,7 @@ class CsvExportCommitterSpec extends GraftTestBase {
     val poisoned = spark.range(0, 100, 1, 4)
       .select(col("id"), expr("1 div (id - 97)").as("boom"))
     an[Exception] should be thrownBy {
-      CsvExport.writeCsv(poisoned, out, singleObject = false)
+      CsvExport.writeCsv(poisoned, out)
     }
     // failed job: nothing committed, no _SUCCESS — a reader listing the
     // destination sees no torn output (attempt files stay quarantined

@@ -43,10 +43,10 @@ class ObjectStoreCommitterSpec extends GraftTestBase {
       val out = s"$root/exports/data.csv"
       val first = (1 to 100).map(i => (i, "old")).toDF("id", "tag")
         .repartition(4)
-      CsvExport.writeCsv(first, out, singleObject = false)
+      first.write.options(CsvExport.writerOptions).csv(out)
       committedCsvKeys("exports/data.csv").size should be > 1
       val second = Seq((1, "new")).toDF("id", "tag")
-      CsvExport.writeCsv(second, out, singleObject = true)
+      CsvExport.writeCsv(second, out)
       val keys = committedCsvKeys("exports/data.csv")
       keys.size shouldBe 1
       new String(ObjectStoreFileSystem.objectBytes(bucketName, keys.head),
@@ -62,7 +62,7 @@ class ObjectStoreCommitterSpec extends GraftTestBase {
       val poisoned = spark.range(0, 100, 1, 4)
         .select(col("id"), expr("1 div (id - 97)").as("boom"))
       an[Exception] should be thrownBy {
-        CsvExport.writeCsv(poisoned, out, singleObject = false)
+        CsvExport.writeCsv(poisoned, out)
       }
       committedCsvKeys("exports/fail.csv") shouldBe empty
       ObjectStoreFileSystem.objectKeys(bucketName)

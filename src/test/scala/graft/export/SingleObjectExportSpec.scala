@@ -12,7 +12,7 @@ import graft.GraftTestBase
 import graft.schema.Listings
 import graft.sources.ObjectStoreFileSystem
 
-/** The single-object export (`singleObject = true`) writes its body as
+/** The single-object export (`CsvExport.writeCsv`) writes its body as
   * parallel headerless parts and joins them into one object. That object
   * must be byte for byte what a one-task write of the same frame gives —
   * `coalesce(1).write.csv` with the export's own options — and a failed
@@ -107,7 +107,7 @@ class SingleObjectExportSpec extends GraftTestBase {
     val df = spark.range(0, 40, 1, 4)
       .select(col("id").as("a,b"), concat(lit("v"), col("id")).as("say \"hi\""))
     val out = tempDir("so-names") + "/names.csv"
-    CsvExport.writeCsv(df, out, singleObject = true) shouldBe 40L
+    CsvExport.writeCsv(df, out) shouldBe 40L
     val bytes = onlyCsv(out)
     new String(bytes, "UTF-8").linesIterator.next() shouldBe "\"a,b\",\"say \"\"hi\"\"\""
     bytes shouldBe oneTask(df)
@@ -131,7 +131,7 @@ class SingleObjectExportSpec extends GraftTestBase {
 
   it should "leave no object and no staging behind when the write fails mid-job" in {
     val out = tempDir("so-fail") + "/data.csv"
-    an[Exception] should be thrownBy CsvExport.writeCsv(poisoned, out, singleObject = true)
+    an[Exception] should be thrownBy CsvExport.writeCsv(poisoned, out)
     files(out).filter(p => p.getFileName.toString.endsWith(".csv")) shouldBe empty
     Files.exists(Paths.get(out, "_SUCCESS")) shouldBe false
     files(out).filterNot(_.toString.contains("_temporary")) shouldBe empty
@@ -144,7 +144,7 @@ class SingleObjectExportSpec extends GraftTestBase {
     ObjectStoreFileSystem.clearBucket(bucket)
     try {
       an[Exception] should be thrownBy
-        CsvExport.writeCsv(poisoned, s"mocks3://$bucket/exports/fail.csv", singleObject = true)
+        CsvExport.writeCsv(poisoned, s"mocks3://$bucket/exports/fail.csv")
       val keys = ObjectStoreFileSystem.objectKeys(bucket).filter(_.startsWith("exports/fail.csv"))
       keys.filter(_.endsWith(".csv")) shouldBe empty
       keys should not contain "exports/fail.csv/_SUCCESS"

@@ -552,7 +552,8 @@ class BehaviorSpec extends GraftTestBase {
       val u = r.getLong(0)
       r.getInt(1) shouldBe graft.Scratch.variantOf(u)
       r.getInt(1).toLong shouldBe graft.streaming.EventStreams.variantHash(u)
-      r.getLong(2) shouldBe graft.streaming.EventStreams.aaHash(u)
+      r.getLong(2) shouldBe
+        java.lang.Long.parseLong(graft.Scratch.md5hex(u.toString).take(15), 16) % 16
     }
   }
 }

@@ -44,7 +44,7 @@ class PipelinePropSpec extends GraftTestBase {
       val rows = strings.zipWithIndex.map { case (s, i) => Row(i.toLong, s, i * 1.5) }
       val dir = tempDir("csvprop")
       val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      CsvExport.writeCsv(df, s"$dir/out", singleObject = true)
+      CsvExport.writeCsv(df, s"$dir/out")
       val back = spark.read
         .option("header", "true")
         .option("nullValue", "")

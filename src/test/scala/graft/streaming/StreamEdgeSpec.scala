@@ -75,13 +75,6 @@ class StreamEdgeSpec extends GraftTestBase {
         in => EventStreams.transitionStream(in.toDS()).toDF()),
       ("asofEnrichStream", "append",
         in => EventStreams.asofEnrichStream(in.toDS()).toDF()),
-      ("topkStream", "append", in => EventStreams.topkStream(in.toDS()).toDF()),
-      ("quantileStream", "append",
-        in => EventStreams.quantileStream(in.toDS()).toDF()),
-      ("cmsStream", "append", in => EventStreams.cmsStream(in.toDS()).toDF()),
-      ("sprtStream", "append", in => EventStreams.sprtStream(in.toDS()).toDF()),
-      ("aaCalibStream", "append",
-        in => EventStreams.aaCalibStream(in.toDS()).toDF()),
       ("mhStream", "append", in => EventStreams.mhStream(in.toDS()).toDF()),
       ("enrichEvents", "append", in => EventStreams.enrichEvents(in.toDF(),
         Seq((1L, "gold")).toDF("user_id", "tier"))))

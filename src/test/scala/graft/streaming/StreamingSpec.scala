@@ -358,129 +358,6 @@ class StreamingSpec extends GraftTestBase {
     } finally query.stop()
   }
 
-  behavior of "topkStream"
-
-  it should "keep the latest per-type leaderboard equal to the batch top-k across splits" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val all = graft.Tables.events(spark, sf)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event].orderBy("ts", "event_id").collect()
-    val (a, rest) = all.splitAt(all.length / 3)
-    val (b, c) = rest.splitAt(rest.length / 2)
-    val input = MemoryStream[Event]
-    val query = EventStreams.topkStream(input.toDS())
-      .writeStream.format("memory").queryName("topk_spec")
-      .outputMode("append").start()
-    try {
-      Seq(a, b, c).foreach { part =>
-        input.addData(part.toSeq)
-        query.processAllAvailable()
-      }
-      // latest snapshot per event type is the current leaderboard
-      val rows = spark.table("topk_spec").collect()
-      val latest = rows.groupBy(_.getAs[String]("event_type")).toSeq.flatMap {
-        case (_, rs) =>
-          val maxSnap = rs.map(_.getAs[Long]("snapshot")).max
-          rs.filter(_.getAs[Long]("snapshot") == maxSnap).toSeq
-      }
-      val got = latest.map(r => (r.getAs[String]("event_type"),
-        r.getAs[Int]("rank"), r.getAs[Long]("user_id"),
-        r.getAs[Long]("n_events"))).toSet
-      // batch reference: exact per-(type,user) counts, top 3 per type
-      val batch = all.groupBy(e => (e.event_type, e.user_id))
-        .map { case ((t, u), es) => (t, u, es.length.toLong) }
-        .groupBy(_._1).flatMap { case (_, g) =>
-          g.toSeq.sortBy { case (_, u, n) => (-n, u) }.take(3).zipWithIndex
-            .map { case ((t, u, n), i) => (t, i + 1, u, n) }
-        }.toSet
-      got shouldBe batch
-      // every type emitted one snapshot per micro-batch that contained it
-      rows.map(_.getAs[Long]("snapshot")).max shouldBe 3L
-    } finally query.stop()
-  }
-
-  behavior of "quantileStream"
-
-  it should "hold the sketch rank contract at the final snapshot per type" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val all = graft.Tables.events(spark, sf)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event].orderBy("ts", "event_id").collect()
-    val (a, rest) = all.splitAt(all.length / 3)
-    val (b, c) = rest.splitAt(rest.length / 2)
-    val input = MemoryStream[Event]
-    val query = EventStreams.quantileStream(input.toDS())
-      .writeStream.format("memory").queryName("quant_spec")
-      .outputMode("append").start()
-    try {
-      Seq(a, b, c).foreach { part =>
-        input.addData(part.toSeq)
-        query.processAllAvailable()
-      }
-      val rows = spark.table("quant_spec").collect()
-      val byType = all.groupBy(_.event_type)
-      byType.foreach { case (t, es) =>
-        val latest = rows.filter(_.getAs[String]("event_type") == t)
-          .maxBy(_.getAs[Long]("snapshot"))
-        latest.getAs[Long]("n_seen") shouldBe es.length.toLong
-        val sorted = es.map(_.value).sorted
-        Seq(0.25 -> "p25", 0.5 -> "p50", 0.75 -> "p75").foreach {
-          case (q, c) =>
-            val est = latest.getAs[Double](c)
-            val rank = sorted.count(_ <= est).toDouble / sorted.length
-            math.abs(rank - q) should be <= 0.05
-        }
-      }
-      // one snapshot per micro-batch per type that received data
-      rows.map(_.getAs[Long]("snapshot")).max shouldBe 3L
-    } finally query.stop()
-  }
-
-  behavior of "cmsStream"
-
-  it should "equal the batch sketch at the final snapshot and overestimate-only" in {
-    import spark.implicits._
-    import graft.functions.CountMin
-    implicit val sqlCtx = spark.sqlContext
-    val all = graft.Tables.events(spark, sf)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event].orderBy("ts", "event_id").collect()
-    val (a, rest) = all.splitAt(all.length / 3)
-    val (b, c) = rest.splitAt(rest.length / 2)
-    val input = MemoryStream[Event]
-    val query = EventStreams.cmsStream(input.toDS())
-      .writeStream.format("memory").queryName("cms_spec")
-      .outputMode("append").start()
-    try {
-      Seq(a, b, c).foreach { part =>
-        input.addData(part.toSeq)
-        query.processAllAvailable()
-      }
-      val rows = spark.table("cms_spec").collect()
-      all.groupBy(_.event_type).foreach { case (t, es) =>
-        val latest = rows.filter(_.getAs[String]("event_type") == t)
-        val lastSnap = latest.map(_.getAs[Long]("snapshot")).max
-        val fin = latest.filter(_.getAs[Long]("snapshot") == lastSnap)
-        fin.head.getAs[Long]("n_seen") shouldBe es.length.toLong
-        // micro-batch boundaries must not change the sketch: the
-        // streamed estimates equal a single-pass batch sketch exactly
-        val batchSketch = CountMin.finish(
-          es.foldLeft(CountMin.zero)((bf, e) =>
-            CountMin.reduce(bf, CountMin.keyHash(e.user_id.toString))))
-        fin.foreach { r =>
-          val u = r.getAs[Long]("user_id")
-          val est = r.getAs[Long]("est")
-          est shouldBe CountMin.estimate(batchSketch, CountMin.keyHash(u.toString))
-          est should be >= es.count(_.user_id == u).toLong
-        }
-      }
-      // probes × types × batches rows, snapshots sequenced per type
-      rows.map(_.getAs[Long]("snapshot")).max shouldBe 3L
-    } finally query.stop()
-  }
-
   behavior of "incrementalTotals (streaming materialized view)"
 
   it should "refresh only touched keys and retain untouched partitions" in {
