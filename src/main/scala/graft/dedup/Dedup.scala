@@ -732,7 +732,7 @@ object Dedup {
       |FROM agg""".stripMargin
 
   /** Non-overlapping block width (tokens) for [[blockDedup]]. */
-  val blockLen = 10
+  private val blockLen = 10
 
   /** BLOCK-LEVEL survivorship dedup — the exact-substring-dedup
     * approximation at fixed granularity: each document is cut into
@@ -1112,7 +1112,7 @@ object Dedup {
 
   /** Truth threshold for [[dedupEval]]: a pair is a REAL near-dup iff
     * its exact shingle Jaccard reaches this. */
-  val dedupEvalJaccard = 0.5
+  private val dedupEvalJaccard = 0.5
 
   /** DEDUP PIPELINE EVALUATION — precision/recall of the [[minhashLsh]]
     * banding against exact-Jaccard ground truth, the END-TO-END grade

@@ -65,7 +65,7 @@ object TokenStats {
     StructField("n_stopwords", IntegerType, nullable = false),
     StructField("n_short", IntegerType, nullable = false)))
 
-  def buildStopSet(words: Array[String]): java.util.HashSet[UTF8String] = {
+  private def buildStopSet(words: Array[String]): java.util.HashSet[UTF8String] = {
     val s = new java.util.HashSet[UTF8String](words.length * 2)
     words.foreach(w => s.add(UTF8String.fromString(w)))
     s

@@ -35,7 +35,7 @@ object BatchLoad {
     * the load is deterministic and testable (SURVEY.md §7.1); the
     * reference's `CURRENT_DATE` behavior is `LocalDate.now` at the caller.
     */
-  def stampBatch(df: DataFrame, columns: Seq[String], runDate: LocalDate): DataFrame =
+  private def stampBatch(df: DataFrame, columns: Seq[String], runDate: LocalDate): DataFrame =
     df.select(columns.map(col): _*)
       .withColumn("load_date", lit(java.sql.Date.valueOf(runDate)))
       .withColumn("processed_at", current_timestamp())
@@ -43,7 +43,7 @@ object BatchLoad {
   /** Idempotent load: overwrite only the `load_date` partitions present in
     * `batch`. Requires `partitionOverwriteMode=dynamic`, set per-write so
     * the session default is untouched. */
-  def loadBatch(batch: DataFrame, tablePath: String): Unit =
+  private def loadBatch(batch: DataFrame, tablePath: String): Unit =
     batch.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")

@@ -54,11 +54,11 @@ object CsvIngest {
     * "invalid input syntax for type numeric" on exactly that input — the
     * README:148-152 regression this engine must reproduce.
     */
-  def readCsv(
+  private def readCsv(
       spark: SparkSession,
       paths: Seq[String],
       schema: StructType,
-      mode: BadRecordsMode = FailFast): DataFrame = mode match {
+      mode: BadRecordsMode): DataFrame = mode match {
     case FailFast => readCsvStrict(spark, paths, schema)
     case other =>
       reader(spark)
@@ -99,7 +99,7 @@ object CsvIngest {
     * and performs the casts as catalyst expressions with `raise_error` on
     * the abort branches. Still a single codegen'd distributed scan.
     */
-  def readCsvStrict(spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame = {
+  private def readCsvStrict(spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField}
     val rawSchema = StructType(schema.fields.map(f =>
       StructField(f.name, StringType, nullable = true)))

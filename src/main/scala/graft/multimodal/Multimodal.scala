@@ -86,7 +86,7 @@ object Multimodal {
     * concatenated P6 streams (frame f's pattern is seeded seed+13f), the
     * de-facto animated-PPM convention — frame boundaries are only
     * discoverable by parsing each header. */
-  def videoTable(s: SparkSession, d: String): DataFrame =
+  private def videoTable(s: SparkSession, d: String): DataFrame =
     synthesized(s, d) { (id, len) =>
       val (w, h) = dims(len)
       val frames = (0 until videoFrames).map(f =>
@@ -658,7 +658,7 @@ object Multimodal {
     * chunk would carry it. Sample count derives from the text byte
     * length ((len mod 1024) + 512) — the generation contract the oracle
     * mirrors in integer arithmetic without touching a byte. */
-  def audioTable(s: SparkSession, d: String): DataFrame =
+  private def audioTable(s: SparkSession, d: String): DataFrame =
     synthesized(s, d) { (id, len) =>
       val n = (len % 1024) + 512
       val sd = ((id * 131) % pcmMod).toInt

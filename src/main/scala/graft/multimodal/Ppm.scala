@@ -33,7 +33,7 @@ object Ppm {
     * offset just past its pixel data (the next frame boundary in a
     * concatenated stream). Throws on malformed input — a corrupt media
     * payload must fail loudly, not decode to garbage. */
-  def decodeAt(bytes: Array[Byte], off: Int): (Image, Int) = {
+  private def decodeAt(bytes: Array[Byte], off: Int): (Image, Int) = {
     var i = off
     def fail(msg: String) =
       throw new IllegalArgumentException(s"PPM parse error at $i: $msg")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import graft.Pin.Pinned
+import graft.ops.Relational.dsum
 
 /** Analytics widening over the harness testdata: reshaping (pivot/unpivot),
   * explicit grouping sets, exact percentiles, statistical moments, ordered
@@ -28,7 +29,6 @@ import graft.Pin.Pinned
 object Analytics {
 
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-  private def dsum(c: Column): Column = sum(dec(c)).cast("double")
 
   // ------------------------------------------------------------- reshaping
 
@@ -980,7 +980,7 @@ object Analytics {
     * pass is O(partitions × 5) metadata. Same oracle as the window form
     * (the q_weighted_median_dist shared-oracle proof). */
   /** Cutoff for [[topkMergeCheck]]. */
-  val tkMerge = 10
+  private val tkMerge = 10
 
   /** DISTRIBUTED TOP-K MERGE CHECK — the lemma every scatter-gather
     * leaderboard relies on, stated as a self-checking query: the global
@@ -1110,7 +1110,7 @@ object Analytics {
 
   /** Coarse histogram width for [[theilSenTrend]]'s two-pass selection
     * (slope units, i.e. cents/day before the final /100 rendering). */
-  val theilSenBucketWidth = 4096.0
+  private val theilSenBucketWidth = 4096.0
 
   def theilSenTrend(s: SparkSession, d: String): DataFrame = {
     // TWO-PASS DISTRIBUTED EXACT MEDIAN — the selection algorithm, not a

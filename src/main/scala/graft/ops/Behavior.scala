@@ -472,7 +472,7 @@ object Behavior {
     * the exact column oracles directly, the boolean oracles as a TRUE
     * constant. The default sketch (lgK=12) observes well under 2%
     * relative error here; the asserted bound leaves 5× headroom. */
-  val wauRelErrBound = 0.10
+  private val wauRelErrBound = 0.10
 
   def rollingActiveUsersSketch(s: SparkSession, d: String): DataFrame = {
     val daySketch = Tables.events(s, d)
@@ -537,7 +537,7 @@ object Behavior {
 
   /** Pre-period boundary for [[cupedReadout]]: activity strictly before
     * this date is covariate, the rest is the experiment metric. */
-  val cupedSplitDate = "2024-01-16"
+  private val cupedSplitDate = "2024-01-16"
 
   /** One row per user: `variant` (the [[arm]]) and the user's purchase
     * revenue in cents before (`x`, the CUPED covariate) and from
@@ -2223,7 +2223,7 @@ object Behavior {
   }
 
   /** Number of randomization sites for [[iccDesignEffect]]. */
-  val iccSites = 97L
+  private val iccSites = 97L
 
   /** INTRACLASS CORRELATION + DESIGN EFFECT for CLUSTER-randomized
     * experiments — the power-planning number every geo/site-randomized
@@ -2698,7 +2698,7 @@ object Behavior {
 
   /** Paired-split boundary for [[wilcoxonSignedRank]] — the event
     * window's midpoint (Jan 1–30), pinned as a literal. */
-  val wilcoxonSplit = "2024-01-16 00:00:00"
+  private val wilcoxonSplit = "2024-01-16 00:00:00"
 
   /** WILCOXON SIGNED-RANK — the PAIRED companion to [[mannWhitney]]:
     * per-user spend in the window's first half vs second half (only

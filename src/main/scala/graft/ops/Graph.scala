@@ -522,7 +522,7 @@ object Graph {
 
   /** HLL relative-error budget for [[neighborhoodFunction]]'s sketch
     * column (generous 3σ at rsd 0.02 plus small-count slack). */
-  val nfErrBound = 0.15
+  private val nfErrBound = 0.15
 
   /** NEIGHBORHOOD FUNCTION N(h) — |{v : d(seeds, v) ≤ h}| for
     * h = 0..[[bfsMaxHops]], computed BOTH ways side by side:

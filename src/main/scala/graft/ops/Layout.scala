@@ -27,7 +27,7 @@ import graft.Tables
 object Layout {
 
   /** Bits per dimension in the interleaved key (16-bit zkey). */
-  val zBits = 8
+  private val zBits = 8
 
   /** Morton-interleave two `zBits`-bit non-negative columns:
     * bit i of x lands at position 2i, bit i of y at 2i+1. */

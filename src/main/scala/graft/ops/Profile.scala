@@ -47,7 +47,7 @@ object Profile {
         col("min_num"), col("max_num"), col("min_str"), col("max_str"))
   }
 
-  val customerCols: Seq[String] =
+  private val customerCols: Seq[String] =
     Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
 
   def profileCustomer(s: SparkSession, d: String): DataFrame =

@@ -143,7 +143,7 @@ object Quality {
   /** PSI bucket width and period cut, named so the oracle interpolates
     * the SAME constants. */
   val psiBucketWidth = 50000L
-  val psiCutDate = "1998-01-01"
+  private val psiCutDate = "1998-01-01"
 
   /** Population Stability Index drift audit — the distribution-shift
     * check every production scoring pipeline runs between a reference

@@ -35,7 +35,7 @@ object Relational {
 
   /** Exact sum of a double column: cast to DECIMAL(18,2) (testdata doubles
     * carry 2 decimals), sum exactly, cast back — order-insensitive. */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
+  private[graft] def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
 
   /** Order-insensitive average: exact decimal sum / count, divided as
     * doubles (identical IEEE division in Spark and DuckDB). */

@@ -42,13 +42,13 @@ object Sketches {
     * tighter than the 0.05 default because the graded bound below needs
     * real headroom (at the default, observed error reached 5.7% on this
     * corpus; at 0.02 it stays ~1%). */
-  val hllRsd = 0.02
+  private val hllRsd = 0.02
   /** Relative-error bound asserted for the HLL++ estimate — ~5× the
     * observed maximum across SFs (headroom measured, not hoped). */
-  val hllRelErrBound = 0.10
+  private val hllRelErrBound = 0.10
   /** Relative-error bound for approx_percentile at the default accuracy
     * (rank error ≤ n/10000 — value-space slack for it). */
-  val pctRelErrBound = 0.02
+  private val pctRelErrBound = 0.02
 
   // NOTE: the floors must be DECLARED before the oracle-SQL vals that
   // interpolate them — Scala object vals initialize in declaration
@@ -84,9 +84,9 @@ object Sketches {
     * ever tuned). */
   val kllRankErrBound = 0.05
 
-  val hllContractFloor = math.ceil(1.0 / hllRelErrBound).toLong
-  val kllContractFloor = math.ceil(1.0 / kllRankErrBound).toLong
-  val pctContractFloor = 100L
+  private val hllContractFloor = math.ceil(1.0 / hllRelErrBound).toLong
+  private val kllContractFloor = math.ceil(1.0 / kllRankErrBound).toLong
+  private val pctContractFloor = 100L
 
   /** Per-orderstatus cardinality + quantile sketches graded through
     * their error contracts: one pass, partial aggregation on every map
@@ -196,7 +196,7 @@ object Sketches {
     * estimate: three HLL estimates compound, so the slack is 3× the
     * single-sketch bound (each term's error ≤ [[hllRelErrBound]] of its
     * own cardinality ≤ of the union). */
-  val overlapRelErrBound = 3 * hllRelErrBound
+  private val overlapRelErrBound = 3 * hllRelErrBound
 
   /** AUDIENCE OVERLAP — |view-days ∩ purchase-days| by
     * inclusion-exclusion over HLL sketches (|A|+|B|−|A∪B|), the
@@ -254,7 +254,7 @@ object Sketches {
     * nonzero overlap where the ±[[overlapRelErrBound]] band spans one
     * integer. Zero overlap is still graded (the band degenerates to
     * equality, which empty sketches satisfy exactly). */
-  val overlapContractFloor = math.ceil(1.0 / overlapRelErrBound).toLong
+  private val overlapContractFloor = math.ceil(1.0 / overlapRelErrBound).toLong
 
   val audienceOverlapSql: String =
     s"""WITH ev AS (

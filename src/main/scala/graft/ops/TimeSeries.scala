@@ -1242,8 +1242,8 @@ object TimeSeries {
 
   /** Seasonal-naive lag (days) and evaluation window for
     * [[forecastBacktest]]. */
-  val fcLagDays = 7
-  val fcEvalDays = 14
+  private val fcLagDays = 7
+  private val fcEvalDays = 14
 
   /** FORECAST BACKTEST — the evaluation harness a forecasting pipeline
     * gates on, applied to the cheapest defensible baselines: for the

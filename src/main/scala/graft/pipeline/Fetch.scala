@@ -26,7 +26,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 object Fetch {
 
   /** `{date}` placeholder, exactly the reference's template token. */
-  def urlFor(urlTemplate: String, date: String): String =
+  private def urlFor(urlTemplate: String, date: String): String =
     urlTemplate.replace("{date}", date)
 
   /** Fetch each date's snapshot into `landingDir` under the name

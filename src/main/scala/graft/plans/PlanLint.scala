@@ -79,7 +79,7 @@ object PlanLint {
     * row-non-increasing (Project/Filter/Exchange/Sort/Aggregate/...).
     * Generate (explode) and Expand (rollup grids) multiply rows, so they
     * break the proof — as does any join/union (binary). */
-  val smallLeafRows = 128
+  private val smallLeafRows = 128
   private def smallByConstruction(p: SparkPlan): Boolean = p match {
     case r: org.apache.spark.sql.execution.RangeExec =>
       r.numElements <= smallLeafRows
@@ -106,7 +106,7 @@ object PlanLint {
     * statuses, enumerations) — a window partitioned only by these over
     * unaggregated facts degenerates to one task per value. Schema
     * knowledge, not shape: callers with other schemas pass their own. */
-  val defaultTinyDomainColumns: Set[String] = Set(
+  private val defaultTinyDomainColumns: Set[String] = Set(
     "l_returnflag", "l_linestatus", "l_shipmode", "l_shipinstruct",
     "o_orderstatus", "o_orderpriority", "c_mktsegment", "r_name",
     "p_mfgr", "p_brand", "p_container",

@@ -38,7 +38,7 @@ object Listings {
     StructField("license", StringType))
 
   /** Lineage columns with engine-stamped defaults (dag:74-75). */
-  val lineageColumns: Seq[StructField] = Seq(
+  private val lineageColumns: Seq[StructField] = Seq(
     StructField("load_date", DateType),
     StructField("processed_at", TimestampType))
 
@@ -46,7 +46,7 @@ object Listings {
   val ingestSchema: StructType = StructType(dataColumns)
 
   /** Full table schema: data + lineage, 20 columns. */
-  val tableSchema: StructType = StructType(dataColumns ++ lineageColumns)
+  private val tableSchema: StructType = StructType(dataColumns ++ lineageColumns)
 
   val dataColumnNames: Seq[String] = dataColumns.map(_.name)
   val tableColumnNames: Seq[String] = tableSchema.fields.map(_.name).toSeq

@@ -90,7 +90,7 @@ object Similarity {
     * native [[graft.functions.SignRandomProjection]] expression (a
     * built-in-expression rendering of the same math blows past Janino's
     * 64 KB method limit and knocks the stage out of codegen). */
-  def lshBuckets(emb: Column, dim: Int): Column =
+  private def lshBuckets(emb: Column, dim: Int): Column =
     lshBucketsN(emb, dim, nTables, nPlanes)
 
   /** [[lshBuckets]] with explicit table/plane counts — the adaptive-
@@ -111,8 +111,8 @@ object Similarity {
     * (the r14 graded form's 4) makes bucket occupancy, hence candidate
     * volume, grow quadratically with n: exactly the slope-2 the scale
     * sweep flagged. */
-  val blockedTargetBucket = 32
-  val blockedTables = 8
+  private val blockedTargetBucket = 32
+  private val blockedTables = 8
   val blockedMaxPlanes = 12
 
   /** planes(n) = clamp(4, 12, ceil(log2(n / [[blockedTargetBucket]]))). */
@@ -311,11 +311,11 @@ object Similarity {
 
   /** Corpus-wide recall@3 floor for LSH (measured 0.60–0.87 across SFs;
     * the floor keeps margin below the observed minimum). */
-  val lshMinRecall = 0.4
+  private val lshMinRecall = 0.4
   /** Corpus-wide recall@3 floor for IVF, nProbe=3 of 10 partitions
     * (measured 0.27–0.53 across SFs — labels are weak clusters on this
     * noise-like corpus, so IVF's floor sits lower than LSH's). */
-  val ivfMinRecall = 0.2
+  private val ivfMinRecall = 0.2
 
   /** Graded rendering of [[lshTopK]]: corpus-wide recall-vs-brute bound. */
   def lshRecallCheck(s: SparkSession, d: String): DataFrame =
@@ -901,7 +901,7 @@ object Similarity {
   /** PQ: codewords per subspace (4-bit codes). */
   val pqCodewords = 16
   /** PQ: Lloyd iterations per subspace codebook. */
-  val pqIters = 2
+  private val pqIters = 2
 
   /** PRODUCT QUANTIZATION audit — the embedding-compression step behind
     * billion-vector ANN (IVF-PQ): each vector splits into

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.Tables
+import graft.ops.Relational
 
 /** Event-time processing over `events` — batch sessionization with a
   * DuckDB oracle, plus the Structured Streaming renderings of the same
@@ -118,11 +119,14 @@ object EventStreams {
 
   /** Tumbling 1-hour event-time window with a 10-minute watermark —
     * late events beyond the watermark are dropped, the streaming-native
-    * rendering of q_events_hourly. */
+    * rendering of q_events_hourly. `total_value` is that query's exact
+    * sum ([[graft.ops.Relational.dsum]]): a double sum would depend on
+    * the order micro-batch partials fold into the state, and differ
+    * from the batch plan's by an ulp. */
   def hourlyTumbling(events: DataFrame): DataFrame =
     withEventWatermark(events)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count("*").as("n"), sum("value").as("total_value"))
+      .agg(count("*").as("n"), Relational.dsum(col("value")).as("total_value"))
       .select(col("window.start").as("hour"), col("event_type"),
         col("n"), col("total_value"))
 
@@ -165,14 +169,6 @@ object EventStreams {
   def dedupEvents(events: DataFrame): DataFrame =
     withEventWatermark(events)
       .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream-static dimension enrichment: each micro-batch broadcast-joins
-    * the (small, slowly-changing) dimension snapshot — no state, no
-    * watermark interaction; the static side is re-read per batch, so a
-    * dimension refresh is picked up without restarting the query. The
-    * streaming face of the batch star join. */
-  def enrichEvents(events: DataFrame, userDims: DataFrame): DataFrame =
-    events.join(broadcast(userDims), Seq("user_id"), "left")
 
   /** Stream-stream interval join: pair each view with the clicks of the
     * same user within the following 30 minutes (the streaming rendering
@@ -232,138 +228,6 @@ object EventStreams {
   final case class SessionOut(user_id: Long, session_start: Timestamp,
       n_events: Long, duration_sec: Long)
 
-  final case class FunnelState(v: Long, c: Long, p: Long)
-  final case class StageOut(user_id: Long, stage: String, ts: Timestamp)
-
-  final case class TransState(lastType: String)
-  final case class TransitionOut(user_id: Long, prev_type: String, next_type: String)
-
-  /** State carries the click's ORIGINAL Timestamp: round-tripping
-    * through epoch millis would silently drop the sub-millisecond
-    * microseconds the events table carries, and the enriched output
-    * would no longer equal the batch window form bit-for-bit. */
-  final case class AsofState(ts: Timestamp, eventId: Long, value: Double)
-  /** asof fields are nullable (boxed Double / Timestamp): NULL until the
-    * user's first click, matching the batch window form's contract. */
-  final case class AsofOut(event_id: Long, user_id: Long, ts: Timestamp,
-      event_type: String, asof_click_ts: Timestamp,
-      asof_click_value: java.lang.Double)
-
-  /** Full-microsecond ordering key for a Timestamp (getTime alone is
-    * millis and would tie-break sub-ms neighbors arbitrarily). */
-  private def micros(t: Timestamp): Long =
-    (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
-
-  /** Streaming as-of enrichment: the incremental rendering of
-    * [[graft.ops.TimeSeries.asofLatestClick]] (and of the custom batch
-    * operator [[graft.plans.AsofJoin]]): every event is enriched with
-    * the same user's latest 'click' at-or-before it. State per user is
-    * ONE (ts, event_id, value) triple — the streaming as-of join's whole
-    * trick: because the dimension lookup is "latest at-or-before", the
-    * unbounded click history collapses to a single running value, so
-    * state is O(users) forever with no watermark eviction needed.
-    * Same in-order-input contract as [[sessionizeStream]]; equality
-    * with the batch window form at every prefix is asserted in
-    * StreamingSpec across micro-batch splits. */
-  def asofEnrichStream(events: Dataset[Event]): Dataset[AsofOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AsofState, AsofOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[AsofState]) =>
-          var last = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[AsofOut]
-          batch.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            // a click enriches ITSELF (at-or-before includes the event),
-            // so update state first when the event is the dimension row
-            if (e.event_type == "click")
-              last = AsofState(e.ts, e.event_id, e.value)
-            out += AsofOut(e.event_id, userId, e.ts, e.event_type,
-              if (last == null) null else last.ts,
-              if (last == null) null else java.lang.Double.valueOf(last.value))
-          }
-          if (last != null) state.update(last)
-          out.iterator
-      }
-  }
-
-  /** Streaming first-order transitions: the incremental rendering of
-    * [[graft.ops.Behavior.transitionMatrix]]. State per user is ONE
-    * event type (the previous one) — O(users) state total, watermark-free
-    * by construction — and every arriving event emits exactly its
-    * (prev → next) pair, so `groupBy(prev, next).count()` over the
-    * emitted rows equals the batch matrix at every stream prefix
-    * (asserted in StreamingSpec across micro-batch splits). Same
-    * in-order-input contract as [[sessionizeStream]]: within a batch
-    * events sort by (ts, event_id); cross-batch order is the source's. */
-  def transitionStream(events: Dataset[Event]): Dataset[TransitionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TransState, TransitionOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[TransState]) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[TransitionOut]
-          var last = state.getOption.map(_.lastType).orNull
-          batch.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            if (last != null) out += TransitionOut(userId, last, e.event_type)
-            last = e.event_type
-          }
-          if (last != null) state.update(TransState(last))
-          out.iterator
-      }
-  }
-
-  /** Streaming funnel: the incremental rendering of
-    * [[graft.ops.Behavior.funnelCounts]]. State per user = the first-seen
-    * timestamp of each stage event; a stage-transition row is emitted the
-    * moment the batch predicate (first click strictly after first view,
-    * first purchase strictly after that click) flips true, so
-    * `count(stage)` over the output stream equals the batch funnel at
-    * every point in time — asserted in StreamingSpec. O(24 bytes) state
-    * per user, no timeout (a funnel has no expiry; production would add
-    * a TTL timeout to cap the key space).
-    *
-    * Assumes per-user event-time order (guaranteed here by the per-batch
-    * sort + in-order source). Under out-of-order delivery a pre-view
-    * click arriving late could falsify an emitted transition — Append
-    * mode can't revoke, so a real deployment fronts this with a
-    * watermarked sort buffer, the same contract as any Append-mode
-    * stateful operator. */
-  def funnelStream(events: Dataset[Event]): Dataset[StageOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, StageOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[FunnelState]) =>
-          var st = state.getOption.getOrElse(FunnelState(0L, 0L, 0L))
-          def reachedV(s: FunnelState) = s.v != 0L
-          def reachedVC(s: FunnelState) = reachedV(s) && s.c != 0L && s.c > s.v
-          def reachedVCP(s: FunnelState) = reachedVC(s) && s.p != 0L && s.p > s.c
-          val out = scala.collection.mutable.ArrayBuffer.empty[StageOut]
-          batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val prev = st
-            val t = e.ts.getTime
-            e.event_type match {
-              case "view"     if st.v == 0L => st = st.copy(v = t)
-              case "click"    if st.c == 0L => st = st.copy(c = t)
-              case "purchase" if st.p == 0L => st = st.copy(p = t)
-              case _ =>
-            }
-            if (reachedV(st) && !reachedV(prev))
-              out += StageOut(userId, "view", new Timestamp(st.v))
-            if (reachedVC(st) && !reachedVC(prev))
-              out += StageOut(userId, "view_click", new Timestamp(st.c))
-            if (reachedVCP(st) && !reachedVCP(prev))
-              out += StageOut(userId, "full_funnel", new Timestamp(st.p))
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
   /** Streaming sessionization: custom state machine via
     * flatMapGroupsWithState. State per user = the one open session;
     * with the default ProcessingTimeTimeout, sessions idle past the gap
@@ -412,34 +276,6 @@ object EventStreams {
           out.iterator
       }
   }
-
-  /** Streaming OHLC bars — the live candlestick face of
-    * [[graft.ops.TimeSeries.ohlcDaily]]: daily tumbling event-time
-    * windows maintaining open/high/low/close/volume/turnover as ONE
-    * stateful aggregation. min_by/max_by on the (ts, event_id) struct
-    * key are associative-mergeable aggregates, so partials merge
-    * exactly like the batch plan and the bar is bit-identical to the
-    * batch query over the same rows (the unification contract every
-    * streaming op in this module is graded on).
-    *
-    * State: O(open windows) rows of fixed width; windows finalize at
-    * the 10-minute watermark. */
-  def ohlcStream(events: DataFrame): DataFrame =
-    withEventWatermark(events)
-      .select(col("ts"), col("event_id"),
-        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))
-          * 100).cast("long").as("cents"))
-      .groupBy(window(col("ts"), "1 day"))
-      .agg(
-        min_by(col("cents"), struct(col("ts"), col("event_id"))).as("open"),
-        max(col("cents")).as("high"),
-        min(col("cents")).as("low"),
-        max_by(col("cents"), struct(col("ts"), col("event_id"))).as("close"),
-        count(lit(1)).as("volume"),
-        sum(col("cents")).cast("long").as("turnover"))
-      .select(col("window.start").cast("date").as("day"), col("open"),
-        col("high"), col("low"), col("close"), col("volume"),
-        col("turnover"))
 
   // --------------------------------------------- Mantel-Haenszel monitor
 

@@ -382,7 +382,7 @@ object Curation {
        |FROM per_lang CROSS JOIN tot ORDER BY lang""".stripMargin
 
   /** Context-window chunk width (whitespace tokens). */
-  val chunkWindow = 60
+  private val chunkWindow = 60
   /** Chunk stride; `chunkWindow - chunkStride` tokens of overlap carry
     * context across chunk boundaries. */
   val chunkStride = 40
@@ -978,7 +978,7 @@ object Curation {
   }
 
   /** Hashed-feature bucket count for [[dsirWeights]]. */
-  val dsirBuckets = 64L
+  private val dsirBuckets = 64L
 
   /** DSIR-STYLE IMPORTANCE WEIGHTS (Xie et al. 2023, "Data Selection
     * for Language Models via Importance Resampling") — the

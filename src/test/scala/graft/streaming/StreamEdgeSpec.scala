@@ -59,26 +59,16 @@ class StreamEdgeSpec extends GraftTestBase {
   }
 
   /** Every single-input streaming face, in its graded output mode. */
-  private def allFaces: Seq[(String, String, MemoryStream[Event] => DataFrame)] = {
-    import spark.implicits._
+  private def allFaces: Seq[(String, String, MemoryStream[Event] => DataFrame)] =
     Seq(
       ("hourlyTumbling", "complete", in => EventStreams.hourlyTumbling(in.toDF())),
       ("slidingCounts", "complete", in => EventStreams.slidingCounts(in.toDF())),
       ("driftHistogramStream", "complete",
         in => EventStreams.driftHistogramStream(in.toDF())),
-      ("ohlcStream", "complete", in => EventStreams.ohlcStream(in.toDF())),
       ("dedupEvents", "append", in => EventStreams.dedupEvents(in.toDF())),
       ("sessionizeStream", "append",
         in => EventStreams.sessionizeStream(in.toDS(), GroupStateTimeout.NoTimeout).toDF()),
-      ("funnelStream", "append", in => EventStreams.funnelStream(in.toDS()).toDF()),
-      ("transitionStream", "append",
-        in => EventStreams.transitionStream(in.toDS()).toDF()),
-      ("asofEnrichStream", "append",
-        in => EventStreams.asofEnrichStream(in.toDS()).toDF()),
-      ("mhStream", "append", in => EventStreams.mhStream(in.toDS()).toDF()),
-      ("enrichEvents", "append", in => EventStreams.enrichEvents(in.toDF(),
-        Seq((1L, "gold")).toDF("user_id", "tier"))))
-  }
+      ("mhStream", "append", in => EventStreams.mhStream(in.toDS()).toDF()))
 
   behavior of "streaming faces on an empty stream"
 

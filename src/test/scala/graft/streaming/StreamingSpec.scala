@@ -58,6 +58,27 @@ class StreamingSpec extends GraftTestBase {
     } finally query.stop()
   }
 
+  it should "sum total_value exactly across micro-batches" in {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Event]
+    val query = EventStreams.hourlyTumbling(input.toDF())
+      .writeStream.format("memory").queryName("hourly_exact_spec")
+      .outputMode("complete").start()
+    try {
+      // as doubles, (0.1 + 0.2) + 0.3 is 0.6000000000000001
+      input.addData(
+        Event(1, ts("2024-01-01 10:05:00"), 1, "click", 0.1),
+        Event(2, ts("2024-01-01 10:15:00"), 2, "click", 0.2))
+      query.processAllAvailable()
+      input.addData(Event(3, ts("2024-01-01 10:25:00"), 3, "click", 0.3))
+      query.processAllAvailable()
+      val got = spark.table("hourly_exact_spec").collect()
+        .map(r => (r.getLong(2), r.getDouble(3)))
+      got shouldBe Array((3L, 0.6))
+    } finally query.stop()
+  }
+
   behavior of "sessionizeStream"
 
   it should "emit closed sessions matching batch semantics for in-order input" in {
@@ -208,28 +229,6 @@ class StreamingSpec extends GraftTestBase {
     } finally query.stop()
   }
 
-  behavior of "enrichEvents (stream-static join)"
-
-  it should "broadcast-join each micro-batch against the static dims" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dims = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
-    val input = MemoryStream[Event]
-    val query = EventStreams.enrichEvents(input.toDF(), dims)
-      .writeStream.format("memory").queryName("enrich_spec")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        Event(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
-        Event(2, ts("2024-01-01 10:01:00"), 3, "click", 1.0)) // no dim row
-      query.processAllAvailable()
-      val got = spark.table("enrich_spec")
-        .select("event_id", "tier").collect()
-        .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-      got shouldBe Map(1L -> Some("gold"), 2L -> None) // left join keeps unmatched
-    } finally query.stop()
-  }
-
   behavior of "correlateStreams (stream-stream interval join)"
 
   it should "pair views with same-user clicks inside the 30-minute bound only" in {
@@ -266,98 +265,6 @@ class StreamingSpec extends GraftTestBase {
       .count() shouldBe 0
   }
 
-  behavior of "funnelStream"
-
-  it should "emit stage transitions whose counts equal the batch funnel on the full event log" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // feed the REAL events table in event-time order, split across two
-    // micro-batches, so state must carry stage progress between batches
-    val all = graft.Tables.events(spark, sf)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event].orderBy("ts").collect()
-    val (first, second) = all.splitAt(all.length / 2)
-    val input = MemoryStream[Event]
-    val query = EventStreams.funnelStream(input.toDS())
-      .writeStream.format("memory").queryName("funnel_spec")
-      .outputMode("append").start()
-    try {
-      input.addData(first.toSeq)
-      query.processAllAvailable()
-      input.addData(second.toSeq)
-      query.processAllAvailable()
-      val got = spark.table("funnel_spec").groupBy("stage").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val b = graft.ops.Behavior.funnelCounts(spark, sf).head()
-      got.getOrElse("view", 0L) shouldBe b.getAs[Long]("n_view")
-      got.getOrElse("view_click", 0L) shouldBe b.getAs[Long]("n_view_click")
-      got.getOrElse("full_funnel", 0L) shouldBe b.getAs[Long]("n_full_funnel")
-      // no user emits a stage twice
-      spark.table("funnel_spec").groupBy("user_id", "stage").count()
-        .filter(col("count") > 1).count() shouldBe 0
-    } finally query.stop()
-  }
-
-  behavior of "transitionStream"
-
-  it should "emit transition pairs whose counts equal the batch matrix across batch splits" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val all = graft.Tables.events(spark, sf)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event].orderBy("ts", "event_id").collect()
-    // three uneven splits: state (the previous event type) must survive
-    // both boundaries for the counts to come out right
-    val (a, rest) = all.splitAt(all.length / 3)
-    val (b, c) = rest.splitAt(rest.length / 2)
-    val input = MemoryStream[Event]
-    val query = EventStreams.transitionStream(input.toDS())
-      .writeStream.format("memory").queryName("trans_spec")
-      .outputMode("append").start()
-    try {
-      Seq(a, b, c).foreach { part =>
-        input.addData(part.toSeq)
-        query.processAllAvailable()
-      }
-      val got = spark.table("trans_spec")
-        .groupBy("prev_type", "next_type").count()
-        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      val batch = graft.ops.Behavior.transitionMatrix(spark, sf)
-        .collect().map(r => (r.getAs[String]("prev_type"), r.getAs[String]("next_type")) ->
-          r.getAs[Long]("n")).toMap
-      got shouldBe batch
-    } finally query.stop()
-  }
-
-  behavior of "asofEnrichStream"
-
-  it should "equal the batch as-of window at every prefix across batch splits" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val all = graft.Tables.events(spark, sf)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event].orderBy("ts", "event_id").collect()
-    val (a, rest) = all.splitAt(all.length / 3)
-    val (b, c) = rest.splitAt(rest.length / 2)
-    val input = MemoryStream[Event]
-    val query = EventStreams.asofEnrichStream(input.toDS())
-      .writeStream.format("memory").queryName("asof_spec")
-      .outputMode("append").start()
-    try {
-      Seq(a, b, c).foreach { part =>
-        input.addData(part.toSeq)
-        query.processAllAvailable()
-      }
-      val got = spark.table("asof_spec")
-        .select("event_id", "asof_click_ts", "asof_click_value")
-      val batch = graft.ops.TimeSeries.asofLatestClick(spark, sf)
-        .select("event_id", "asof_click_ts", "asof_click_value")
-      got.count() shouldBe all.length.toLong
-      got.exceptAll(batch).count() shouldBe 0
-      batch.exceptAll(got).count() shouldBe 0
-    } finally query.stop()
-  }
-
   behavior of "incrementalTotals (streaming materialized view)"
 
   it should "refresh only touched keys and retain untouched partitions" in {
@@ -387,48 +294,5 @@ class StreamingSpec extends GraftTestBase {
           (r.getAs[Long]("n_events"), r.getAs[Double]("total_value"))).toMap
       mv2 shouldBe Map("click" -> (3L, 15.0), "view" -> (1L, 5.0))
     } finally query.stop()
-  }
-
-  behavior of "ohlcStream"
-
-  it should "equal the batch OHLC bar at every micro-batch prefix" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val query = EventStreams.ohlcStream(
-        input.toDF().withColumn("ts", col("ts").cast("timestamp")))
-      .writeStream.format("memory").queryName("ohlc_spec")
-      .outputMode("complete").start()
-    def batchOhlc(rows: Seq[Event]): Map[String, (Long, Long, Long, Long, Long, Long)] =
-      rows.groupBy(_.ts.toLocalDateTime.toLocalDate.toString).map {
-        case (day, evs) =>
-          val sorted = evs.sortBy(e => (e.ts.getTime, e.event_id))
-          def cents(e: Event): Long =
-            BigDecimal(e.value).setScale(2,
-              BigDecimal.RoundingMode.HALF_UP).*(100).toLongExact
-          day -> (cents(sorted.head), evs.map(cents).max, evs.map(cents).min,
-            cents(sorted.last), evs.size.toLong, evs.map(cents).sum)
-      }
-    val b1 = Seq(
-      Event(1, ts("2024-01-01 10:05:00"), 1, "click", 2.5),
-      Event(2, ts("2024-01-01 11:55:00"), 2, "click", 9.0),
-      Event(3, ts("2024-01-02 09:00:00"), 1, "view", 4.0))
-    val b2 = Seq(
-      Event(4, ts("2024-01-01 08:00:00"), 3, "view", 1.0), // new open day 1
-      Event(5, ts("2024-01-02 23:00:00"), 2, "click", 0.5)) // new close day 2
-    var seen = Seq.empty[Event]
-    for (batch <- Seq(b1, b2)) {
-      input.addData(batch: _*)
-      query.processAllAvailable()
-      seen ++= batch
-      val got = spark.table("ohlc_spec").collect().map { r =>
-        r.getAs[java.sql.Date]("day").toString ->
-          (r.getAs[Long]("open"), r.getAs[Long]("high"), r.getAs[Long]("low"),
-            r.getAs[Long]("close"), r.getAs[Long]("volume"),
-            r.getAs[Long]("turnover"))
-      }.toMap
-      got shouldBe batchOhlc(seen)
-    }
-    query.stop()
   }
 }

@@ -15,8 +15,12 @@ regenerated testdata set can never silently re-open the class:
      `tools/check.py <corpus> <out>` (the DuckDB oracle) — the SAME
      differential the driver grades, on distributions the driver never
      generates.
-  3. Print the sweep matrix; exit non-zero if any corpus has any
-     mismatching query.
+  3. Run `graft.streaming.StreamDrive` on the --base directory itself,
+     so the stream faces' per-prefix parity is checked on the stock
+     events too, not only on derived corpora; it is the matrix row
+     `base_stream_drive` and counts toward green/total.
+  4. Print the sweep matrix; exit non-zero if any corpus has any
+     mismatching query, or the base StreamDrive run fails.
 
 Corpora (the round-12 set plus the VERDICT-r12 additions):
   docs_degenerate    featureless (<3-word), empty-text, and exact-duplicate
@@ -57,6 +61,9 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 EVENT_TYPES = ["purchase", "click", "view", "signup", "error"]
+
+# the matrix row of StreamDrive on the --base directory itself
+BASE_STREAM = "base_stream_drive"
 
 
 def corpus_specs(base):
@@ -176,6 +183,17 @@ def run_one(repo, corpus_dir, vout, env):
                 "fails": fails[:20], "crashed": crashed[:20]}
     # streaming faces (VERDICT r14 #6): replay the corpus' events table
     # through the MemoryStream drives with per-prefix batch parity
+    r = run_stream(repo, corpus_dir, env)
+    r.update(stage="stream" if not r["ok"] else "check",
+             sec=time.time() - t0, summary=summary,
+             fails=fails[:20], crashed=crashed[:20])
+    return r
+
+
+def run_stream(repo, corpus_dir, env):
+    """`graft.streaming.StreamDrive <corpus_dir>`: ok, its JSON tail and
+    its FAIL lines."""
+    t0 = time.time()
     sd = subprocess.run(
         ["sbt", "-batch", f"runMain graft.streaming.StreamDrive {corpus_dir}"],
         cwd=repo, env=env, capture_output=True, text=True)
@@ -184,11 +202,9 @@ def run_one(repo, corpus_dir, vout, env):
     sd_fails = [l for l in sd_lines if "FAIL" in l]
     sd_ok = sd.returncode == 0 and not sd_fails and any(
         '"ok":true' in l for l in sd_lines)
-    return {"ok": sd_ok, "stage": "stream" if not sd_ok else "check",
-            "sec": time.time() - t0, "summary": summary,
+    return {"ok": sd_ok, "stage": "stream", "sec": time.time() - t0,
             "stream": next((l for l in sd_lines if l.startswith('{')),
                            "no stream_drive output"),
-            "fails": fails[:20], "crashed": crashed[:20],
             "stream_fails": sd_fails[:20]}
 
 
@@ -220,10 +236,13 @@ def main():
         env["TZ"] = args.tz
 
     results = {}
-    for name in names:
-        cdir = os.path.join(out_root, name)
-        vout = os.path.join(out_root, f"{name}__vout")
-        r = run_one(repo, cdir, vout, env)
+    for name in names + [BASE_STREAM]:
+        if name == BASE_STREAM:
+            r = run_stream(repo, args.base, env)
+        else:
+            cdir = os.path.join(out_root, name)
+            vout = os.path.join(out_root, f"{name}__vout")
+            r = run_one(repo, cdir, vout, env)
         results[name] = r
         status = "PASS" if r["ok"] else f"FAIL({r['stage']})"
         print(f"{status:12s} {name:22s} {r['sec']:7.1f}s "

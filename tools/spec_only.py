@@ -11,8 +11,13 @@ count as non-private (the compiler's unused check does not see them);
 name it prints the defining file and line, whether the name is also
 used in code elsewhere in its own file (then a graded caller may still
 reach it from there), and the spec files under src/test/scala that
-name it. The last line counts the names, and those that nothing but
-specs uses, not even their own file: the candidates for deletion.
+name it. The last line counts the names, those that nothing but specs
+uses, not even their own file (the candidates for deletion), and those
+that their own file uses and no spec names. A name of that last kind
+could be `private`, where `-Wunused:privates` flags it once it goes
+dead. Each one left is non-private for a reason: generated Java source
+calls it by name (a Scala `private` member has no static forwarder), or
+it is already `private[pkg]`, which the unused check does not see.
 
 The list is a lower bound: a name is hidden whenever another file
 contains the same word, be it an unrelated identifier, a comment or SQL
@@ -95,8 +100,10 @@ def main():
         note = " (also used in its own file)" if in_file else ""
         print(f"{rel}:{no} {name}{note}  specs: {', '.join(users) or '-'}")
     unused = [r for r in rows if not r[3]]
+    own_only = [r for r in rows if r[3] and not r[4]]
     print(f"total {len(rows)} names no other file names; {len(unused)} of them "
-          f"unused in their own file too ({sum(1 for r in unused if not r[4])} named by no spec)")
+          f"unused in their own file too ({sum(1 for r in unused if not r[4])} named by no spec); "
+          f"{len(own_only)} used only in their own file and named by no spec")
     return 0
 
 
